@@ -423,12 +423,12 @@ SELECT a_id, b_id FROM edges WHERE a_id NOT IN (SELECT a_id FROM deleted)
 
 
 def graph_detach_cascade_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S6 driven END-TO-END through :class:`GraphStore` on the
-    ``txnlog`` (commit-log) backend: create supplier/part nodes and
-    supplies-edges, then DELETE one nation's suppliers and let the
-    DETACH cascade prune their edges — the oracle is the same
-    relational twin, so a green row certifies the store's MERGE +
-    cascade machinery, not just the dataframe algebra."""
+    """S6 driven END-TO-END through :class:`GraphStore` (the registry
+    key keeps the name of the commit-log table it once ran on): create
+    supplier/part nodes and supplies-edges, then DELETE one nation's
+    suppliers and let the DETACH cascade prune their edges — the oracle
+    is the same relational twin, so a green row certifies the store's
+    MERGE + cascade machinery, not just the dataframe algebra."""
     import atexit
     import shutil
     import tempfile
@@ -442,7 +442,7 @@ def graph_detach_cascade_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     sup = _t(spark, sf_dir, "supplier")
     nat = _t(spark, sf_dir, "nation")
-    store = GraphStore(spark, root, backend="txnlog", n_buckets=8)
+    store = GraphStore(spark, root, n_buckets=8)
     # ONE lineitem scan + identity dedup feeds the part keys AND the
     # edge batch (cached: two consumers, and cache() skips the
     # plan+codegen cost localCheckpoint pays at call time); write_edges
@@ -456,7 +456,7 @@ def graph_detach_cascade_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cache()
     )
     # S8 batched sync: the three creates share ONE staging round (all
-    # tables staged concurrently) and land one commit claim per table —
+    # tables staged concurrently) and land one pointer flip per table —
     # the reference's one-transaction-per-sync-function semantics
     with store.sync():
         store.write_nodes(
@@ -5797,7 +5797,7 @@ def streaming_lm_gate_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ig_etl_sync_spark.sources.versioned import make_table
+    from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
     from ig_etl_sync_spark.streaming.lm_gate import StreamingLMQualityGate
 
     root = tempfile.mkdtemp(prefix="spark_graft_lmgate_")
@@ -5810,9 +5810,9 @@ def streaming_lm_gate_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     gate = StreamingLMQualityGate(
-        make_table(spark, f"{root}/uni", "txnlog"),
-        make_table(spark, f"{root}/bi", "txnlog"),
-        make_table(spark, f"{root}/scores", "txnlog"),
+        VersionedParquetTable(spark, f"{root}/uni"),
+        VersionedParquetTable(spark, f"{root}/bi"),
+        VersionedParquetTable(spark, f"{root}/scores"),
     )
     gate.process_batch(b1, 0)
     gate.process_batch(b2, 1)
@@ -5834,7 +5834,7 @@ def streaming_mixture_gate_corpus(
     import shutil
     import tempfile
 
-    from ig_etl_sync_spark.sources.versioned import make_table
+    from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
     from ig_etl_sync_spark.streaming.mixture_gate import StreamingMixtureGate
 
     root = tempfile.mkdtemp(prefix="spark_graft_mixgate_")
@@ -5847,8 +5847,8 @@ def streaming_mixture_gate_corpus(
         "doc_id", "lang", "text"
     )
     gate = StreamingMixtureGate(
-        make_table(spark, f"{root}/counts", "txnlog"),
-        make_table(spark, f"{root}/corpus", "txnlog"),
+        VersionedParquetTable(spark, f"{root}/counts"),
+        VersionedParquetTable(spark, f"{root}/corpus"),
         target_ppm=_MIXTURE_PPM,
     )
     gate.process_batch(b1, 0)
@@ -6527,7 +6527,7 @@ def span_probe_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     ref = docs.where(F.col("source") != _SPAN_PROBE_SRC)
     batch = docs.where(F.col("source") == _SPAN_PROBE_SRC)
-    idx = SpanDupIndex(spark, root, backend="txnlog", k=8, min_docs=2)
+    idx = SpanDupIndex(spark, root, k=8, min_docs=2)
     idx.build(ref)
     return idx.probe(batch)
 
@@ -6568,7 +6568,7 @@ def streaming_span_cut_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ig_etl_sync_spark.operators.dedup import MinhashDedupIndex
     from ig_etl_sync_spark.operators.spans import SpanDupIndex
-    from ig_etl_sync_spark.sources.versioned import make_table
+    from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
     from ig_etl_sync_spark.streaming.ingest import StreamingCorpusIngest
 
     root = tempfile.mkdtemp(prefix="spark_graft_sscut_")
@@ -6576,11 +6576,9 @@ def streaming_span_cut_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     b1 = docs.where(F.col("source") != _SPAN_PROBE_SRC).select("doc_id", "text")
     b2 = docs.where(F.col("source") == _SPAN_PROBE_SRC).select("doc_id", "text")
-    idx = MinhashDedupIndex(spark, f"{root}/idx", backend="txnlog")
-    corpus = make_table(spark, f"{root}/corpus", "txnlog")
-    span_idx = SpanDupIndex(
-        spark, f"{root}/spans", backend="txnlog", k=8, min_docs=2
-    )
+    idx = MinhashDedupIndex(spark, f"{root}/idx")
+    corpus = VersionedParquetTable(spark, f"{root}/corpus")
+    span_idx = SpanDupIndex(spark, f"{root}/spans", k=8, min_docs=2)
     ingest = StreamingCorpusIngest(
         idx, corpus, threshold=0.7, span_index=span_idx
     )
@@ -6707,7 +6705,7 @@ def table_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ig_etl_sync_spark.operators.reconcile import diff_table_versions
-    from ig_etl_sync_spark.sources.versioned import make_table
+    from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
 
     root = tempfile.mkdtemp(prefix="spark_graft_ttdiff_")
     atexit.register(shutil.rmtree, root, ignore_errors=True)
@@ -6726,7 +6724,7 @@ def table_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.col("o_totalprice")).alias("price"),
         F.col("o_orderstatus").alias("status"),
     )
-    t = make_table(spark, root, "txnlog")
+    t = VersionedParquetTable(spark, root)
     t.write(v1_rows)
     v1 = t.latest_version()
     t.write(v2_rows)
@@ -8797,199 +8795,18 @@ QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] 
 }
 
 
-# Round-5 rotation: the driver samples the first ~50 registry entries
-# per round, so the queries whose LATEST driver-green row is oldest
-# (never sampled, then r01, then r02 — the relational core and CDC/graph
-# block both last sampled in r02) lead this round. Everything r03/r04-
-# green keeps its literal order behind them.
-_DRIVER_ROTATION_R05 = [
-    "semantic_dedup_design_point",  # new this round — no driver row yet
-    "embedding_isolation_scaled",  # new this round — no driver row yet
-    "span_coverage_clean",  # new this round — no driver row yet
-    "doc_bigram_surprisal",  # new this round — no driver row yet
-    "longest_dup_span_docs",  # new this round — no driver row yet
-    "training_shuffle_docs",  # new this round — no driver row yet
-    "user_event_surprisal",  # new this round — no driver row yet
-    "span_probe_incremental",  # new this round — no driver row yet
-    "token_balanced_shards",  # new this round — no driver row yet
-    "table_version_diff",  # new this round — no driver row yet
-    "bpe_fertility_by_lang",  # new this round — no driver row yet
-    "multimodal_near_dup",  # new this round — no driver row yet
-    "asof_last_purchase", "range_clicks_before_error",  # latest row r01
-    # latest row r02:
-    "bloom_prefilter_stats", "bloom_words", "cdc_creates", "cdc_deletes",
-    "event_sessions", "events_hourly", "graph_detach_cascade",
-    "graph_edge_validation", "graph_node_upsert", "incremental_orders_agg",
-    "json_props_extract", "merkle_bucket_digests", "merkle_diff_replay",
-    "nested_explode_roundtrip", "pivot_qty_by_flag",
-    "q01_pricing_summary", "q02_revenue_by_nation", "q03_top_orders",
-    "q04_segment_top_customers", "q05_late_shipment_priority",
-    "q06_filtered_revenue", "q07_quantity_stats", "q08_rollup_revenue",
-    "q09_except_customers", "q10_customers_without_orders",
-    "q11_distinct_suppliers_per_brand", "q12_correlation_stats",
-    "q13_cube_counts", "q14_value_percentiles", "q15_small_qty_revenue",
-    "q16_large_volume_customers", "q17_event_navigation",
-    "q18_waiting_suppliers", "q19_prospect_customers",
-    "q20_event_range_frames", "q21_min_price_supplier",
-    "q22_nation_trade_volume", "q23_important_parts",
-    "q24_customer_order_distribution", "q25_disjunctive_revenue",
-    "q26_grouping_sets", "span_dup_stats_docs", "span_top_duplicated",
-    "unpivot_flag_measures", "user_rolling_avg", "user_state_at_instant",
-    "user_state_history", "user_top_events", "user_value_twa",
-    "variant_props_extract",
-]
-QUERIES = {
-    **{n: QUERIES[n] for n in _DRIVER_ROTATION_R05},
-    **{n: v for n, v in QUERIES.items() if n not in set(_DRIVER_ROTATION_R05)},
-}
-
-# Round-6 rotation (same mechanism): the driver's r05 snapshot sampled
-# the first 50 of the r05 head, so the stalest evidence is now the 2
-# round-6 queries (never sampled), the 14 whose latest row is r02
-# (q22–q26, span stats, unpivot, user-state/window block), then the 40
-# r03-era rows (dedup/similarity family, samplers, text features,
-# sketches). 56 entries — the ~6 tail r03 queries ride in r07.
-_DRIVER_ROTATION_R06 = [
-    "streaming_span_cut_corpus",  # new this round — no driver row yet
-    "multimodal_near_dup_scaled",  # new this round — no driver row yet
-    "corpus_source_cap",  # new this round — no driver row yet
-    "soft_dedup_doc_weights",  # new this round — no driver row yet
-    "hard_negative_mining",  # new this round — no driver row yet
-    "label_outlier_screen",  # new this round — no driver row yet
-    # latest row r02:
-    "q22_nation_trade_volume", "q23_important_parts",
-    "q24_customer_order_distribution", "q25_disjunctive_revenue",
-    "q26_grouping_sets", "span_dup_stats_docs", "span_top_duplicated",
-    "unpivot_flag_measures", "user_rolling_avg", "user_state_at_instant",
-    "user_state_history", "user_top_events", "user_value_twa",
-    "variant_props_extract",
-    # latest row r03:
-    "distinct_users_per_type", "document_chunks", "user_rolling_zscore",
-    "value_winsorized_stats", "class_balanced_embeddings",
-    "user_decay_avg", "unconverted_clicks", "conversion_latency_stats",
-    "training_data_prep", "minhash_near_dup", "pq_topk_sample",
-    "pagerank_trade_graph", "bm25_top_docs", "near_dup_clusters",
-    "event_funnel", "pii_redaction_check", "exact_dedup_fingerprint",
-    "simhash_near_dup", "embedding_near_dup_lsh", "lsh_topk_sample",
-    "ivf_topk_sample", "embedding_topk", "embedding_norms",
-    "embedding_near_dup", "minhash_signature_check", "ngram_jaccard",
-    "simhash_check", "benchmark_decontaminate", "sequence_packing",
-    "corpus_sample_stratified", "corpus_sample_token_budget",
-    "corpus_sample_weighted", "text_stats_by_lang", "text_quality",
-    "text_repetition", "lang_id_pred", "tfidf_doc_terms",
-    "kmv_distinct_parts", "hll_distinct_customers", "hll_small_range",
-]
-QUERIES = {
-    **{n: QUERIES[n] for n in _DRIVER_ROTATION_R06},
-    **{n: v for n, v in QUERIES.items() if n not in set(_DRIVER_ROTATION_R06)},
-}
-
-# Round-7 rotation (same mechanism): front-load the 13 round-6
-# second-wave queries that have NEVER appeared in a driver CORRECTNESS
-# snapshot (VERDICT r06 "What's wrong #1"), then the 10 whose latest
-# driver row is r03, then r04-stale picks to fill the driver's ~50-query
-# sample window. `label_outlier_screen` and `cluster_dilution_audit`
-# double as the sf1-representative scale probes (VERDICT task 7); their
-# sf1 walls are recorded in SCALE.md the same round.
-_DRIVER_ROTATION_R07 = [
-    # new this round — no driver row yet:
-    "moore_lewis_selection", "quality_filter_funnel",
-    "doremi_mixture_weights", "curriculum_anneal_order",
-    "span_coverage_chark", "doc_backoff_surprisal", "backoff_ccnet_buckets",
-    "streaming_lm_gate_scores", "unimax_lang_allocation",
-    "bitext_margin_pairs", "bitext_margin_pairs_scaled",
-    "source_overlap_sketch", "unimax_realized_corpus",
-    "streaming_mixture_gate_corpus", "near_dup_canonical_quality",
-    # never driver-checked (round-6 second wave):
-    "source_overlap_matrix", "cdc_chunk_dedup", "padding_efficiency",
-    "hybrid_rrf_retrieval", "surprisal_ccnet_buckets",
-    "mmr_context_selection", "quality_score_sweep", "lang_id_confusion",
-    "lsh_recall_audit", "temporal_split_leakage",
-    "transition_predictor_acc", "ann_recall_audit",
-    "cluster_dilution_audit",
-    # sf1-representative scale probe (driver-samples the stress family):
-    "label_outlier_screen",
-    # latest row r03:
-    "text_stats_by_lang", "text_quality", "lang_id_pred",
-    "corpus_sample_token_budget", "corpus_sample_weighted",
-    "text_repetition", "tfidf_doc_terms", "kmv_distinct_parts",
-    "hll_distinct_customers", "hll_small_range",
-    # latest row r04:
-    "asof_next_purchase", "bpe_doc_tokens", "bpe_merge_table",
-    "c4_line_filters", "click_purchase_attribution",
-    "clustering_coeff_cosupply", "cms_heavy_users",
-    "cohort_retention_weekly", "containment_quotes", "corpus_group_split",
-    "corpus_mixture_rates", "cross_corpus_near_dup", "doc_surprisal",
-    "dsir_doc_scores", "embedding_isolation_screen",
-    "embedding_pc1_projection", "embedding_random_projection",
-    "embedding_standardized", "embedding_top2_pcs",
-    "event_transition_matrix", "event_value_ntiles",
-    "fk_violation_counts", "fuzzy_name_matches", "gopher_quality_checks",
-    "graph_detach_cascade_txnlog", "hll_rollup_customers",
-    "inverted_index_capped", "inverted_index_postings", "kcore_cosupply",
-    "kmeans_embedding_clusters",
-]
-QUERIES = {
-    **{n: QUERIES[n] for n in _DRIVER_ROTATION_R07},
-    **{n: v for n, v in QUERIES.items() if n not in set(_DRIVER_ROTATION_R07)},
-}
-
-# Round-8 rotation (same mechanism): front-load the 3 sf1-feasible
-# scaled twins registered this round (never in a driver snapshot),
-# then the cohort whose latest driver row is r04 (the stalest after
-# the r07 rotation — derived from the CORRECTNESS_r01..r07 union),
-# topped up with the oldest r05 rows to fill the ~50-query window.
-# No query's latest driver evidence is older than r05 after this
-# snapshot (VERDICT r07 "Next round" #6).
-_DRIVER_ROTATION_R08 = [
-    # new this round — no driver row yet:
-    "ngram_jaccard_scaled", "simhash_near_dup_scaled",
-    "containment_quotes_scaled",
-    # latest row r04:
-    "cross_corpus_near_dup", "doc_surprisal", "dsir_doc_scores",
-    "embedding_isolation_screen", "embedding_pc1_projection",
-    "embedding_random_projection", "embedding_standardized",
-    "embedding_top2_pcs", "event_transition_matrix",
-    "event_value_ntiles", "fk_violation_counts", "fuzzy_name_matches",
-    "gopher_quality_checks", "graph_detach_cascade_txnlog",
-    "hll_rollup_customers", "inverted_index_capped",
-    "inverted_index_postings", "kcore_cosupply",
-    "kmeans_embedding_clusters", "multi_touch_credit",
-    "nation_bfs_hops", "pmi_collocations_top", "quality_probe_weights",
-    "rendezvous_shard_counts", "resample_ffill_hourly",
-    "salted_join_parity", "semantic_dedup_screen",
-    "session_overlap_pairs", "table_profile_orders",
-    "triangle_counts_cosupply", "triangle_counts_oriented",
-    "value_drift_psi", "value_histogram", "value_outlier_stats",
-    "value_quantile_sketch", "vocab_drift_psi", "vocab_top_coverage",
-    "winnow_fingerprint_matches", "zorder_bucket_stats",
-    # oldest r05 rows (fill to the sample window):
-    "asof_last_purchase", "bloom_prefilter_stats", "bloom_words",
-    "bpe_fertility_by_lang", "cdc_creates", "cdc_deletes",
-    "doc_bigram_surprisal", "embedding_isolation_scaled",
-]
-QUERIES = {
-    **{n: QUERIES[n] for n in _DRIVER_ROTATION_R08},
-    **{n: v for n, v in QUERIES.items() if n not in set(_DRIVER_ROTATION_R08)},
-}
-
-# Round-9 rotation (same mechanism): front-load the FULL cohort whose
-# latest driver row is r05 (the stalest after the r08 rotation — 42
-# queries, derived from the CORRECTNESS_r01..r08 union), topped up with
-# 8 r06-stale rows to fill the driver's ~50-query sample window —
-# preferring the r06 rows whose paths this optimization round touches
-# (the CC rework rides near_dup_clusters / soft_dedup_doc_weights /
-# training_data_prep; the ingest job-count work rides
-# streaming_span_cut_corpus). After this snapshot no query's latest
-# driver evidence is older than r06 (VERDICT r08 "Next round" #5).
-_DRIVER_ROTATION_R09 = [
-    # latest row r05:
+# Sampling order: the CORRECTNESS snapshot samples the first ~50
+# registry entries per round, so each round moved the queries with the
+# stalest evidence to the front. This head list is the result of the
+# round-5..round-9 rotations; every query not named here keeps its
+# literal order above, behind the head.
+_SAMPLING_ORDER_HEAD = [
     "event_sessions", "events_hourly", "graph_detach_cascade",
     "graph_edge_validation", "graph_node_upsert", "incremental_orders_agg",
     "json_props_extract", "longest_dup_span_docs", "merkle_bucket_digests",
-    "merkle_diff_replay", "multimodal_near_dup", "nested_explode_roundtrip",
-    "pivot_qty_by_flag", "q01_pricing_summary", "q02_revenue_by_nation",
-    "q03_top_orders", "q04_segment_top_customers",
+    "merkle_diff_replay", "multimodal_near_dup",
+    "nested_explode_roundtrip", "pivot_qty_by_flag", "q01_pricing_summary",
+    "q02_revenue_by_nation", "q03_top_orders", "q04_segment_top_customers",
     "q05_late_shipment_priority", "q06_filtered_revenue",
     "q07_quantity_stats", "q08_rollup_revenue", "q09_except_customers",
     "q10_customers_without_orders", "q11_distinct_suppliers_per_brand",
@@ -9001,16 +8818,61 @@ _DRIVER_ROTATION_R09 = [
     "semantic_dedup_design_point", "span_coverage_clean",
     "span_probe_incremental", "table_version_diff",
     "token_balanced_shards", "training_shuffle_docs",
-    "user_event_surprisal",
-    # r06-stale fill, round-9-touched paths first:
-    "near_dup_clusters", "soft_dedup_doc_weights",
+    "user_event_surprisal", "near_dup_clusters", "soft_dedup_doc_weights",
     "streaming_span_cut_corpus", "training_data_prep",
-    "pagerank_trade_graph", "benchmark_decontaminate",
-    "sequence_packing", "bm25_top_docs",
+    "pagerank_trade_graph", "benchmark_decontaminate", "sequence_packing",
+    "bm25_top_docs", "ngram_jaccard_scaled", "simhash_near_dup_scaled",
+    "containment_quotes_scaled", "cross_corpus_near_dup", "doc_surprisal",
+    "dsir_doc_scores", "embedding_isolation_screen",
+    "embedding_pc1_projection", "embedding_random_projection",
+    "embedding_standardized", "embedding_top2_pcs",
+    "event_transition_matrix", "event_value_ntiles", "fk_violation_counts",
+    "fuzzy_name_matches", "gopher_quality_checks",
+    "graph_detach_cascade_txnlog", "hll_rollup_customers",
+    "inverted_index_capped", "inverted_index_postings", "kcore_cosupply",
+    "kmeans_embedding_clusters", "multi_touch_credit", "nation_bfs_hops",
+    "pmi_collocations_top", "quality_probe_weights",
+    "rendezvous_shard_counts", "resample_ffill_hourly",
+    "salted_join_parity", "semantic_dedup_screen", "session_overlap_pairs",
+    "table_profile_orders", "triangle_counts_cosupply",
+    "triangle_counts_oriented", "value_drift_psi", "value_histogram",
+    "value_outlier_stats", "value_quantile_sketch", "vocab_drift_psi",
+    "vocab_top_coverage", "winnow_fingerprint_matches",
+    "zorder_bucket_stats", "asof_last_purchase", "bloom_prefilter_stats",
+    "bloom_words", "bpe_fertility_by_lang", "cdc_creates", "cdc_deletes",
+    "doc_bigram_surprisal", "embedding_isolation_scaled",
+    "moore_lewis_selection", "quality_filter_funnel",
+    "doremi_mixture_weights", "curriculum_anneal_order",
+    "span_coverage_chark", "doc_backoff_surprisal",
+    "backoff_ccnet_buckets", "streaming_lm_gate_scores",
+    "unimax_lang_allocation", "bitext_margin_pairs",
+    "bitext_margin_pairs_scaled", "source_overlap_sketch",
+    "unimax_realized_corpus", "streaming_mixture_gate_corpus",
+    "near_dup_canonical_quality", "source_overlap_matrix",
+    "cdc_chunk_dedup", "padding_efficiency", "hybrid_rrf_retrieval",
+    "surprisal_ccnet_buckets", "mmr_context_selection",
+    "quality_score_sweep", "lang_id_confusion", "lsh_recall_audit",
+    "temporal_split_leakage", "transition_predictor_acc",
+    "ann_recall_audit", "cluster_dilution_audit", "label_outlier_screen",
+    "text_stats_by_lang", "text_quality", "lang_id_pred",
+    "corpus_sample_token_budget", "corpus_sample_weighted",
+    "text_repetition", "tfidf_doc_terms", "kmv_distinct_parts",
+    "hll_distinct_customers", "hll_small_range", "asof_next_purchase",
+    "bpe_doc_tokens", "bpe_merge_table", "c4_line_filters",
+    "click_purchase_attribution", "clustering_coeff_cosupply",
+    "cms_heavy_users", "cohort_retention_weekly", "containment_quotes",
+    "corpus_group_split", "corpus_mixture_rates",
+    "multimodal_near_dup_scaled", "corpus_source_cap",
+    "hard_negative_mining", "q22_nation_trade_volume",
+    "q23_important_parts", "q24_customer_order_distribution",
+    "q25_disjunctive_revenue", "q26_grouping_sets", "span_dup_stats_docs",
+    "span_top_duplicated", "unpivot_flag_measures", "user_rolling_avg",
+    "user_state_at_instant", "user_state_history", "user_top_events",
+    "user_value_twa", "variant_props_extract",
 ]
 QUERIES = {
-    **{n: QUERIES[n] for n in _DRIVER_ROTATION_R09},
-    **{n: v for n, v in QUERIES.items() if n not in set(_DRIVER_ROTATION_R09)},
+    **{n: QUERIES[n] for n in _SAMPLING_ORDER_HEAD},
+    **{n: v for n, v in QUERIES.items() if n not in set(_SAMPLING_ORDER_HEAD)},
 }
 
 

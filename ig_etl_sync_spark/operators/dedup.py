@@ -1203,8 +1203,8 @@ def semantic_dedup(
 class MinhashDedupIndex:
     """The STANDING dedup index an ingest pipeline probes per batch:
     banded minhash signatures plus the shingle sets needed for exact
-    verify, persisted in a versioned table (any ``backend=`` of
-    :mod:`~ig_etl_sync_spark.sources.versioned`).
+    verify, persisted in a
+    :class:`~ig_etl_sync_spark.sources.versioned.VersionedParquetTable`.
 
     - :meth:`build` writes the reference corpus's index once
       (``(doc_id, band_id, band_hash, sh)`` rows);
@@ -1227,20 +1227,19 @@ class MinhashDedupIndex:
         spark,
         path: str,
         *,
-        backend: str = "txnlog",
         id_col: str = "doc_id",
         text_col: str = "text",
         num_hashes: int = 16,
         bands: int = 4,
         shingle_k: int = 5,
     ) -> None:
-        from ig_etl_sync_spark.sources.versioned import make_table
+        from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
 
         if num_hashes % bands != 0 or not (1 <= bands <= num_hashes):
             raise ValueError(
                 f"bands={bands} invalid for signature length {num_hashes}"
             )
-        self._table = make_table(spark, path, backend)
+        self._table = VersionedParquetTable(spark, path)
         self.id_col = id_col
         self.text_col = text_col
         self.num_hashes = num_hashes
@@ -1310,8 +1309,7 @@ class MinhashDedupIndex:
         """Append a batch (typically probe survivors) as a new index
         version. The batch lands in a fresh EPOCH partition, so only
         O(batch) data is written — every prior epoch is carried by
-        hard link (pointer/txnlog backends) or manifest re-list
-        (manifest backend), never rewritten. Ids already present are
+        hard link, never rewritten. Ids already present are
         not deduplicated — pass pre-deduplicated batches.
 
         ``epoch``: explicit partition id. Streaming callers pass a

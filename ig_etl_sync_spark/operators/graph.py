@@ -49,7 +49,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ig_etl_sync_spark.sources.versioned import make_table
+from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
 
 KEY_COL = "external_id"
 #: Internal bucket partition column (never surfaced by nodes()/edges()).
@@ -86,27 +86,19 @@ def _dedup_last_writer(df: DataFrame, keys: list[str]) -> DataFrame:
 
 
 class GraphStore:
-    """One versioned parquet table per node label and per edge type.
-
-    ``backend`` selects the commit protocol per
-    :data:`~ig_etl_sync_spark.sources.versioned.TABLE_BACKENDS`:
-    ``"pointer"`` (atomic pointer flip), ``"txnlog"`` (append-only
-    commit log, object-store-safe), or ``"manifest"`` (commit log +
-    file manifests — incremental MERGE is a pure metadata swap).
-    """
+    """One :class:`~ig_etl_sync_spark.sources.versioned.VersionedParquetTable`
+    per node label and per edge type."""
 
     def __init__(
         self,
         spark: SparkSession,
         root: str,
-        backend: str = "pointer",
         n_buckets: int = 16,
     ) -> None:
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1: {n_buckets}")
         self.spark = spark
         self.root = root
-        self.backend = backend
         self.n_buckets = n_buckets
         #: active sync batch: {table_key: (table, full_view, dirty, absorb)}
         self._pending: dict | None = None
@@ -118,7 +110,7 @@ class GraphStore:
     @contextmanager
     def sync(self):
         """Batch every table write issued inside the context into ONE
-        shared staging round followed by one commit claim per touched
+        shared staging round followed by one pointer flip per touched
         table — the reference's one-transaction-per-sync-function
         semantics (``neo4j.go:77-148``: upsert + delete land in a
         single Neo4j transaction, not one per statement).
@@ -128,9 +120,9 @@ class GraphStore:
         readers see nothing until the context exits. The expensive
         staging writes of all touched tables run CONCURRENTLY (Spark
         schedules jobs from multiple threads fairly), then the cheap
-        metadata claims land sequentially. A crash before the claims
-        leaves only unreferenced staging dirs/pool files — invisible to
-        every reader and reclaimed by each backend's ``vacuum()`` —
+        pointer flips land sequentially. A crash before the flips
+        leaves only unpublished ``.stg-*`` staging dirs — invisible to
+        every reader and reclaimed by each table's ``vacuum()`` —
         exactly the orphan shape of a crash inside a lone
         ``write_incremental``, so batching adds no new failure mode.
         """
@@ -220,16 +212,16 @@ class GraphStore:
 
     def _commit_pending(self, pending: dict) -> None:
         try:
-            self._stage_and_claim(pending)
+            self._stage_and_commit(pending)
         finally:
             # release intra-batch shared caches on success AND on a
-            # failed staging/claim (a long-lived sync loop would
+            # failed staging/commit (a long-lived sync loop would
             # otherwise grow the CacheManager without bound)
             shared, self._shared = self._shared, []
             for df in shared:
                 df.unpersist(blocking=False)
 
-    def _stage_and_claim(self, pending: dict) -> None:
+    def _stage_and_commit(self, pending: dict) -> None:
         if not pending:
             return
         specs = []
@@ -239,27 +231,20 @@ class GraphStore:
 
         def _stage(spec):
             table, df, dirty, absorb = spec
-            if hasattr(table, "stage_incremental"):
-                return table.stage_incremental(
-                    df, GBUCKET, dirty, absorb_unpartitioned=absorb
-                )
-            return None  # backend without a stage/commit split
+            return table.stage_incremental(
+                df, GBUCKET, dirty, absorb_unpartitioned=absorb
+            )
 
         if len(specs) == 1:
-            tokens = [_stage(specs[0])]
+            staged = [_stage(specs[0])]
         else:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=min(8, len(specs))) as ex:
-                tokens = list(ex.map(_stage, specs))
-        # all staging succeeded — claim the (cheap, atomic) commits
-        for (table, df, dirty, absorb), token in zip(specs, tokens):
-            if token is None:
-                table.write_incremental(
-                    df, GBUCKET, dirty, absorb_unpartitioned=absorb
-                )
-            else:
-                table.commit_staged(token)
+                staged = list(ex.map(_stage, specs))
+        # all staging succeeded — land the (cheap, atomic) pointer flips
+        for (table, *_), stage_dir in zip(specs, staged):
+            table.commit_staged(stage_dir)
 
     # -- bucketing ---------------------------------------------------
     def _bucket_of(self, key: Column) -> Column:
@@ -291,10 +276,9 @@ class GraphStore:
     # registry is append-only, so there is no read-modify-write race
     # (two processes registering concurrently cannot drop each other's
     # entry, unlike a single rewritten JSON list), no mutable file to
-    # tear (a crash mid-write leaves only an invisible tmp), and the
-    # object-store-safety claim of backend="txnlog" extends to the
-    # registry — a torn/missing registry would silently disable the
-    # DETACH cascade and leave orphan edges.
+    # tear (a crash mid-write leaves only an invisible tmp) — a
+    # torn/missing registry would silently disable the DETACH cascade
+    # and leave orphan edges.
     @property
     def _registry_dir(self) -> str:
         return os.path.join(self.root, "_edges")
@@ -330,14 +314,14 @@ class GraphStore:
         os.unlink(tmp)
 
     # -- tables ------------------------------------------------------
-    def _node_table(self, label: str):
-        return make_table(
-            self.spark, os.path.join(self.root, f"nodes_{label}"), self.backend
+    def _node_table(self, label: str) -> VersionedParquetTable:
+        return VersionedParquetTable(
+            self.spark, os.path.join(self.root, f"nodes_{label}")
         )
 
-    def _edge_table(self, et: EdgeType):
-        return make_table(
-            self.spark, os.path.join(self.root, et.table_name), self.backend
+    def _edge_table(self, et: EdgeType) -> VersionedParquetTable:
+        return VersionedParquetTable(
+            self.spark, os.path.join(self.root, et.table_name)
         )
 
     @staticmethod

@@ -19,26 +19,26 @@ iteration count as CTEs):
   separate well-separated blobs). ``orderBy().limit(k)`` —
   TakeOrderedAndProject, never a global sort; cid = 0..k-1 in hash
   order.
-- Assignment is SHUFFLE-FREE: the k centroids collapse to a ONE-ROW
-  broadcast codebook (the PQ pattern, similarity.py) and each vector
-  scans it with nested HOFs (zip_with diff-square + aggregate sum,
-  running lexicographic (dist, cid) min) — whole-stage codegen, no
-  per-row Python, no window, and the corpus never moves.
+- Assignment is SHUFFLE-FREE: the k centroids ride as a small int64
+  codebook closed over by an Arrow-batched pandas UDF that scans
+  each vector batch with numpy (running lexicographic (dist, cid)
+  min) — no window, and the corpus never moves.
 - Update: posexplode to (cluster, dim) partial sums — map-side
   combine collapses each partition to ≤ k*dims rows before the
-  exchange — then integer floor-div means and an array rebuild from
-  the k*dims aggregate. Empty clusters keep their previous centroid.
-- Lineage: centroids are ``localCheckpoint``-ed per sweep (k rows —
-  the loop would otherwise double the plan per iteration).
+  exchange — then integer floor-div means, a bounded collect of
+  k*dims numbers. Empty clusters keep their previous centroid.
 
-Scale: per sweep, the only corpus-wide work is one codegen projection
-(assignment) and one partial-agg shuffle bounded at k*dims rows.
+Scale: per sweep, the only corpus-wide work is one vectorized
+projection (assignment) and one partial-agg shuffle bounded at k*dims
+rows.
 100 TB of vectors stream through; only k*dims numbers ever gather.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ig_etl_sync_spark.functions.hashing import md5_int32
@@ -50,8 +50,6 @@ __all__ = ["kmeans_assign", "quantize_embeddings"]
 #: (truncating and floor integer division then agree cross-engine).
 _SCALE = 1_000_000
 _OFFSET = 2.0
-
-_BIG = (1 << 62) - 1
 
 
 def quantize_embeddings(
@@ -87,15 +85,6 @@ def quantize_embeddings(
     return df.withColumn(out_col, checked)
 
 
-def _dist2(qv, cv):
-    """Integer squared L2 distance between two BIGINT arrays."""
-    return F.aggregate(
-        F.zip_with(qv, cv, lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def _np_assign_udf(cents: list[list[int]]):
     """Vectorized nearest-centroid scan (round 9): an Arrow-batched
     pandas UDF over the quantized vectors with the codebook closed over
@@ -110,11 +99,8 @@ def _np_assign_udf(cents: list[list[int]]):
     sums ≤ 64·(4.5e6)² ≈ 1.3e15 « 2^63), integer addition is
     associative so summation order cannot matter, and the strict `<`
     running min with centroids scanned in cid order keeps the smallest
-    cid on ties exactly like the HOF fold (equality-pinned in
-    tests/test_kmeans.py)."""
-    import numpy as np
-    import pandas as pd
-
+    cid on ties (pinned against a pure-Python reference scan, ties
+    included, in tests/test_kmeans.py)."""
     C = np.asarray(cents, dtype=np.int64)
 
     @F.pandas_udf("struct<cluster: bigint, dist2: bigint>")

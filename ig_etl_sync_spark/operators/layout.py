@@ -205,7 +205,7 @@ def compact(
     Hadoop FileSystem API (works on any scheme the cluster mounts:
     s3a, hdfs, file). Returns the target file count. One full
     read + round-robin repartition + write; pair with
-    ``VersionedParquetTable``/``TransactionLogTable`` to publish the
+    ``VersionedParquetTable`` to publish the
     compacted copy atomically instead of overwriting in place.
     """
     import math

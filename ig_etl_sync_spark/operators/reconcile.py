@@ -38,7 +38,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ig_etl_sync_spark.sources.versioned import make_table
+from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
 
 from ig_etl_sync_spark.functions.hashing import DEFAULT_PREFER_COLS, with_change_hash
 
@@ -150,23 +150,19 @@ class SnapshotStore:
     ``root/<integration_key>/<function_key>/`` namespace (R7). Writes
     publish a new immutable version then make it visible atomically —
     readers holding the old version keep a consistent view (R6).
-    ``backend`` selects the commit protocol: ``"pointer"`` (atomic
-    ``_LATEST`` flip; POSIX/HDFS) or ``"txnlog"`` (append-only commit
-    log, the Delta-protocol shape object-store production needs).
     """
 
-    def __init__(
-        self, spark: SparkSession, root: str, backend: str = "pointer"
-    ) -> None:
+    def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
         self.root = root
-        self.backend = backend
 
     # -- internals ---------------------------------------------------
-    def _table(self, integration_key: str, function_key: str):
+    def _table(
+        self, integration_key: str, function_key: str
+    ) -> VersionedParquetTable:
         safe = lambda s: "".join(ch if (ch.isalnum() or ch in "-_.") else "_" for ch in s)  # noqa: E731
         d = os.path.join(self.root, safe(integration_key), safe(function_key))
-        return make_table(self.spark, d, self.backend)
+        return VersionedParquetTable(self.spark, d)
 
     # -- API ---------------------------------------------------------
     def read(self, integration_key: str, function_key: str) -> DataFrame | None:
@@ -268,14 +264,14 @@ class Reconciler:
 
 
 def diff_table_versions(
-    table,
+    table: VersionedParquetTable,
     key_col: str,
     v_old: str,
     v_new: str,
     prefer_cols: Sequence[str] = DEFAULT_PREFER_COLS,
 ) -> DataFrame:
     """Time-travel CDC: what changed between two COMMITTED versions of a
-    versioned table (any backend — pointer, txnlog, manifest) — the R1
+    :class:`~ig_etl_sync_spark.sources.versioned.VersionedParquetTable` — the R1
     snapshot diff applied to the table's own history instead of an
     incoming batch.
 

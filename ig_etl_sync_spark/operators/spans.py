@@ -763,7 +763,7 @@ class SpanDupIndex:
 
     Storage: epoch-partitioned (``sepoch``) exactly like the minhash
     index — ``extend`` writes O(batch) into a fresh partition and
-    carries prior epochs by hard link / manifest re-list; ``compact``
+    carries prior epochs by hard link; ``compact``
     folds the accumulated partitions into epoch 0 clustered by
     span_md5 (the probe join's at-rest layout) through
     ``write_incremental`` with every epoch declared dirty.
@@ -774,19 +774,18 @@ class SpanDupIndex:
         spark,
         path: str,
         *,
-        backend: str = "txnlog",
         id_col: str = "doc_id",
         text_col: str = "text",
         k: int = 8,
         min_docs: int = 2,
     ) -> None:
-        from ig_etl_sync_spark.sources.versioned import make_table
+        from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
 
         if k < 1:
             raise ValueError(f"k={k} must be >= 1")
         if min_docs < 2:
             raise ValueError(f"min_docs={min_docs} must be >= 2")
-        self._table = make_table(spark, path, backend)
+        self._table = VersionedParquetTable(spark, path)
         self.id_col = id_col
         self.text_col = text_col
         self.k = k

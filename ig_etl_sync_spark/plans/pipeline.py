@@ -105,7 +105,7 @@ class PipelineRunner:
                     # S8: one transaction per sync function
                     # (neo4j.go:77-148) — the node upsert+delete AND its
                     # DETACH-cascade edge rewrites share one staging
-                    # round and land one commit claim per table
+                    # round and land one pointer flip per table
                     with self.graph.sync():
                         if fn.is_relation:
                             if fn.edge is None:

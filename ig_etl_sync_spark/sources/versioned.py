@@ -1,31 +1,34 @@
-"""Versioned parquet tables: immutable versions behind two interchangeable
-commit protocols.
+"""Versioned parquet tables: immutable ``vNNNNNN`` version directories
+published by an atomic ``_LATEST`` pointer flip.
 
-- :class:`VersionedParquetTable` — atomic ``_LATEST`` pointer flip.
-  Correct wherever rename is atomic (POSIX, HDFS, ABFS).
-- :class:`TransactionLogTable` — Delta-protocol-shaped append-only
-  commit log. The latest version is *derived* from the max-numbered log
-  entry instead of a mutable pointer, and commit numbers are claimed
-  create-exclusively, so it also models object stores where rename is
-  copy+delete and last-writer-wins pointer flips can silently drop a
-  concurrent commit.
+Every write stages its data under an invisible ``.stg-*`` directory,
+renames it to the next version number and only then flips the pointer,
+so readers never observe partial writes and a reader holding version N
+stays isolated from a concurrent commit of N+1 (R6).
 
-Both publish immutable version directories first and make them visible
-last, so readers never observe partial writes and a reader holding
-version N stays isolated from a concurrent commit of N+1 (R6).
-Select via :func:`make_table` / the stores' ``backend=`` argument.
+Supported deployment: ONE writer per table on a filesystem where
+rename is atomic (POSIX, HDFS, ABFS). Two concurrent writers would
+both claim the same next version number, and the later pointer flip
+would silently drop the other's commit. On an object store (rename is
+copy+delete, no exclusive create) the same contract maps onto Delta
+Lake: its commit log claims version numbers create-exclusively, and a
+``MERGE``/``replaceWhere`` overwrite of the dirty ``gbucket``/epoch
+partitions stands in for :meth:`VersionedParquetTable.write_incremental`.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+_VERSION_DIR = re.compile(r"v\d+")
 
 
 def _partition_dirs(version_dir: str, partition_col: str) -> dict[str, str]:
@@ -135,9 +138,9 @@ def _stage_incremental(
             if n.endswith(".parquet")
         ]
         if not absorb_unpartitioned and _parquet_rows(root_files) != 0:
-            # Same hazard as the manifest backend: a previous plain
-            # write() left UNPARTITIONED rows at the version root, and
-            # partition-dir linking would silently drop them.
+            # A previous plain write() left UNPARTITIONED rows at the
+            # version root, and partition-dir linking would silently
+            # drop them.
             raise ValueError(
                 "write_incremental: previous version holds unpartitioned "
                 "data (a plain write()); pass absorb_unpartitioned=True "
@@ -201,17 +204,17 @@ class VersionedParquetTable:
         ]
         return bool(root_files) and _parquet_rows(root_files) != 0
 
-    def write(self, df: DataFrame, keep: int = 3) -> str:
+    def _new_stage(self) -> str:
+        """Fresh staging dir name: invisible to readers, reclaimed by
+        :meth:`vacuum` if its writer dies before :meth:`commit_staged`."""
         os.makedirs(self.path, exist_ok=True)
-        prev = self.latest_version()
-        nxt = f"v{(int(prev[1:]) + 1) if prev else 0:06d}"
-        df.write.mode("overwrite").parquet(os.path.join(self.path, nxt))
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"version": nxt, "ts": time.time()}, f)
-        os.replace(tmp, self._pointer)
-        self._gc(keep)
-        return nxt
+        return f".stg-{uuid.uuid4().hex[:12]}"
+
+    def write(self, df: DataFrame, keep: int = 3) -> str:
+        """Publish ``df`` as the next version (full replace)."""
+        staged = self._new_stage()
+        df.write.mode("overwrite").parquet(os.path.join(self.path, staged))
+        return self.commit_staged(staged, keep)
 
     def stage_incremental(
         self,
@@ -229,10 +232,9 @@ class VersionedParquetTable:
         dir, reclaimed by :meth:`vacuum`. Splitting stage from commit
         lets a multi-table sync run every table's (expensive) staging
         write concurrently and land the (cheap) pointer flips together."""
-        os.makedirs(self.path, exist_ok=True)
+        staged = self._new_stage()
         prev = self.latest_version()
         prev_dir = os.path.join(self.path, prev) if prev else None
-        staged = f".stg-{uuid.uuid4().hex[:12]}"
         _stage_incremental(
             df, os.path.join(self.path, staged), partition_col,
             {str(v) for v in dirty_values}, prev_dir,
@@ -241,11 +243,19 @@ class VersionedParquetTable:
         return staged
 
     def commit_staged(self, staged: str, keep: int = 3) -> str:
-        """Publish a staged dir: rename to the next version number and
-        flip the ``_LATEST`` pointer (both atomic)."""
+        """Publish a staged dir: rename it to the next version number,
+        then flip the ``_LATEST`` pointer (both atomic).
+
+        A crash between the rename and the flip leaves an unpublished
+        ``v(N+1)`` dir. Readers cannot reach it (:meth:`versions` stops
+        at the pointer), and the next commit removes it and takes the
+        number over."""
         prev = self.latest_version()
         nxt = f"v{(int(prev[1:]) + 1) if prev else 0:06d}"
-        os.rename(os.path.join(self.path, staged), os.path.join(self.path, nxt))
+        dst = os.path.join(self.path, nxt)
+        if os.path.exists(dst):
+            shutil.rmtree(dst)
+        os.rename(os.path.join(self.path, staged), dst)
         tmp = self._pointer + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"version": nxt, "ts": time.time()}, f)
@@ -295,563 +305,36 @@ class VersionedParquetTable:
         return removed
 
     def versions(self) -> list[str]:
-        """Retained version ids, oldest first (gc keeps the newest
-        ``keep``; older ids are gone)."""
-        if not os.path.isdir(self.path):
+        """Published version ids still retained, oldest first (gc keeps
+        the newest ``keep``). A version dir newer than ``_LATEST`` is a
+        crashed commit's unpublished leftover and is not listed."""
+        head = self.latest_version()
+        if head is None:
             return []
-        return sorted(v for v in os.listdir(self.path) if v.startswith("v"))
+        return sorted(
+            (
+                v for v in os.listdir(self.path)
+                if _VERSION_DIR.fullmatch(v) and int(v[1:]) <= int(head[1:])
+            ),
+            key=lambda v: int(v[1:]),
+        )
 
     def read_version(self, version: str) -> DataFrame:
         """Time travel: read a specific retained version."""
-        p = os.path.join(self.path, version)
-        if not os.path.isdir(p):
+        if version not in self.versions():
             raise ValueError(
                 f"version {version!r} not retained under {self.path} "
                 f"(have: {self.versions()})"
             )
-        return self.spark.read.parquet(p)
-
-    def _gc(self, keep: int) -> None:
-        versions = sorted(v for v in os.listdir(self.path) if v.startswith("v"))
-        for v in versions[:-keep]:
-            shutil.rmtree(os.path.join(self.path, v), ignore_errors=True)
-
-
-class TransactionLogTable:
-    """Append-only commit-log table (the Delta/Iceberg protocol shape).
-
-    Layout::
-
-        path/_log/00000000.json   {"version": "d-<hex>", "ts": ...}
-        path/_log/00000001.json   ...
-        path/d-<hex>/             immutable parquet data dirs
-
-    - **Readers** list ``_log/`` once, take the max-numbered entry, and
-      read the immutable data dir it names. No mutable pointer exists.
-    - **Writers** stage data under a unique dir name, then claim the
-      next commit number by hard-linking a fully-written tmp file to
-      ``<n>.json`` — creation is exclusive, so two concurrent writers
-      cannot both win commit ``n``; the loser re-reads the head and
-      retries (optimistic concurrency). A pointer flip would instead
-      silently drop one of the two commits.
-    - **Crashes** leave either a staged dir no log entry references
-      (invisible; removed by :meth:`vacuum`) or a tmp file that never
-      became a commit — readers can never observe a half-commit.
-
-    Same interface as :class:`VersionedParquetTable`.
-    """
-
-    _MAX_CLAIM_RETRIES = 100
-
-    def __init__(self, spark: SparkSession, path: str) -> None:
-        self.spark = spark
-        self.path = path
-
-    @property
-    def _log_dir(self) -> str:
-        return os.path.join(self.path, "_log")
-
-    def _commits(self) -> list[str]:
-        if not os.path.isdir(self._log_dir):
-            return []
-        return sorted(
-            f for f in os.listdir(self._log_dir)
-            if f.endswith(".json") and f[:-5].isdigit()
-        )
-
-    def latest_version(self) -> str | None:
-        # A concurrent writer's _gc may unlink the entry between our
-        # listing and open — but it can only ever gc NON-head entries,
-        # so a re-list sees the (newer) head and succeeds. Bounded
-        # retries guard against a pathological stream of commits.
-        for _ in range(10):
-            commits = self._commits()
-            if not commits:
-                return None
-            try:
-                with open(os.path.join(self._log_dir, commits[-1])) as f:
-                    return json.load(f)["version"]
-            except FileNotFoundError:
-                continue
-        raise RuntimeError(
-            f"log head kept disappearing under {self._log_dir} "
-            "(gc racing faster than re-listing)"
-        )
-
-    def exists(self) -> bool:
-        return self.latest_version() is not None
-
-    def read(self) -> DataFrame | None:
-        v = self.latest_version()
-        if v is None:
-            return None
-        return self.spark.read.parquet(os.path.join(self.path, v))
-
-    def has_partition(self, partition_col: str, value: str) -> bool:
-        """See :meth:`VersionedParquetTable.has_partition` — same
-        conservative driver-side probe, on the log head's data dir."""
-        v = self.latest_version()
-        if v is None:
-            return False
-        vdir = os.path.join(self.path, v)
-        if str(value) in _partition_dirs(vdir, partition_col):
-            return True
-        root_files = [
-            os.path.join(vdir, n)
-            for n in os.listdir(vdir)
-            if n.endswith(".parquet")
-        ]
-        return bool(root_files) and _parquet_rows(root_files) != 0
-
-    def stage_incremental(
-        self,
-        df: DataFrame,
-        partition_col: str,
-        dirty_values: set[str],
-        absorb_unpartitioned: bool = False,
-        cluster: bool = True,
-    ) -> str:
-        """Stage an incremental version without claiming a commit.
-        Invisible to readers until :meth:`commit_staged`; a crash
-        leaves an unreferenced ``d-*`` dir for :meth:`vacuum` — the
-        same orphan shape as a crash inside :meth:`write_incremental`
-        itself, so batched multi-table syncs add no new failure mode."""
-        os.makedirs(self._log_dir, exist_ok=True)
-        prev = self.latest_version()
-        prev_dir = os.path.join(self.path, prev) if prev else None
-        staged = f"d-{uuid.uuid4().hex[:12]}"
-        _stage_incremental(
-            df, os.path.join(self.path, staged), partition_col,
-            {str(v) for v in dirty_values}, prev_dir,
-            absorb_unpartitioned=absorb_unpartitioned, cluster=cluster,
-        )
-        return staged
-
-    def commit_staged(self, staged: str, keep: int = 3) -> str:
-        """Publish a staged dir by claiming the next commit number."""
-        return self._claim(staged, keep)
-
-    def write_incremental(
-        self,
-        df: DataFrame,
-        partition_col: str,
-        dirty_values: set[str],
-        keep: int = 3,
-        absorb_unpartitioned: bool = False,
-        cluster: bool = True,
-    ) -> str:
-        """Incremental-partition publish under the commit-log protocol:
-        stage fresh parquet for the ``dirty_values`` partitions plus
-        hard links to the previous version's clean partitions, then
-        claim the next commit number exactly like :meth:`write`. (On a
-        real object store the links become manifest entries — the
-        protocol shape is already Delta's.)"""
-        staged = self.stage_incremental(
-            df, partition_col, dirty_values,
-            absorb_unpartitioned=absorb_unpartitioned, cluster=cluster,
-        )
-        return self._claim(staged, keep)
-
-    def write(self, df: DataFrame, keep: int = 3) -> str:
-        os.makedirs(self._log_dir, exist_ok=True)
-        staged = f"d-{uuid.uuid4().hex[:12]}"
-        df.write.mode("overwrite").parquet(os.path.join(self.path, staged))
-        return self._claim(staged, keep)
-
-    def _claim(self, staged: str, keep: int) -> str:
-        for _ in range(self._MAX_CLAIM_RETRIES):
-            commits = self._commits()
-            n = int(commits[-1][:-5]) + 1 if commits else 0
-            entry = os.path.join(self._log_dir, f"{n:08d}.json")
-            tmp = os.path.join(
-                self._log_dir, f".{uuid.uuid4().hex[:8]}.tmp"
-            )
-            with open(tmp, "w") as f:
-                json.dump({"version": staged, "commit": n, "ts": time.time()}, f)
-            try:
-                # Hard-link publish: create-exclusive (loses cleanly to a
-                # concurrent claimant) AND atomic (the linked name appears
-                # fully written or not at all).
-                os.link(tmp, entry)
-            except FileExistsError:
-                os.unlink(tmp)
-                continue  # lost the race — recompute head, try again
-            os.unlink(tmp)
-            self._gc(keep)
-            return staged
-        raise RuntimeError(
-            f"could not claim a commit number after "
-            f"{self._MAX_CLAIM_RETRIES} attempts under {self._log_dir}"
-        )
-
-    def versions(self) -> list[str]:
-        """Retained version ids in commit order (the log IS the
-        history; gc'd commits are gone)."""
-        out = []
-        for c in self._commits():
-            try:
-                with open(os.path.join(self._log_dir, c)) as f:
-                    out.append(json.load(f)["version"])
-            except (OSError, ValueError, KeyError):
-                continue
-        return out
-
-    def read_version(self, version: str) -> DataFrame:
-        """Time travel: read a specific still-retained committed version."""
-        if version not in self.versions():
-            raise ValueError(
-                f"version {version!r} not in the retained log under "
-                f"{self.path} (have: {self.versions()})"
-            )
         return self.spark.read.parquet(os.path.join(self.path, version))
 
     def _gc(self, keep: int) -> None:
-        """Drop all but the newest ``keep`` commits and their data dirs.
-
-        Staged-but-never-committed dirs (crashed writers) are NOT
-        touched here — a slow concurrent writer's staged dir is
-        indistinguishable from a crashed one without an age bound; use
-        :meth:`vacuum` for those.
-        """
-        commits = self._commits()
-        for c in commits[:-keep]:
-            p = os.path.join(self._log_dir, c)
-            try:
-                with open(p) as f:
-                    v = json.load(f)["version"]
-                shutil.rmtree(os.path.join(self.path, v), ignore_errors=True)
-            except (OSError, ValueError, KeyError):
-                pass
-            try:
-                os.unlink(p)
-            except OSError:
-                pass
-
-    def vacuum(self, min_age_seconds: float = 3600.0) -> list[str]:
-        """Remove staged data dirs no commit references, once they are
-        older than ``min_age_seconds`` (the age bound keeps a slow
-        in-flight writer's staged dir safe — same contract as Delta's
-        VACUUM retention window)."""
-        live = set()
-        for c in self._commits():
-            try:
-                with open(os.path.join(self._log_dir, c)) as f:
-                    live.add(json.load(f)["version"])
-            except (OSError, ValueError, KeyError):
-                pass
-        removed = []
-        now = time.time()
-        if not os.path.isdir(self.path):
-            return removed
-        for d in os.listdir(self.path):
-            full = os.path.join(self.path, d)
-            if (
-                d.startswith("d-")
-                and d not in live
-                and os.path.isdir(full)
-                and now - os.path.getmtime(full) >= min_age_seconds
-            ):
-                shutil.rmtree(full, ignore_errors=True)
-                removed.append(d)
-        return removed
-
-
-class DeltaManifestTable(TransactionLogTable):
-    """Commit-log table whose commits carry a FILE MANIFEST — the full
-    Delta/Iceberg protocol shape, including the data-file layer.
-
-    Where :class:`TransactionLogTable` names an immutable version
-    *directory* per commit (clean partitions hard-linked in — a
-    local-FS trick), here each commit entry embeds
-    ``{"manifest": {partition_value: [relative file paths]}}`` and data
-    files live once in a shared ``files/`` pool. An incremental MERGE
-    writes parquet ONLY for dirty partitions and re-lists the previous
-    manifest's entries for clean ones — a pure metadata swap, zero data
-    movement, exactly what an object store (no rename, no hard links)
-    requires.
-
-    Layout::
-
-        path/_log/00000000.json        {"version": "m-..", "manifest": ...}
-        path/files/m-<hex>/...         immutable parquet files (pooled)
-
-    Because files are shared across manifests by reference, retention
-    splits in two: :meth:`_gc` trims only log ENTRIES (cheap, safe);
-    :meth:`vacuum` deletes pool files referenced by NO retained
-    manifest once older than the retention window (Delta's VACUUM
-    contract).
-
-    Data files keep the partition column as a REAL column (staging
-    duplicates it into a scratch ``_pv`` dir key), so reading an
-    explicit file list needs no partition-discovery — the column is in
-    the data.
-
-    Same interface as the other two backends; select with
-    ``backend="manifest"``.
-    """
-
-    _FILES = "files"
-
-    # -- head / manifest plumbing ------------------------------------
-
-    def _entry(self, commit_file: str) -> dict | None:
-        try:
-            with open(os.path.join(self._log_dir, commit_file)) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
-
-    def _head_entry(self) -> dict | None:
-        for _ in range(10):
-            commits = self._commits()
-            if not commits:
-                return None
-            e = self._entry(commits[-1])
-            if e is not None:
-                return e
-        raise RuntimeError(
-            f"log head kept disappearing under {self._log_dir}"
-        )
-
-    def latest_version(self) -> str | None:
-        e = self._head_entry()
-        return None if e is None else e["version"]
-
-    def _abs(self, relpaths: list[str]) -> list[str]:
-        return [os.path.join(self.path, p) for p in relpaths]
-
-    @staticmethod
-    def _manifest_paths(entry: dict) -> list[str]:
-        return [p for ps in entry.get("manifest", {}).values() for p in ps]
-
-    # -- staging -----------------------------------------------------
-
-    def _stage_files(self, df: DataFrame, staged: str) -> list[str]:
-        """Unpartitioned parquet into the pool; returns relpaths."""
-        out = os.path.join(self.path, self._FILES, staged)
-        df.write.mode("overwrite").parquet(out)
-        return self._list_parquet(out)
-
-    def _list_parquet(self, d: str) -> list[str]:
-        rel = []
-        for root, _dirs, names in os.walk(d):
-            for n in names:
-                if n.endswith(".parquet"):
-                    rel.append(
-                        os.path.relpath(os.path.join(root, n), self.path)
-                    )
-        return sorted(rel)
-
-    # -- public interface --------------------------------------------
-
-    def read(self) -> DataFrame | None:
-        e = self._head_entry()
-        if e is None:
-            return None
-        return self.spark.read.parquet(*self._abs(self._manifest_paths(e)))
-
-    def has_partition(self, partition_col: str, value: str) -> bool:
-        """See :meth:`VersionedParquetTable.has_partition`. Manifest
-        keys ARE partition values, so this is a dict lookup; a non-empty
-        unpartitioned ("") entry is conservatively True."""
-        del partition_col  # one partition scheme per manifest table
-        e = self._head_entry()
-        if e is None:
-            return False
-        manifest = e.get("manifest", {})
-        if str(value) in manifest:
-            return True
-        root = manifest.get("") or []
-        return bool(root) and _parquet_rows(self._abs(root)) != 0
-
-    def write(self, df: DataFrame, keep: int = 3) -> str:
-        os.makedirs(self._log_dir, exist_ok=True)
-        staged = f"m-{uuid.uuid4().hex[:12]}"
-        files = self._stage_files(df, staged)
-        return self._claim_manifest(staged, {"": files}, keep)
-
-    def stage_incremental(
-        self,
-        df: DataFrame,
-        partition_col: str,
-        dirty_values: set[str],
-        absorb_unpartitioned: bool = False,
-        cluster: bool = True,
-    ) -> tuple[str, dict]:
-        """Stage dirty-partition files into the pool and build (but do
-        not claim) the next manifest. Returns an opaque token for
-        :meth:`commit_staged`. Unreferenced pool files from a crash
-        before the claim are :meth:`vacuum`'s job — identical to a
-        crash inside :meth:`write_incremental`."""
-        os.makedirs(self._log_dir, exist_ok=True)
-        dirty = {str(v) for v in dirty_values}
-        prev = self._head_entry()
-        staged = f"m-{uuid.uuid4().hex[:12]}"
-        out = os.path.join(self.path, self._FILES, staged)
-        # duplicate the partition column into a scratch dir key so the
-        # data files keep it as a real column (explicit-file reads have
-        # no partition discovery)
-        staged_df = df.withColumn(
-            "_pv", F.col(partition_col).cast("string")
-        )
-        if cluster:
-            # one file per partition value, not per (task, value) pair —
-            # see the clustering note in _stage_incremental (and the
-            # cluster=False escape hatch there)
-            staged_df = staged_df.repartition(F.col("_pv"))
-        else:
-            # file-count pin for the skip path (see _stage_incremental)
-            staged_df = staged_df.coalesce(
-                df.sparkSession.sparkContext.defaultParallelism
-            )
-        (
-            staged_df
-            .write.mode("overwrite")
-            .partitionBy("_pv")
-            .parquet(out)
-        )
-        manifest: dict[str, list[str]] = {}
-        for value, pdir in _partition_dirs(out, "_pv").items():
-            if value not in dirty:
-                raise ValueError(
-                    f"write_incremental: df contains rows for partition "
-                    f"{value!r} not declared dirty {sorted(dirty)}"
-                )
-            manifest[value] = self._list_parquet(pdir)
-        if prev is not None:
-            prev_manifest = prev.get("manifest", {})
-            if (
-                not absorb_unpartitioned
-                and _parquet_rows(self._abs(prev_manifest.get("") or [])) != 0
-            ):
-                # A plain write() stores rows UNPARTITIONED under the ""
-                # key; carrying it forward alongside epoch dirs would
-                # double-read re-written partitions, and dropping it
-                # silently loses the rows — refuse instead of guessing.
-                # (A zero-row "" entry is the empty-table schema carrier
-                # this method itself stages — that one is droppable.)
-                raise ValueError(
-                    "write_incremental: previous version holds "
-                    "unpartitioned data (a plain write()); pass "
-                    "absorb_unpartitioned=True from a full rewrite "
-                    "(read-all, all partitions dirty) or compact first "
-                    "(see CLAUDE.md invariant)"
-                )
-            for value, files in prev_manifest.items():
-                if value not in dirty and value != "":
-                    manifest[value] = files  # manifest swap — no copy
-        if not manifest:
-            # empty table: stage a plain file so the manifest carries
-            # schema (partitionBy writes nothing for zero rows)
-            manifest = {"": self._stage_files(df, staged)}
-        return staged, manifest
-
-    def commit_staged(self, token: tuple[str, dict], keep: int = 3) -> str:
-        """Publish a staged (version, manifest) token by claiming the
-        next commit number."""
-        staged, manifest = token
-        return self._claim_manifest(staged, manifest, keep)
-
-    def write_incremental(
-        self,
-        df: DataFrame,
-        partition_col: str,
-        dirty_values: set[str],
-        keep: int = 3,
-        absorb_unpartitioned: bool = False,
-        cluster: bool = True,
-    ) -> str:
-        staged, manifest = self.stage_incremental(
-            df, partition_col, dirty_values,
-            absorb_unpartitioned=absorb_unpartitioned, cluster=cluster,
-        )
-        return self._claim_manifest(staged, manifest, keep)
-
-    def _claim_manifest(
-        self, staged: str, manifest: dict[str, list[str]], keep: int
-    ) -> str:
-        for _ in range(self._MAX_CLAIM_RETRIES):
-            commits = self._commits()
-            n = int(commits[-1][:-5]) + 1 if commits else 0
-            entry = os.path.join(self._log_dir, f"{n:08d}.json")
-            tmp = os.path.join(self._log_dir, f".{uuid.uuid4().hex[:8]}.tmp")
-            with open(tmp, "w") as f:
-                json.dump(
-                    {"version": staged, "manifest": manifest,
-                     "commit": n, "ts": time.time()}, f,
-                )
-            try:
-                os.link(tmp, entry)
-            except FileExistsError:
-                os.unlink(tmp)
-                continue
-            os.unlink(tmp)
-            self._gc(keep)
-            return staged
-        raise RuntimeError(
-            f"could not claim a commit number after "
-            f"{self._MAX_CLAIM_RETRIES} attempts under {self._log_dir}"
-        )
-
-    def read_version(self, version: str) -> DataFrame:
-        for c in self._commits():
-            e = self._entry(c)
-            if e is not None and e["version"] == version:
-                return self.spark.read.parquet(
-                    *self._abs(self._manifest_paths(e))
-                )
-        raise ValueError(
-            f"version {version!r} not in the retained log under "
-            f"{self.path} (have: {self.versions()})"
-        )
-
-    def _gc(self, keep: int) -> None:
-        """Trim log ENTRIES only. An old commit's files may be
-        referenced by newer manifests (that's the point of manifest
-        reuse), so file deletion is exclusively :meth:`vacuum`'s
-        reference-counted job."""
-        for c in self._commits()[:-keep]:
-            try:
-                os.unlink(os.path.join(self._log_dir, c))
-            except OSError:
-                pass
-
-    def vacuum(self, min_age_seconds: float = 3600.0) -> list[str]:
-        """Delete pool files no retained manifest references, once older
-        than the retention window (in-flight writers stage before they
-        claim, so young unreferenced files must survive)."""
-        live: set[str] = set()
-        for c in self._commits():
-            e = self._entry(c)
-            if e is not None:
-                live.update(self._manifest_paths(e))
-        removed: list[str] = []
-        pool = os.path.join(self.path, self._FILES)
-        now = time.time()
-        for root, _dirs, names in os.walk(pool, topdown=False):
-            for n in names:
-                full = os.path.join(root, n)
-                rel = os.path.relpath(full, self.path)
-                if (
-                    n.endswith(".parquet")
-                    and rel not in live
-                    and now - os.path.getmtime(full) >= min_age_seconds
-                ):
-                    try:
-                        os.unlink(full)
-                        removed.append(rel)
-                    except OSError:
-                        pass
-            try:
-                if not os.listdir(root):
-                    os.rmdir(root)
-            except OSError:
-                pass
-        return removed
+        for v in self.versions()[:-keep]:
+            shutil.rmtree(os.path.join(self.path, v), ignore_errors=True)
 
 
 def assert_epoch_replay(
-    table,
+    table: VersionedParquetTable,
     epoch_col: str,
     epoch: int,
     incoming: DataFrame,
@@ -875,8 +358,7 @@ def assert_epoch_replay(
     no Spark job) in the common fresh-epoch case; on an actual replay,
     one partition-pruned read of the target epoch plus two anti-joins
     over O(batch) ids."""
-    probe = getattr(table, "has_partition", None)
-    if probe is not None and not probe(epoch_col, str(int(epoch))):
+    if not table.has_partition(epoch_col, str(int(epoch))):
         return  # fresh epoch partition — nothing to replace, no job
     cur = table.read()
     if cur is None:
@@ -897,7 +379,7 @@ def assert_epoch_replay(
     )
     if mismatch.count() > 0:
         raise ValueError(
-            f"epoch {int(epoch)} of {getattr(table, 'path', table)!r} "
+            f"epoch {int(epoch)} of {table.path!r} "
             "already holds a DIFFERENT batch (id sets differ) — "
             "overwriting would silently drop committed rows. This "
             "happens when a stream restarts with a fresh checkpoint "
@@ -906,39 +388,3 @@ def assert_epoch_replay(
             "stream's epoch. Use one checkpoint location per standing "
             "table, or compact() to fold history before re-keying."
         )
-
-
-#: Registry for the stores' ``backend=`` argument.
-TABLE_BACKENDS = {
-    "pointer": VersionedParquetTable,
-    "txnlog": TransactionLogTable,
-    "manifest": DeltaManifestTable,
-}
-
-# optional fourth leg: the REAL delta-spark package behind the same
-# interface (raises a descriptive ImportError at construction when the
-# package is absent — the registry entry itself is always present so
-# error messages can name it)
-from ig_etl_sync_spark.sources.delta_adapter import DeltaLakeTable  # noqa: E402
-
-TABLE_BACKENDS["delta"] = DeltaLakeTable
-
-
-def make_table(
-    spark: SparkSession, path: str, backend: str = "pointer"
-) -> VersionedParquetTable | TransactionLogTable:
-    """Construct a versioned-table handle for ``path``.
-
-    ``backend="pointer"`` (default) = atomic ``_LATEST`` pointer flip;
-    ``backend="txnlog"`` = append-only commit log (object-store-safe);
-    ``backend="manifest"`` = commit log + file manifests (object-store
-    MERGE as metadata swap, no hard links).
-    """
-    try:
-        cls = TABLE_BACKENDS[backend]
-    except KeyError:
-        raise ValueError(
-            f"unknown table backend {backend!r}; "
-            f"choose one of {sorted(TABLE_BACKENDS)}"
-        ) from None
-    return cls(spark, path)

@@ -11,7 +11,7 @@ that each micro-batch probes and extends:
     near-duplicating ANY prior accepted doc) → extend index with the
     survivors → append survivors to the corpus table
 
-Both the index and the corpus are versioned tables (any ``backend=``),
+Both the index and the corpus are versioned tables,
 so a crashed batch leaves the previous committed versions intact. Retry
 safety is two-layered: every write is guarded by an anti-join on
 already-present ids, AND both appends key their epoch partition off the
@@ -32,9 +32,8 @@ is still one stream + one checkpoint per (index, corpus) pair.
 Scale: per batch the probe shuffles only the batch's (id, band) pairs
 against the index (the batch is the small side), and BOTH appends are
 epoch-partitioned ``write_incremental`` calls — each batch writes one
-fresh epoch partition while prior epochs are carried by hard link
-(pointer/txnlog) or manifest re-list (manifest backend), so per-batch
-cost is O(batch) data regardless of corpus size.
+fresh epoch partition while prior epochs are carried by hard link, so
+per-batch cost is O(batch) data regardless of corpus size.
 """
 
 from __future__ import annotations
@@ -202,8 +201,8 @@ class StreamingCorpusIngest:
         # from the corpus, the index overwrite is a no-op in content,
         # and the corpus append finally lands — effectively-once, not
         # at-most-once. Both writes are epoch-partitioned incrementals:
-        # O(batch) data moves; prior epochs are carried by link or
-        # manifest re-list, never rewritten.
+        # O(batch) data moves; prior epochs are carried by link,
+        # never rewritten.
         # Explicit epochs implement only the txnVersion half of Delta's
         # txnAppId/txnVersion pattern, so bare batch_id numbers COLLIDE
         # across checkpoints/streams: extend() and the corpus guard

@@ -32,8 +32,8 @@ batch 1's counts and batch 2 against the union's counts).
 
 Scale: the model tables are vocabulary-bounded (orders of magnitude
 below corpus size) and summed per key before the score join; per batch
-only the batch's counts are written (prior epochs carried by link /
-manifest re-list). The count aggregation across epochs is one
+only the batch's counts are written (prior epochs carried by hard
+link). The count aggregation across epochs is one
 vocabulary-keyed partial agg, never a corpus rescan.
 """
 
@@ -53,7 +53,7 @@ class StreamingLMQualityGate:
     ``stream.writeStream.foreachBatch(gate.process_batch)``.
 
     ``uni_table`` / ``bi_table`` / ``scores_table``: versioned tables
-    (any ``backend=``) for the standing unigram counts (word, n), the
+    for the standing unigram counts (word, n), the
     standing bigram counts (w1, w2, n), and the per-doc score log
     (doc_id, n_bigrams, surprisal_ppm). One checkpoint location per
     table triple — the epoch-collision rules of the dedup indexes

@@ -54,8 +54,8 @@ class StreamingMixtureGate:
     """foreachBatch processor: attach with
     ``stream.writeStream.foreachBatch(gate.process_batch)``.
 
-    ``counts_table`` / ``corpus_table``: versioned tables (any
-    ``backend=``) for the standing admitted per-group token counts
+    ``counts_table`` / ``corpus_table``: versioned tables for the
+    standing admitted per-group token counts
     (group, n, epoch) and the admitted corpus rows. One checkpoint
     location per table pair — the epoch-collision rules of the dedup
     indexes apply unchanged."""

@@ -7,24 +7,11 @@ import pytest
 from ig_etl_sync_spark.operators.graph import EdgeType, GraphStore
 
 
-from ig_etl_sync_spark.sources.delta_adapter import HAVE_DELTA
-
-_BACKENDS = ["pointer", "txnlog", "manifest"] + (
-    # optional fourth leg: real delta-spark behind the same interface
-    # (needs the package AND a Delta-extension SparkSession, which the
-    # plain test session is not — both must hold to run the leg)
-    ["delta"] if HAVE_DELTA else []
-)
-
-
-@pytest.fixture(params=_BACKENDS)
-def graph(spark, tmp_path, request):
-    if request.param == "delta":
-        if "io.delta.sql.DeltaSparkSessionExtension" not in (
-            spark.conf.get("spark.sql.extensions", "") or ""
-        ):
-            pytest.skip("SparkSession lacks the Delta extensions")
-    return GraphStore(spark, str(tmp_path / "graph"), backend=request.param)
+# One parameter: the ``[pointer]`` id names the table's commit protocol,
+# the ``_LATEST`` pointer flip of sources/versioned.py.
+@pytest.fixture(params=["pointer"])
+def graph(spark, tmp_path):
+    return GraphStore(spark, str(tmp_path / "graph"))
 
 
 def test_registry_ignores_torn_marker(spark, tmp_path):

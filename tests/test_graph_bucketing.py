@@ -24,24 +24,8 @@ def _file_map(bucket_dir: str) -> dict[str, tuple[int, int]]:
 
 
 def _bucket_file_maps(table) -> dict[str, dict[str, tuple[int, int]]]:
-    """{bucket_value: {file_id: (inode, size)}} for the LATEST version,
-    across both physical layouts: version directories with GBUCKET=
-    subdirs (pointer/txnlog) and manifest-listed pool files (manifest —
-    where 'clean bucket untouched' means the manifest re-lists the SAME
-    files, which the identical path+inode pins exactly like a hard
-    link does)."""
-    from ig_etl_sync_spark.sources.versioned import DeltaManifestTable
-
-    if isinstance(table, DeltaManifestTable):
-        entry = table._head_entry()
-        out = {}
-        for pv, rels in entry.get("manifest", {}).items():
-            m = {}
-            for rel in rels:
-                st = os.stat(os.path.join(table.path, rel))
-                m[rel] = (st.st_ino, st.st_size)
-            out[pv] = m
-        return out
+    """{bucket_value: {file_id: (inode, size)}} for the LATEST version's
+    ``GBUCKET=`` subdirs."""
     vdir = os.path.join(table.path, table.latest_version())
     return {
         d.split("=", 1)[1]: _file_map(os.path.join(vdir, d))
@@ -56,11 +40,11 @@ def _mknodes(spark, keys, tag="a"):
     )
 
 
-@pytest.fixture(params=["pointer", "txnlog", "manifest"])
-def store(spark, tmp_path, request):
-    return GraphStore(
-        spark, str(tmp_path / "graph"), backend=request.param, n_buckets=8
-    )
+# One parameter: the ``[pointer]`` id names the table's commit protocol,
+# the ``_LATEST`` pointer flip of sources/versioned.py.
+@pytest.fixture(params=["pointer"])
+def store(spark, tmp_path):
+    return GraphStore(spark, str(tmp_path / "graph"), n_buckets=8)
 
 
 def test_untouched_buckets_byte_identical_across_sync(spark, store):

@@ -57,6 +57,32 @@ def test_kmeans_survives_k_exceeding_points(spark):
     assert len({r.cluster for r in out}) <= 4
 
 
+def test_assign_udf_matches_reference_scan_with_ties(spark):
+    """The vectorized assignment equals a pure-Python lexicographic
+    (dist2, cid) scan; equidistant centroids go to the smallest cid."""
+    from ig_etl_sync_spark.operators.kmeans import _np_assign_udf
+
+    cents = [[0, 0], [2, 0], [0, 2], [2, 0]]  # cid 3 duplicates cid 1
+    pts = [[1, 0], [1, 1], [2, 0], [5, 5], [0, 1], [3, 3]]
+
+    def reference(p):
+        return min(
+            (sum((a - b) ** 2 for a, b in zip(p, c)), cid)
+            for cid, c in enumerate(cents)
+        )
+
+    df = spark.createDataFrame(
+        list(enumerate(pts)), "id long, qv array<bigint>"
+    )
+    got = {
+        r.id: (r.dist2, r.cluster)
+        for r in df.select("id", _np_assign_udf(cents)("qv").alias("b"))
+        .select("id", "b.cluster", "b.dist2")
+        .collect()
+    }
+    assert got == {i: reference(p) for i, p in enumerate(pts)}
+
+
 def test_quantize_non_negative_and_monotone(spark):
     df = spark.createDataFrame(
         [(1, [-0.99, 0.0, 0.99])], "vec_id long, embedding array<float>"

@@ -21,9 +21,11 @@ def mk_df(spark, rows):
     )
 
 
-@pytest.fixture(params=["pointer", "txnlog", "manifest"])
-def store(spark, tmp_path, request):
-    return SnapshotStore(spark, str(tmp_path / "snapshots"), backend=request.param)
+# One parameter: the ``[pointer]`` id names the table's commit protocol,
+# the ``_LATEST`` pointer flip of sources/versioned.py.
+@pytest.fixture(params=["pointer"])
+def store(spark, tmp_path):
+    return SnapshotStore(spark, str(tmp_path / "snapshots"))
 
 
 def test_initial_all_create(spark):
@@ -124,21 +126,17 @@ def test_duplicate_keys_deterministic(spark):
 
 def test_diff_table_versions_all_three_changes(spark, tmp_path):
     """Time-travel CDC between two commits: create/update/delete all
-    classified; identical keys absent; works on every backend."""
+    classified; identical keys absent."""
     from ig_etl_sync_spark.operators.reconcile import diff_table_versions
-    from ig_etl_sync_spark.sources.delta_adapter import HAVE_DELTA
-    from ig_etl_sync_spark.sources.versioned import TABLE_BACKENDS
+    from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
 
-    for backend, cls in TABLE_BACKENDS.items():
-        if backend == "delta" and not HAVE_DELTA:
-            continue  # optional-package leg; see test_versioned_delta_leg
-        t = cls(spark, str(tmp_path / f"t_{backend}"))
-        t.write(spark.createDataFrame(
-            [("a", 1), ("b", 2), ("c", 3)], "k string, v long"))
-        v1 = t.latest_version()
-        t.write(spark.createDataFrame(
-            [("a", 1), ("b", 99), ("d", 4)], "k string, v long"))
-        v2 = t.latest_version()
-        out = {r.external_id: r.change
-               for r in diff_table_versions(t, "k", v1, v2).collect()}
-        assert out == {"b": "update", "c": "delete", "d": "create"}, backend
+    t = VersionedParquetTable(spark, str(tmp_path / "t"))
+    t.write(spark.createDataFrame(
+        [("a", 1), ("b", 2), ("c", 3)], "k string, v long"))
+    v1 = t.latest_version()
+    t.write(spark.createDataFrame(
+        [("a", 1), ("b", 99), ("d", 4)], "k string, v long"))
+    v2 = t.latest_version()
+    out = {r.external_id: r.change
+           for r in diff_table_versions(t, "k", v1, v2).collect()}
+    assert out == {"b": "update", "c": "delete", "d": "create"}

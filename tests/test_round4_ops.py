@@ -329,7 +329,7 @@ def test_minhash_dedup_index_lifecycle(spark, tmp_path):
                                        "text about cooking pasta with garlic")])
     new = _docs(spark, [(10, BASE), (11, "brand new unique content about "
                                          "deep sea exploration vessels")])
-    idx = MinhashDedupIndex(spark, str(tmp_path / "idx"), backend="txnlog")
+    idx = MinhashDedupIndex(spark, str(tmp_path / "idx"))
     # unbuilt index: probe returns empty, not an error
     assert idx.probe(new).count() == 0
     idx.build(ref)
@@ -359,7 +359,7 @@ def test_dedup_index_extend_links_prior_epochs(spark, tmp_path):
 
     from ig_etl_sync_spark.operators.dedup import MinhashDedupIndex
 
-    idx = MinhashDedupIndex(spark, str(tmp_path / "idx"), backend="txnlog")
+    idx = MinhashDedupIndex(spark, str(tmp_path / "idx"))
     idx.build(_docs(spark, [(1, BASE)]))
     t = idx._table
 
@@ -388,7 +388,7 @@ def test_dedup_index_compact_folds_epochs(spark, tmp_path):
 
     from ig_etl_sync_spark.operators.dedup import MinhashDedupIndex
 
-    idx = MinhashDedupIndex(spark, str(tmp_path / "idx"), backend="txnlog")
+    idx = MinhashDedupIndex(spark, str(tmp_path / "idx"))
     assert idx.compact() is None  # unbuilt: no-op
     idx.build(_docs(spark, [(1, BASE)]))
     idx.extend(_docs(spark, [(2, "totally different content here")]))

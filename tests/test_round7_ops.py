@@ -162,12 +162,12 @@ def test_surprisal_buckets_backoff_score_mode(spark, sf_dir):
 # ---------------------- streaming LM quality gate (X100)
 
 def _lm_tables(spark, tmp_path, name):
-    from ig_etl_sync_spark.sources.versioned import make_table
+    from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
 
     return (
-        make_table(spark, str(tmp_path / f"{name}_uni"), "txnlog"),
-        make_table(spark, str(tmp_path / f"{name}_bi"), "txnlog"),
-        make_table(spark, str(tmp_path / f"{name}_sc"), "txnlog"),
+        VersionedParquetTable(spark, str(tmp_path / f"{name}_uni")),
+        VersionedParquetTable(spark, str(tmp_path / f"{name}_bi")),
+        VersionedParquetTable(spark, str(tmp_path / f"{name}_sc")),
     )
 
 

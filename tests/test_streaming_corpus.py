@@ -122,7 +122,7 @@ def test_streaming_ingest_with_standing_dedup_index(spark, tmp_path):
     import os
 
     from ig_etl_sync_spark.operators.dedup import MinhashDedupIndex
-    from ig_etl_sync_spark.sources.versioned import make_table
+    from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
     from ig_etl_sync_spark.streaming.ingest import StreamingCorpusIngest
 
     base = (
@@ -130,8 +130,8 @@ def test_streaming_ingest_with_standing_dedup_index(spark, tmp_path):
         "sat on the warm mat watching birds fly south for winter"
     )
     pasta = "completely different reference text about cooking pasta with garlic"
-    idx = MinhashDedupIndex(spark, str(tmp_path / "idx"), backend="txnlog")
-    corpus = make_table(spark, str(tmp_path / "corpus"), "txnlog")
+    idx = MinhashDedupIndex(spark, str(tmp_path / "idx"))
+    corpus = VersionedParquetTable(spark, str(tmp_path / "corpus"))
     ingest = StreamingCorpusIngest(idx, corpus, threshold=0.5)
 
     src = str(tmp_path / "src")
@@ -198,12 +198,12 @@ def test_ingest_retry_completes_crashed_corpus_append(spark, tmp_path):
     the index must hold exactly one copy of the batch (the replayed
     extend overwrites its own epoch partition)."""
     from ig_etl_sync_spark.operators.dedup import MinhashDedupIndex
-    from ig_etl_sync_spark.sources.versioned import make_table
+    from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
     from ig_etl_sync_spark.streaming.ingest import StreamingCorpusIngest
     from pyspark.sql import functions as F
 
-    idx = MinhashDedupIndex(spark, str(tmp_path / "idx"), backend="txnlog")
-    corpus = make_table(spark, str(tmp_path / "corpus"), "txnlog")
+    idx = MinhashDedupIndex(spark, str(tmp_path / "idx"))
+    corpus = VersionedParquetTable(spark, str(tmp_path / "corpus"))
     ingest = StreamingCorpusIngest(idx, corpus, threshold=0.5)
 
     b0 = spark.createDataFrame(
@@ -275,13 +275,13 @@ def test_streaming_ingest_with_span_cut(spark, tmp_path):
     batch_id replays to identical corpus contents."""
     from ig_etl_sync_spark.operators.dedup import MinhashDedupIndex
     from ig_etl_sync_spark.operators.spans import SpanDupIndex
-    from ig_etl_sync_spark.sources.versioned import make_table
+    from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
     from ig_etl_sync_spark.streaming.ingest import StreamingCorpusIngest
 
     boiler = "all rights reserved no part may be reproduced without permission"
-    idx = MinhashDedupIndex(spark, str(tmp_path / "idx"), backend="txnlog")
+    idx = MinhashDedupIndex(spark, str(tmp_path / "idx"))
     sidx = SpanDupIndex(spark, str(tmp_path / "sidx"), k=8, min_docs=2)
-    corpus = make_table(spark, str(tmp_path / "corpus"), "txnlog")
+    corpus = VersionedParquetTable(spark, str(tmp_path / "corpus"))
     ingest = StreamingCorpusIngest(
         idx, corpus, threshold=0.5, span_index=sidx
     )
@@ -327,13 +327,13 @@ def test_span_cut_replay_after_crash_between_span_extend_and_append(
     probe's (span, doc) distinct, so coverage is replay-identical."""
     from ig_etl_sync_spark.operators.dedup import MinhashDedupIndex
     from ig_etl_sync_spark.operators.spans import SpanDupIndex
-    from ig_etl_sync_spark.sources.versioned import make_table
+    from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
     from ig_etl_sync_spark.streaming.ingest import StreamingCorpusIngest
 
     boiler = "all rights reserved no part may be reproduced without permission"
-    idx = MinhashDedupIndex(spark, str(tmp_path / "idx"), backend="txnlog")
+    idx = MinhashDedupIndex(spark, str(tmp_path / "idx"))
     sidx = SpanDupIndex(spark, str(tmp_path / "sidx"), k=8, min_docs=2)
-    corpus = make_table(spark, str(tmp_path / "corpus"), "txnlog")
+    corpus = VersionedParquetTable(spark, str(tmp_path / "corpus"))
     ingest = StreamingCorpusIngest(
         idx, corpus, threshold=0.5, span_index=sidx
     )
@@ -368,11 +368,11 @@ def test_epoch_reuse_with_different_batch_is_refused(spark, tmp_path):
     import pytest
 
     from ig_etl_sync_spark.operators.dedup import MinhashDedupIndex
-    from ig_etl_sync_spark.sources.versioned import make_table
+    from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
     from ig_etl_sync_spark.streaming.ingest import StreamingCorpusIngest
 
-    idx = MinhashDedupIndex(spark, str(tmp_path / "idx"), backend="txnlog")
-    corpus = make_table(spark, str(tmp_path / "corpus"), "txnlog")
+    idx = MinhashDedupIndex(spark, str(tmp_path / "idx"))
+    corpus = VersionedParquetTable(spark, str(tmp_path / "corpus"))
     ingest = StreamingCorpusIngest(idx, corpus, threshold=0.5)
 
     b0 = spark.createDataFrame(
@@ -415,7 +415,7 @@ def test_extend_explicit_epoch_guard_minhash_and_span(spark, tmp_path):
         "doc_id string, text string",
     )
 
-    idx = MinhashDedupIndex(spark, str(tmp_path / "m"), backend="pointer")
+    idx = MinhashDedupIndex(spark, str(tmp_path / "m"))
     idx.build(docs)
     idx.extend(docs, epoch=5)
     idx.extend(docs, epoch=5)  # replay: same ids, idempotent
@@ -423,7 +423,7 @@ def test_extend_explicit_epoch_guard_minhash_and_span(spark, tmp_path):
         idx.extend(other, epoch=5)
     idx.extend(other)  # default max+1: always fresh
 
-    sidx = SpanDupIndex(spark, str(tmp_path / "s"), backend="pointer")
+    sidx = SpanDupIndex(spark, str(tmp_path / "s"))
     sidx.build(docs)
     sidx.extend(docs, epoch=3)
     sidx.extend(docs, epoch=3)
@@ -439,7 +439,7 @@ def test_streaming_span_cut_contract_survives_mid_batch_crash(spark, tmp_path):
     retry variant."""
     from ig_etl_sync_spark.operators.dedup import MinhashDedupIndex
     from ig_etl_sync_spark.operators.spans import SpanDupIndex
-    from ig_etl_sync_spark.sources.versioned import make_table
+    from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
     from ig_etl_sync_spark.streaming.ingest import StreamingCorpusIngest
 
     from pyspark.sql import functions as F
@@ -450,10 +450,9 @@ def test_streaming_span_cut_contract_survives_mid_batch_crash(spark, tmp_path):
     b2 = docs.where(F.col("source") == "src0").select("doc_id", "text")
 
     def run(root, crash_batch2_corpus_append):
-        idx = MinhashDedupIndex(spark, f"{root}/idx", backend="txnlog")
-        corpus = make_table(spark, f"{root}/corpus", "txnlog")
-        sp = SpanDupIndex(spark, f"{root}/spans", backend="txnlog",
-                          k=8, min_docs=2)
+        idx = MinhashDedupIndex(spark, f"{root}/idx")
+        corpus = VersionedParquetTable(spark, f"{root}/corpus")
+        sp = SpanDupIndex(spark, f"{root}/spans", k=8, min_docs=2)
         ing = StreamingCorpusIngest(idx, corpus, threshold=0.7,
                                     span_index=sp)
         ing.process_batch(b1, 0)

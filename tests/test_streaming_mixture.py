@@ -8,12 +8,12 @@ from pyspark.sql import functions as F
 
 
 def _gate(spark, tmp_path, target):
-    from ig_etl_sync_spark.sources.versioned import make_table
+    from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
     from ig_etl_sync_spark.streaming.mixture_gate import StreamingMixtureGate
 
     return StreamingMixtureGate(
-        make_table(spark, str(tmp_path / "counts"), "txnlog"),
-        make_table(spark, str(tmp_path / "corpus"), "txnlog"),
+        VersionedParquetTable(spark, str(tmp_path / "counts")),
+        VersionedParquetTable(spark, str(tmp_path / "corpus")),
         target_ppm=target,
     )
 

@@ -1,11 +1,11 @@
-"""Batched GraphStore sync (S8: one staging round + one commit claim per
+"""Batched GraphStore sync (S8: one staging round + one pointer flip per
 table per sync — the reference's one-transaction-per-function semantics,
 ``neo4j.go:77-148``) and the stage/commit split it rides on.
 
-Covers: batched ≡ unbatched results across backends, intra-batch read
-visibility, same-table write composition inside a batch, commit counts
-(one per table per batch), crash-between-stage-and-claim invisibility +
-vacuum, and the pointer backend's stage/flip fault injection.
+Covers: batched ≡ unbatched results, intra-batch read visibility,
+same-table write composition inside a batch, commit counts (one per
+table per batch), crash-between-stage-and-commit invisibility + vacuum,
+and fault injection inside the table's stage/rename/flip commit.
 """
 
 from __future__ import annotations
@@ -14,14 +14,10 @@ import os
 import time
 
 import pytest
+from pyspark.sql import functions as F
 
-from ig_etl_sync_spark.operators.graph import GraphStore
-from ig_etl_sync_spark.sources.versioned import (
-    TransactionLogTable,
-    VersionedParquetTable,
-)
-
-BACKENDS = ["pointer", "txnlog", "manifest"]
+from ig_etl_sync_spark.operators.graph import EdgeType, GraphStore
+from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
 
 
 def nodes_df(spark, rows):
@@ -69,10 +65,16 @@ def _drive(g, spark, batched: bool):
         )
 
 
-@pytest.mark.parametrize("backend", BACKENDS)
-def test_batched_sync_matches_unbatched(spark, tmp_path, backend):
-    gb = GraphStore(spark, str(tmp_path / "b"), backend=backend, n_buckets=4)
-    gu = GraphStore(spark, str(tmp_path / "u"), backend=backend, n_buckets=4)
+# One parameter: the ``[pointer]`` id names the table's commit protocol,
+# the ``_LATEST`` pointer flip of sources/versioned.py.
+@pytest.fixture(params=["pointer"])
+def make_graph(spark, tmp_path):
+    return lambda name: GraphStore(spark, str(tmp_path / name), n_buckets=4)
+
+
+def test_batched_sync_matches_unbatched(spark, make_graph):
+    gb = make_graph("b")
+    gu = make_graph("u")
     _drive(gb, spark, batched=True)
     _drive(gu, spark, batched=False)
     assert _collect_edges(gb) == _collect_edges(gu) == [
@@ -87,10 +89,8 @@ def test_batched_sync_matches_unbatched(spark, tmp_path, backend):
 def test_intra_batch_reads_see_pending_and_outside_readers_do_not(
     spark, tmp_path
 ):
-    g = GraphStore(spark, str(tmp_path / "g"), backend="txnlog", n_buckets=4)
-    outside = GraphStore(
-        spark, str(tmp_path / "g"), backend="txnlog", n_buckets=4
-    )
+    g = GraphStore(spark, str(tmp_path / "g"), n_buckets=4)
+    outside = GraphStore(spark, str(tmp_path / "g"), n_buckets=4)
     with g.sync():
         g.write_nodes("org", to_create=nodes_df(spark, [("o1", "O1")]))
         # same-store read observes the pending write...
@@ -109,13 +109,13 @@ def test_intra_batch_reads_see_pending_and_outside_readers_do_not(
 def test_same_table_writes_compose_within_one_batch(spark, tmp_path):
     """Create + full-property re-upsert + delete of ONE label inside a
     single batch must land as one composed commit."""
-    g = GraphStore(spark, str(tmp_path / "g"), backend="txnlog", n_buckets=4)
+    g = GraphStore(spark, str(tmp_path / "g"), n_buckets=4)
     # pre-existing state so the batch merges against a committed prev
     g.write_nodes(
         "org", to_create=nodes_df(spark, [("keep", "K"), ("gone", "G")])
     )
     t = g._node_table("org")
-    commits_before = len(t._commits())
+    assert t.latest_version() == "v000000"
     with g.sync():
         g.write_nodes("org", to_create=nodes_df(spark, [("new", "N1")]))
         g.write_nodes("org", to_create=nodes_df(spark, [("new", "N2")]))
@@ -126,36 +126,32 @@ def test_same_table_writes_compose_within_one_batch(spark, tmp_path):
         )
     rows = {r.external_id: r.name for r in g.nodes("org").collect()}
     assert rows == {"keep": "K", "new": "N2"}
-    # the three writes landed as ONE commit
-    assert len(t._commits()) == commits_before + 1
+    # the three writes landed as ONE commit: the version number moved by 1
+    assert t.latest_version() == "v000001"
 
 
 def test_one_commit_per_table_per_batch(spark, tmp_path):
-    g = GraphStore(spark, str(tmp_path / "g"), backend="txnlog", n_buckets=4)
+    g = GraphStore(spark, str(tmp_path / "g"), n_buckets=4)
     _drive(g, spark, batched=True)
-    # batch 1 committed each of the 3 tables once; batch 2 (delete +
-    # cascade) committed org nodes + the edge table once each
-    assert len(g._node_table("org")._commits()) == 2
-    assert len(g._node_table("project")._commits()) == 1
-    from ig_etl_sync_spark.operators.graph import EdgeType
-
+    # batch 1 committed each of the 3 tables once (v000000); batch 2
+    # (delete + cascade) committed org nodes + the edge table once each
     et = EdgeType("org", "has", "project")
-    assert len(g._edge_table(et)._commits()) == 2
+    assert g._node_table("org").latest_version() == "v000001"
+    assert g._node_table("project").latest_version() == "v000000"
+    assert g._edge_table(et).latest_version() == "v000001"
 
 
-@pytest.mark.parametrize("backend", BACKENDS)
 def test_crash_between_batched_stage_and_claim(
-    spark, tmp_path, backend, monkeypatch
+    spark, tmp_path, make_graph, monkeypatch
 ):
-    """Kill the sync after every table staged but before ANY commit
-    claim: no reader observes anything, and vacuum reclaims the
-    orphaned staging output on every backend."""
-    g = GraphStore(spark, str(tmp_path / "g"), backend=backend, n_buckets=4)
+    """Kill the sync after every table staged but before ANY table
+    claimed its next version (pointer flip): no reader observes
+    anything, and vacuum reclaims the orphaned staging output."""
+    g = make_graph("g")
     g.write_nodes("org", to_create=nodes_df(spark, [("o1", "OLD")]))
 
-    cls = type(g._node_table("org"))
     monkeypatch.setattr(
-        cls, "commit_staged",
+        VersionedParquetTable, "commit_staged",
         lambda self, *a, **k: (_ for _ in ()).throw(OSError("killed")),
     )
     with pytest.raises(OSError):
@@ -184,9 +180,7 @@ def test_crash_between_batched_stage_and_claim(
         path = os.path.join(str(tmp_path / "g"), name)
         if os.path.isdir(path):
             _age(path)
-        from ig_etl_sync_spark.sources.versioned import make_table
-
-        removed += make_table(spark, path, backend).vacuum(
+        removed += VersionedParquetTable(spark, path).vacuum(
             min_age_seconds=3600
         )
     assert removed, "vacuum reclaimed no orphaned staging output"
@@ -195,9 +189,9 @@ def test_crash_between_batched_stage_and_claim(
 
 
 def test_pointer_backend_crash_between_stage_and_flip(spark, tmp_path):
-    """Fault injection for the pointer backend's two-phase flip: a
-    writer that staged a new version but died before the pointer rename
-    is invisible to readers, and the orphan is vacuumable."""
+    """Fault injection for the table's two-phase commit: a writer that
+    staged a new version but died before publishing it is invisible to
+    readers, and the orphan is vacuumable."""
     t = VersionedParquetTable(spark, str(tmp_path / "t"))
     df1 = spark.createDataFrame([("a", 1)], "k string, x int")
     t.write_incremental(df1, "k", {"a"})
@@ -225,6 +219,73 @@ def test_pointer_backend_crash_between_stage_and_flip(spark, tmp_path):
     assert [r.x for r in t.read().collect()] == [1]
 
 
+def test_crash_between_rename_and_flip_is_recoverable(
+    spark, tmp_path, monkeypatch
+):
+    """A commit killed after renaming its staged dir to v(N+1) but
+    before the ``_LATEST`` flip leaves an unpublished version dir. Time
+    travel must not surface it, and the next commit must take the
+    number over instead of failing on the occupied name."""
+    t = VersionedParquetTable(spark, str(tmp_path / "t"))
+    t.write_incremental(
+        spark.createDataFrame([("a", 1)], "k string, x int"), "k", {"a"}
+    )
+    v0 = t.latest_version()
+    staged = t.stage_incremental(
+        spark.createDataFrame([("a", 2)], "k string, x int"), "k", {"a"}
+    )
+
+    real_replace = os.replace
+
+    def crash_once(src, dst):
+        monkeypatch.setattr(os, "replace", real_replace)
+        raise OSError("killed before the pointer flip")
+
+    monkeypatch.setattr(os, "replace", crash_once)
+    with pytest.raises(OSError, match="killed"):
+        t.commit_staged(staged)
+    monkeypatch.undo()
+
+    # the rename landed, the flip did not
+    assert os.path.isdir(os.path.join(t.path, "v000001"))
+    assert t.latest_version() == v0
+    assert t.versions() == [v0]
+    with pytest.raises(ValueError, match="not retained"):
+        t.read_version("v000001")
+    assert [r.x for r in t.read().collect()] == [1]
+
+    # the next commit succeeds past the leftover and publishes its data
+    v1 = t.write_incremental(
+        spark.createDataFrame([("a", 3)], "k string, x int"), "k", {"a"}
+    )
+    assert v1 == "v000001"
+    assert t.versions() == [v0, v1]
+    assert [r.x for r in t.read().collect()] == [3]
+    assert [r.x for r in t.read_version(v1).collect()] == [3]
+
+
+def test_failed_plain_write_leaves_no_listed_version(spark, tmp_path):
+    """A write() whose Spark job dies mid-way must not leave a partial
+    version dir that time travel lists; the next write() publishes
+    normally."""
+    t = VersionedParquetTable(spark, str(tmp_path / "t"))
+    v0 = t.write(spark.createDataFrame([(1,)], "x int"))
+    boom = spark.range(3).select(
+        F.when(F.col("id") == 2, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id"))
+        .alias("x")
+    )
+    with pytest.raises(Exception, match="boom"):
+        t.write(boom)
+    assert t.versions() == [v0]
+    assert not any(
+        d.startswith("v") and d != v0 for d in os.listdir(t.path)
+    )
+    v1 = t.write(spark.createDataFrame([(7,)], "x int"))
+    assert t.versions() == [v0, v1]
+    assert [r.x for r in t.read().collect()] == [7]
+
+
 def test_pointer_stage_commit_roundtrip(spark, tmp_path):
     """The split API publishes exactly like write_incremental."""
     t = VersionedParquetTable(spark, str(tmp_path / "t"))
@@ -243,7 +304,7 @@ def test_pointer_stage_commit_roundtrip(spark, tmp_path):
 
 
 def test_batch_abandoned_on_error_leaves_no_trace(spark, tmp_path):
-    g = GraphStore(spark, str(tmp_path / "g"), backend="manifest", n_buckets=4)
+    g = GraphStore(spark, str(tmp_path / "g"), n_buckets=4)
     with pytest.raises(ValueError, match="boom"):
         with g.sync():
             g.write_nodes("org", to_create=nodes_df(spark, [("o1", "O")]))

@@ -1,28 +1,27 @@
-"""TransactionLogTable commit protocol (sources/versioned.py).
-
-The pointer backend's semantics are covered by the parametrized graph /
-reconcile suites; these tests pin the log-specific guarantees: derived
-head, exclusive commit-number claims, crash invisibility, gc/vacuum.
+"""Commit protocol of the versioned table (sources/versioned.py):
+pointer-derived head, reader isolation, crash invisibility, gc/vacuum,
+time travel, and the incremental-partition write guards.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
 
-from ig_etl_sync_spark.sources.versioned import (
-    DeltaManifestTable,
-    TransactionLogTable,
-    VersionedParquetTable,
-    make_table,
-)
+from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
 
 
 @pytest.fixture()
 def table(spark, tmp_path):
-    return TransactionLogTable(spark, str(tmp_path / "t"))
+    return VersionedParquetTable(spark, str(tmp_path / "t"))
+
+
+# One parameter: the ``[pointer]`` id names the table's commit protocol,
+# the ``_LATEST`` pointer flip.
+@pytest.fixture(params=["pointer"])
+def pointer_table(table):
+    return table
 
 
 def df(spark, *vals):
@@ -33,6 +32,7 @@ def test_empty_table_reads_none(table):
     assert table.read() is None
     assert not table.exists()
     assert table.latest_version() is None
+    assert table.versions() == []
 
 
 def test_write_read_roundtrip_and_head_advances(spark, table):
@@ -40,12 +40,10 @@ def test_write_read_roundtrip_and_head_advances(spark, table):
     assert table.latest_version() == v0
     assert [r["x"] for r in table.read().collect()] == [1]
     v1 = table.write(df(spark, 2))
-    assert v1 != v0
     assert table.latest_version() == v1
     assert [r["x"] for r in table.read().collect()] == [2]
-    # log entries are contiguous from 0
-    logs = sorted(os.listdir(table._log_dir))
-    assert [int(f[:-5]) for f in logs] == [0, 1]
+    # version numbers are contiguous from 0
+    assert [v0, v1] == table.versions() == ["v000000", "v000001"]
 
 
 def test_reader_isolation_across_commit(spark, table):
@@ -56,220 +54,136 @@ def test_reader_isolation_across_commit(spark, table):
     assert [r["x"] for r in table.read().collect()] == [2]
 
 
-def test_claim_is_exclusive(spark, table):
-    """A pre-existing commit file for the next number forces a retry —
-    the writer must land on the number after it, never overwrite."""
-    table.write(df(spark, 1))
-    # squat on commit #1, pointing at the existing data dir
-    v0 = table.latest_version()
-    squat = os.path.join(table._log_dir, f"{1:08d}.json")
-    with open(squat, "w") as f:
-        json.dump({"version": v0, "commit": 1, "ts": 0}, f)
-    v2 = table.write(df(spark, 2))
-    logs = sorted(int(f[:-5]) for f in os.listdir(table._log_dir))
-    assert logs == [0, 1, 2]
-    assert table.latest_version() == v2  # the squatted entry was not clobbered
-    with open(squat) as f:
-        assert json.load(f)["ts"] == 0
-
-
 def test_staged_dir_without_commit_is_invisible(spark, table):
     v0 = table.write(df(spark, 1))
-    # simulate a crashed writer: staged parquet, no log entry
-    df(spark, 99).write.parquet(os.path.join(table.path, "d-deadbeef0000"))
+    # simulate a crashed writer: staged parquet, no pointer flip
+    df(spark, 99).write.parquet(os.path.join(table.path, ".stg-deadbeef0000"))
     assert table.latest_version() == v0
+    assert table.versions() == [v0]
     assert [r["x"] for r in table.read().collect()] == [1]
 
 
 def test_vacuum_respects_age_and_liveness(spark, table):
     table.write(df(spark, 1))
-    orphan = os.path.join(table.path, "d-deadbeef0000")
+    orphan = os.path.join(table.path, ".stg-deadbeef0000")
     df(spark, 99).write.parquet(orphan)
     # young orphan survives
     assert table.vacuum(min_age_seconds=3600) == []
     assert os.path.isdir(orphan)
-    # old orphan is removed; live dir survives
+    # old orphan is removed; the published version survives even when old
     os.utime(orphan, (0, 0))
-    assert table.vacuum(min_age_seconds=3600) == ["d-deadbeef0000"]
+    os.utime(os.path.join(table.path, table.latest_version()), (0, 0))
+    assert table.vacuum(min_age_seconds=3600) == [".stg-deadbeef0000"]
     assert not os.path.isdir(orphan)
     assert [r["x"] for r in table.read().collect()] == [1]
 
 
 def test_gc_bounds_history(spark, table):
     versions = [table.write(df(spark, i), keep=2) for i in range(4)]
-    logs = sorted(os.listdir(table._log_dir))
-    assert len(logs) == 2  # only the newest `keep` commits remain
-    live_dirs = {d for d in os.listdir(table.path) if d.startswith("d-")}
+    assert table.versions() == versions[-2:]  # only the newest `keep`
+    live_dirs = {d for d in os.listdir(table.path) if d.startswith("v")}
     assert live_dirs == set(versions[-2:])
     assert [r["x"] for r in table.read().collect()] == [3]
 
 
-def test_time_travel_both_backends(spark, tmp_path):
+# Named for the two tables it once compared; it now covers the pointer
+# table alone.
+def test_time_travel_both_backends(spark, table):
     """versions() lists retained history in commit order and
-    read_version() reads any retained snapshot — both backends."""
-    for backend in ("pointer", "txnlog", "manifest"):
-        t = make_table(spark, str(tmp_path / backend), backend)
-        v = [t.write(df(spark, i)) for i in range(3)]
-        assert t.versions() == v
-        for i, ver in enumerate(v):
-            assert [r["x"] for r in t.read_version(ver).collect()] == [i]
-        with pytest.raises(ValueError, match="not"):
-            t.read_version("v-nonexistent")
-        # gc'd versions disappear from history and raise on read
-        v3 = t.write(df(spark, 3), keep=2)
-        assert t.versions() == [v[-1], v3]
-        with pytest.raises(ValueError, match="not"):
-            t.read_version(v[0])
+    read_version() reads any retained snapshot."""
+    v = [table.write(df(spark, i)) for i in range(3)]
+    assert table.versions() == v
+    for i, ver in enumerate(v):
+        assert [r["x"] for r in table.read_version(ver).collect()] == [i]
+    with pytest.raises(ValueError, match="not retained"):
+        table.read_version("v-nonexistent")
+    # gc'd versions disappear from history and raise on read
+    v3 = table.write(df(spark, 3), keep=2)
+    assert table.versions() == [v[-1], v3]
+    with pytest.raises(ValueError, match="not retained"):
+        table.read_version(v[0])
 
 
-def test_make_table_dispatch(spark, tmp_path):
-    assert isinstance(
-        make_table(spark, str(tmp_path / "a"), "pointer"), VersionedParquetTable
-    )
-    assert isinstance(
-        make_table(spark, str(tmp_path / "b"), "txnlog"), TransactionLogTable
-    )
-    assert isinstance(
-        make_table(spark, str(tmp_path / "m"), "manifest"), DeltaManifestTable
-    )
-    with pytest.raises(ValueError, match="unknown table backend"):
-        make_table(spark, str(tmp_path / "c"), "nope")
-    # "delta" is always registered; without the optional delta-spark
-    # package construction raises a DESCRIPTIVE ImportError instead
-    from ig_etl_sync_spark.sources.delta_adapter import HAVE_DELTA
-
-    if HAVE_DELTA:
-        from ig_etl_sync_spark.sources.delta_adapter import DeltaLakeTable
-
-        assert isinstance(
-            make_table(spark, str(tmp_path / "d"), "delta"), DeltaLakeTable
-        )
-    else:
-        with pytest.raises(ImportError, match="delta-spark"):
-            make_table(spark, str(tmp_path / "d"), "delta")
-
-
-@pytest.mark.parametrize(
-    "backend_cls",
-    [VersionedParquetTable, TransactionLogTable, DeltaManifestTable],
-)
-def test_schema_evolution_across_versions(spark, tmp_path, backend_cls):
+# One parameter: the id names the class under test, the pointer table.
+@pytest.mark.parametrize("table_cls", [VersionedParquetTable])
+def test_schema_evolution_across_versions(spark, tmp_path, table_cls):
     """Full-replace versioning makes schema change free: a new version
     carries its own schema; time travel reads each version with the
     schema it was written with."""
-    t = backend_cls(spark, str(tmp_path / f"evo_{backend_cls.__name__}"))
+    table = table_cls(spark, str(tmp_path / "evo"))
     v1_df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string")
-    v1 = t.write(v1_df)
+    v1 = table.write(v1_df)
     v2_df = spark.createDataFrame(
         [(1, "a", 0.5), (3, "c", 1.5)], "id long, name string, score double"
     )
-    v2 = t.write(v2_df)
+    v2 = table.write(v2_df)
 
-    latest = t.read()
+    latest = table.read()
     assert set(latest.columns) == {"id", "name", "score"}
     assert latest.count() == 2
-    old = t.read_version(v1)
+    old = table.read_version(v1)
     assert set(old.columns) == {"id", "name"}
     assert {r["id"] for r in old.collect()} == {1, 2}
-    new = t.read_version(v2)
+    new = table.read_version(v2)
     assert {r["score"] for r in new.collect()} == {0.5, 1.5}
 
 
-# --------------------------------------------------- manifest backend
-
-
-@pytest.fixture()
-def mtable(spark, tmp_path):
-    return DeltaManifestTable(spark, str(tmp_path / "m"))
+# --------------------------------------------- incremental partitions
 
 
 def _pdf(spark, rows):
     return spark.createDataFrame(rows, "k string, x int")
 
 
-def test_manifest_incremental_is_metadata_swap(spark, mtable):
-    """Clean partitions must be carried by re-listing the SAME pool
-    files in the new manifest — no links, no copies, no rewrites."""
-    mtable.write_incremental(
-        _pdf(spark, [("a", 1), ("b", 2), ("c", 3)]), "k", {"a", "b", "c"}
-    )
-    e0 = mtable._head_entry()
-    mtable.write_incremental(_pdf(spark, [("b", 20)]), "k", {"b"})
-    e1 = mtable._head_entry()
-    assert e1["manifest"]["a"] == e0["manifest"]["a"]  # identical paths
-    assert e1["manifest"]["c"] == e0["manifest"]["c"]
-    assert e1["manifest"]["b"] != e0["manifest"]["b"]
-    got = {(r.k, r.x) for r in mtable.read().select("k", "x").collect()}
-    assert got == {("a", 1), ("b", 20), ("c", 3)}
+# The ``manifest`` tests below keep the names they had when they ran
+# against a manifest-listing table; they now cover the pointer table.
 
 
-def test_manifest_undeclared_dirty_partition_rejected(spark, mtable):
-    mtable.write_incremental(_pdf(spark, [("a", 1)]), "k", {"a"})
+def test_manifest_undeclared_dirty_partition_rejected(spark, table):
+    table.write_incremental(_pdf(spark, [("a", 1)]), "k", {"a"})
     with pytest.raises(ValueError, match="not declared dirty"):
-        mtable.write_incremental(_pdf(spark, [("z", 9)]), "k", {"a"})
+        table.write_incremental(_pdf(spark, [("z", 9)]), "k", {"a"})
 
 
-def test_manifest_partition_drop_and_empty_table(spark, mtable):
-    mtable.write_incremental(_pdf(spark, [("a", 1), ("b", 2)]), "k", {"a", "b"})
-    # dirty partition absent from df => dropped from the manifest
-    mtable.write_incremental(
+def test_manifest_partition_drop_and_empty_table(spark, table):
+    table.write_incremental(
+        _pdf(spark, [("a", 1), ("b", 2)]), "k", {"a", "b"}
+    )
+    # dirty partition absent from df => dropped from the new version
+    table.write_incremental(
         spark.createDataFrame([], "k string, x int"), "k", {"a"}
     )
-    assert {r.k for r in mtable.read().collect()} == {"b"}
+    assert {r.k for r in table.read().collect()} == {"b"}
     # empty out everything: table stays readable with schema
-    mtable.write_incremental(
+    table.write_incremental(
         spark.createDataFrame([], "k string, x int"), "k", {"b"}
     )
-    out = mtable.read()
+    out = table.read()
     assert out.count() == 0 and set(out.columns) >= {"k", "x"}
 
 
-def test_manifest_gc_never_breaks_shared_files(spark, mtable):
-    """After gc drops the commit that WROTE a clean partition's files,
-    the head manifest still references them — they must survive gc AND
-    an aged vacuum (reference counting, not ownership)."""
-    mtable.write_incremental(
-        _pdf(spark, [("a", 1), ("b", 2)]), "k", {"a", "b"}, keep=1
-    )
-    a_files = mtable._head_entry()["manifest"]["a"]
-    for _i in range(3):  # churn b; commit 0 gets gc'd (keep=1)
-        mtable.write_incremental(_pdf(spark, [("b", 9)]), "k", {"b"}, keep=1)
-    assert len(mtable._commits()) == 1
-    assert mtable._head_entry()["manifest"]["a"] == a_files
-    # age everything, vacuum: shared live files survive, orphans go
-    for root, _d, names in os.walk(mtable.path):
-        for n in names:
-            os.utime(os.path.join(root, n), (0, 0))
-    removed = mtable.vacuum(min_age_seconds=3600)
-    assert removed  # the churned-out b versions were deleted
-    assert all(os.path.exists(os.path.join(mtable.path, p)) for p in a_files)
-    got = {(r.k, r.x) for r in mtable.read().select("k", "x").collect()}
-    assert got == {("a", 1), ("b", 9)}
-
-
-def test_manifest_time_travel_and_reader_isolation(spark, mtable):
-    v0 = mtable.write(_pdf(spark, [("a", 1)]))
-    pinned = mtable.read()
-    v1 = mtable.write(_pdf(spark, [("a", 2)]))
+def test_manifest_time_travel_and_reader_isolation(spark, table):
+    """A frame read before a commit keeps seeing its own version while
+    read_version() serves both."""
+    v0 = table.write(_pdf(spark, [("a", 1)]))
+    pinned = table.read()
+    v1 = table.write(_pdf(spark, [("a", 2)]))
     assert {r.x for r in pinned.collect()} == {1}  # R6 isolation
-    assert {r.x for r in mtable.read_version(v0).collect()} == {1}
-    assert {r.x for r in mtable.read_version(v1).collect()} == {2}
-    with pytest.raises(ValueError, match="not in the retained log"):
-        mtable.read_version("m-nope")
+    assert {r.x for r in table.read_version(v0).collect()} == {1}
+    assert {r.x for r in table.read_version(v1).collect()} == {2}
+    with pytest.raises(ValueError, match="not retained"):
+        table.read_version("v-nope")
 
 
 # ------------------------------------- unpartitioned carry-forward guard
 
 
-@pytest.mark.parametrize(
-    "backend", ["pointer", "txnlog", "manifest"]
-)
-def test_incremental_after_plain_write_refuses_row_loss(spark, tmp_path, backend):
+def test_incremental_after_plain_write_refuses_row_loss(spark, pointer_table):
     """A plain write() stores rows unpartitioned; a following
-    write_incremental used to silently drop them (it links/re-lists
-    only partition dirs). It must now refuse — and succeed when the
-    caller asserts a full rewrite via absorb_unpartitioned=True."""
-    t = make_table(spark, str(tmp_path / backend), backend=backend)
+    write_incremental used to silently drop them (it links only
+    partition dirs). It must now refuse — and succeed when the caller
+    asserts a full rewrite via absorb_unpartitioned=True."""
+    t = pointer_table
     t.write(_pdf(spark, [("a", 1), ("b", 2)]))
     with pytest.raises(ValueError, match="unpartitioned data"):
         t.write_incremental(_pdf(spark, [("c", 3)]), "k", {"c"})
@@ -292,14 +206,11 @@ def test_incremental_after_plain_write_refuses_row_loss(spark, tmp_path, backend
     }
 
 
-@pytest.mark.parametrize(
-    "backend", ["pointer", "txnlog", "manifest"]
-)
-def test_empty_schema_carrier_does_not_trip_guard(spark, tmp_path, backend):
+def test_empty_schema_carrier_does_not_trip_guard(spark, pointer_table):
     """The empty-table fallback stages a ZERO-ROW unpartitioned file so
     the version carries schema — that one is droppable and must not be
     mistaken for plain-write data."""
-    t = make_table(spark, str(tmp_path / backend), backend=backend)
+    t = pointer_table
     empty = spark.createDataFrame([], "k string, x int")
     t.write_incremental(empty, "k", {"z"})
     assert t.read().count() == 0
@@ -307,94 +218,34 @@ def test_empty_schema_carrier_does_not_trip_guard(spark, tmp_path, backend):
     assert {(r.k, r.x) for r in t.read().collect()} == {("a", 1)}
 
 
-# --------------------------------------- staging-crash fault injection
-
-
-@pytest.mark.parametrize(
-    "backend", ["txnlog", "manifest"]
-)
-def test_crash_between_stage_and_commit_is_invisible_and_vacuumable(
-    spark, tmp_path, backend
-):
-    """Kill a writer after it staged data but before it claimed a log
-    entry: readers never see the orphan, versions() is unchanged, a
-    YOUNG orphan survives vacuum (in-flight protection), and an AGED
-    one is reclaimed."""
-    t = make_table(spark, str(tmp_path / backend), backend=backend)
-    t.write(_pdf(spark, [("a", 1)]))
-    head = t.latest_version()
-
-    # simulate the crash: stage exactly like write()/write_incremental
-    # do, then never claim
-    if backend == "manifest":
-        orphan = "m-deadbeef0000"
-        t._stage_files(_pdf(spark, [("z", 99)]), orphan)
-        orphan_dir = os.path.join(t.path, t._FILES, orphan)
-    else:
-        orphan = "d-deadbeef0000"
-        orphan_dir = os.path.join(t.path, orphan)
-        _pdf(spark, [("z", 99)]).write.parquet(orphan_dir)
-
-    assert os.path.isdir(orphan_dir)
-    assert t.latest_version() == head
-    assert {r.k for r in t.read().collect()} == {"a"}  # orphan invisible
-    assert orphan not in t.versions()
-
-    # a young in-flight staging dir must survive vacuum
-    assert t.vacuum(min_age_seconds=3600) == []
-    assert os.path.isdir(orphan_dir)
-
-    # age it out: vacuum reclaims the never-committed staging
-    for root, _d, names in os.walk(t.path):
-        for n in names:
-            os.utime(os.path.join(root, n), (0, 0))
-    os.utime(orphan_dir, (0, 0))
-    removed = t.vacuum(min_age_seconds=3600)
-    assert removed
-    if backend == "manifest":
-        # pool vacuum unlinks the orphan's parquet files (the dir may
-        # keep a _SUCCESS marker — only data files are reference-counted)
-        leftover = []
-        for root, _d, names in os.walk(orphan_dir):
-            leftover += [n for n in names if n.endswith(".parquet")]
-        assert leftover == []
-    else:
-        assert not os.path.isdir(orphan_dir)
-    # committed data untouched
-    assert {r.k for r in t.read().collect()} == {"a"}
-
-
 def test_has_partition_driver_side_probe(spark, tmp_path):
     """has_partition: False only when the partition provably does not
     exist; True for present partitions AND (conservatively) when the
-    head version holds unpartitioned rows. All three backends."""
+    head version holds unpartitioned rows."""
     from pyspark.sql import functions as F
-    from ig_etl_sync_spark.sources.versioned import make_table
 
     df = spark.range(4).select(
         F.col("id"), (F.col("id") % 2).cast("int").alias("ep")
     )
-    for backend in ("pointer", "txnlog", "manifest"):
-        t = make_table(spark, str(tmp_path / f"hp_{backend}"), backend)
-        assert t.has_partition("ep", "0") is False  # unbuilt table
-        t.write_incremental(df, "ep", {"0", "1"})
-        assert t.has_partition("ep", "0") is True
-        assert t.has_partition("ep", "1") is True
-        assert t.has_partition("ep", "7") is False
-        # a plain write() stores unpartitioned rows -> conservative True
-        t2 = make_table(spark, str(tmp_path / f"hpu_{backend}"), backend)
-        t2.write(df)
-        assert t2.has_partition("ep", "7") is True
+    t = VersionedParquetTable(spark, str(tmp_path / "hp"))
+    assert t.has_partition("ep", "0") is False  # unbuilt table
+    t.write_incremental(df, "ep", {"0", "1"})
+    assert t.has_partition("ep", "0") is True
+    assert t.has_partition("ep", "1") is True
+    assert t.has_partition("ep", "7") is False
+    # a plain write() stores unpartitioned rows -> conservative True
+    t2 = VersionedParquetTable(spark, str(tmp_path / "hpu"))
+    t2.write(df)
+    assert t2.has_partition("ep", "7") is True
 
 
-def test_cluster_false_file_count_stays_bounded(spark, tmp_path):
-    """VERDICT r08 #3: the ``cluster=False`` skip-the-exchange path must
-    not emit tasks-many files when a caller hands a tiny single-epoch
-    batch on an artificially wide frame — the narrow coalesce pins the
+def test_cluster_false_file_count_stays_bounded(spark, table):
+    """The ``cluster=False`` skip-the-exchange path must not emit
+    tasks-many files when a caller hands a tiny single-epoch batch on
+    an artificially wide frame — the narrow coalesce pins the
     per-commit file count at defaultParallelism (a no-op for AQE-sized
-    and compact-laid-out callers). All three backends."""
+    and compact-laid-out callers)."""
     from pyspark.sql import functions as F
-    from ig_etl_sync_spark.sources.versioned import make_table
 
     cores = spark.sparkContext.defaultParallelism
     wide = (
@@ -402,12 +253,10 @@ def test_cluster_false_file_count_stays_bounded(spark, tmp_path):
         .repartition(cores * 8)  # deliberately wider than the data
         .select(F.col("id"), F.lit(1).cast("int").alias("ep"))
     )
-    for backend in ("pointer", "txnlog", "manifest"):
-        t = make_table(spark, str(tmp_path / f"cfc_{backend}"), backend)
-        t.write_incremental(wide, "ep", {"1"}, cluster=False)
-        n_files = 0
-        for root, _dirs, names in os.walk(str(tmp_path / f"cfc_{backend}")):
-            n_files += sum(1 for n in names if n.endswith(".parquet"))
-        assert n_files <= cores, (backend, n_files, cores)
-        # contents unchanged by the pin
-        assert t.read().count() == 10
+    table.write_incremental(wide, "ep", {"1"}, cluster=False)
+    n_files = 0
+    for _root, _dirs, names in os.walk(table.path):
+        n_files += sum(1 for n in names if n.endswith(".parquet"))
+    assert n_files <= cores, (n_files, cores)
+    # contents unchanged by the pin
+    assert table.read().count() == 10

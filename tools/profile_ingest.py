@@ -23,7 +23,7 @@ from ig_etl_sync_spark.session import get_spark  # noqa: E402
 from ig_etl_sync_spark.operators.dedup import MinhashDedupIndex  # noqa: E402
 from ig_etl_sync_spark.operators.spans import SpanDupIndex  # noqa: E402
 from ig_etl_sync_spark.sources.catalog import load_table  # noqa: E402
-from ig_etl_sync_spark.sources.versioned import make_table  # noqa: E402
+from ig_etl_sync_spark.sources.versioned import VersionedParquetTable  # noqa: E402
 from ig_etl_sync_spark.streaming.ingest import StreamingCorpusIngest  # noqa: E402
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
@@ -62,11 +62,9 @@ def run_once(report: bool) -> None:
     docs = load_table(spark, sf_dir, "documents")
     b1 = docs.where(F.col("source") != "src0").select("doc_id", "text")
     b2 = docs.where(F.col("source") == "src0").select("doc_id", "text")
-    idx = MinhashDedupIndex(spark, f"{root}/idx", backend="txnlog")
-    corpus = make_table(spark, f"{root}/corpus", "txnlog")
-    span_idx = SpanDupIndex(
-        spark, f"{root}/spans", backend="txnlog", k=8, min_docs=2
-    )
+    idx = MinhashDedupIndex(spark, f"{root}/idx")
+    corpus = VersionedParquetTable(spark, f"{root}/corpus")
+    span_idx = SpanDupIndex(spark, f"{root}/spans", k=8, min_docs=2)
     for name in ("write_incremental", "read"):
         orig = getattr(corpus, name)
 
