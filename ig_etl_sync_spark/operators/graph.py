@@ -102,8 +102,6 @@ class GraphStore:
         self.n_buckets = n_buckets
         #: active sync batch: {table_key: (table, full_view, dirty, absorb)}
         self._pending: dict | None = None
-        #: frames cached for intra-batch sharing (unpersisted post-commit)
-        self._shared: list[DataFrame] = []
         os.makedirs(root, exist_ok=True)
 
     # -- S8: batched sync (one staging round + one commit per table) --
@@ -113,7 +111,8 @@ class GraphStore:
         shared staging round followed by one pointer flip per touched
         table — the reference's one-transaction-per-sync-function
         semantics (``neo4j.go:77-148``: upsert + delete land in a
-        single Neo4j transaction, not one per statement).
+        single Neo4j transaction, not one per statement). A write
+        outside the context is a one-call batch of its own.
 
         Inside the batch, reads (:meth:`nodes`, :meth:`edges`, and the
         internal merge/cascade reads) observe pending writes; outside
@@ -122,9 +121,7 @@ class GraphStore:
         schedules jobs from multiple threads fairly), then the cheap
         pointer flips land sequentially. A crash before the flips
         leaves only unpublished ``.stg-*`` staging dirs — invisible to
-        every reader and reclaimed by each table's ``vacuum()`` —
-        exactly the orphan shape of a crash inside a lone
-        ``write_incremental``, so batching adds no new failure mode.
+        every reader and reclaimed by each table's ``vacuum()``.
         """
         if self._pending is not None:
             raise RuntimeError("a sync batch is already active on this store")
@@ -133,31 +130,18 @@ class GraphStore:
             yield self
         except BaseException:
             self._pending = None  # abandon: nothing staged or visible
-            shared, self._shared = self._shared, []
-            for df in shared:
-                df.unpersist(blocking=False)
             raise
         pending, self._pending = self._pending, None
-        self._commit_pending(pending)
+        self._stage_and_commit(pending)
 
     def _all_buckets(self) -> set[str]:
         return {str(b) for b in range(self.n_buckets)}
 
-    def _share(self, df: DataFrame) -> DataFrame:
+    @staticmethod
+    def _share(df: DataFrame) -> DataFrame:
         """Protect a frame consumed by several downstream branches from
-        re-evaluation (the diamond rule). Outside a batch this is
-        ``localCheckpoint(eager=False)`` as everywhere in the repo;
-        inside a batch it is ``cache()`` + deferred unpersist instead —
-        localCheckpoint pays full physical planning + codegen AT CALL
-        TIME (~0.2-0.7 s driver-side per frame, measured), which
-        serializes the batch's defer phase, while cache() defers
-        planning to first use and the CacheManager dedupes concurrent
-        materialization across the parallel staging threads."""
-        if self._pending is None:
-            return df.localCheckpoint(eager=False)
-        df = df.cache()
-        self._shared.append(df)
-        return df
+        re-evaluation (the diamond rule), as everywhere in the repo."""
+        return df.localCheckpoint(eager=False)
 
     def _read_table(self, key: tuple[str, str], table) -> DataFrame | None:
         """Latest content of a table, overlay-aware: a pending write in
@@ -175,18 +159,13 @@ class GraphStore:
         absorb: bool,
         prev_view: DataFrame | None,
     ) -> None:
-        """Land one table write: immediately outside a batch, deferred
-        (with an overlay view for intra-batch readers) inside one.
+        """Defer one table write to the active batch, with an overlay
+        view for intra-batch readers.
 
         ``merged`` holds exactly the surviving rows of the ``dirty``
         buckets; ``prev_view`` is the table's full prior content (the
         overlay view when pending, else the committed read; None for a
         new table)."""
-        if self._pending is None:
-            table.write_incremental(
-                merged, GBUCKET, dirty, absorb_unpartitioned=absorb
-            )
-            return
         if prev_view is None or absorb:
             # merged IS the full view; the caller already checkpointed
             # the expensive frame feeding it, so another checkpoint
@@ -209,17 +188,6 @@ class GraphStore:
             dirty = acc_dirty | dirty
             absorb = acc_absorb or absorb
         self._pending[key] = (table, view, dirty, absorb)
-
-    def _commit_pending(self, pending: dict) -> None:
-        try:
-            self._stage_and_commit(pending)
-        finally:
-            # release intra-batch shared caches on success AND on a
-            # failed staging/commit (a long-lived sync loop would
-            # otherwise grow the CacheManager without bound)
-            shared, self._shared = self._shared, []
-            for df in shared:
-                df.unpersist(blocking=False)
 
     def _stage_and_commit(self, pending: dict) -> None:
         if not pending:
@@ -356,6 +324,9 @@ class GraphStore:
         read (partition-pruned) and rewritten; every clean bucket of
         the previous version is hard-linked through unchanged.
         """
+        if self._pending is None:  # a lone write is a one-call batch
+            with self.sync():
+                return self.write_nodes(label, to_create, to_delete)
         key = ("nodes", label)
         table = self._node_table(label)
         prev = self._read_table(key, table)
@@ -490,6 +461,9 @@ class GraphStore:
         diff outputs and any frame that just ran its own identity dedup
         qualify; when in doubt leave it False (a violated assertion
         surfaces as duplicate edges in the table)."""
+        if self._pending is None:  # a lone write is a one-call batch
+            with self.sync():
+                return self.write_edges(a_label, rel, b_label, edges, assume_unique)
         et = EdgeType(a_label, rel, b_label)
         self._register_edge(et)
 

@@ -18,7 +18,7 @@ Re-expresses ``internal/recon/recon.go`` as declarative DataFrame ops:
 - R7 state namespacing (``model/model.go:33-44``): state laid out by
   ``integration_key/function_key`` directory partitions.
 - R8 convergence check (``main.go:224-237``): re-diff after commit must
-  be empty.
+  be empty — checked as committed snapshot == snapshot of the batch.
 
 Scale posture: the snapshot table replaces the reference's process-memory
 map (``recon.go:13``) — the one deliberate structural divergence, since
@@ -54,8 +54,8 @@ class DiffResult:
     to_delete: DataFrame
 
     def is_empty(self) -> bool:
-        """True iff the diff is a fixpoint (used by the R8 convergence
-        check). Two cheap limit-1 scans, not full counts."""
+        """True iff the diff is a fixpoint. Two cheap limit-1 scans,
+        not full counts."""
         return (
             self.to_create.limit(1).count() == 0
             and self.to_delete.limit(1).count() == 0
@@ -251,15 +251,26 @@ class Reconciler:
         key_col: str = KEY_COL,
         prefer_cols: Sequence[str] = DEFAULT_PREFER_COLS,
     ) -> None:
-        """R8 (``main.go:224-237``): post-commit re-diff must be empty."""
-        diff = self.reconcile(
-            integration_key, function_key, incoming,
-            key_col=key_col, prefer_cols=prefer_cols,
-        )
-        if not diff.is_empty():
+        """R8 (``main.go:224-237``): post-commit re-diff must be empty,
+        checked as committed snapshot == ``snapshot_of(incoming)`` (the
+        frame :meth:`commit` writes), so a key listed twice with two
+        change hashes collapses here as it did there. One full-outer
+        join, probed by one ``limit(1)`` action."""
+        want = snapshot_of(incoming, key_col=key_col, prefer_cols=prefer_cols)
+        got = self.store.read(integration_key, function_key)
+        if got is None:
+            drift = want
+        else:
+            got = got.select(
+                F.col(KEY_COL).alias("_got_id"), F.col(HASH_COL).alias("_got_hash")
+            )
+            drift = want.join(got, want[KEY_COL] == got._got_id, "full_outer").where(
+                ~F.col(HASH_COL).eqNullSafe(F.col("_got_hash"))
+            )
+        if drift.limit(1).count():
             raise AssertionError(
                 f"convergence check failed for {integration_key}/{function_key}: "
-                "re-reconcile after commit produced a non-empty diff"
+                "the committed snapshot differs from the incoming batch's"
             )
 
 

@@ -7,18 +7,19 @@
   ``DataFrame → DataFrame`` patch applied to the fetched doc before the
   transforms (the reference uses it to simulate source deletions).
 - C3 sync loop: one ``run()`` per tick; Structured Streaming's
-  ``foreachBatch`` (``streaming/sync.py``) is the scale-up.
-- C5 fail-fast: any error raises; the Reconcile/Commit split means a
-  mid-pipeline failure leaves that function's snapshot uncommitted, so
-  a retry converges (at-least-once + idempotent sinks).
-
-Per-function flow (``main.go:158-237``): transform → reconcile (diff vs
-snapshot) → sink write → snapshot commit → convergence assert.
+  ``foreachBatch`` (``streaming/sync.py``) is the scale-up. Both run
+  each function through :func:`sync_function`, the one sync step:
+  reconcile (diff pinned) → ``limit(1)`` emptiness probes → sink inside
+  one ``graph.sync()`` → snapshot commit (merge on a delta tick) → R8
+  (full-state ticks only) → exact counts from the pinned diff.
+- C5 fail-fast: any error raises, and a retry converges (at-least-once
+  + idempotent sinks): before the snapshot commit the old snapshot
+  re-derives the same diff for an idempotent sink; after it the diff
+  is empty.
 """
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -51,6 +52,14 @@ class FunctionSpec:
     def is_relation(self) -> bool:
         return self.transform.kind == RELATION
 
+    @property
+    def target(self) -> str | tuple[str, str, str]:
+        """What :func:`sync_function` writes: edge type or node label."""
+        target = self.edge if self.is_relation else self.label
+        if target is None:
+            raise ValueError(f"{self.key}: no edge labels / node label")
+        return target
+
 
 @dataclass(frozen=True)
 class IntegrationSpec:
@@ -66,7 +75,68 @@ class IntegrationSpec:
 class RunReport:
     created: dict[str, int] = field(default_factory=dict)
     deleted: dict[str, int] = field(default_factory=dict)
-    durations: dict[str, float] = field(default_factory=dict)  # S9 instrumentation
+
+
+def sync_function(
+    reconciler: Reconciler,
+    graph: GraphStore,
+    integration_key: str,
+    function_key: str,
+    target: str | tuple[str, str, str],
+    records: DataFrame,
+    *,
+    delta: bool,
+) -> tuple[int, int]:
+    """Sync one function's ``records`` into ``graph`` (module C3/C5).
+
+    ``target`` is a node label, or a relation's ``(a_label, rel,
+    b_label)`` (R2: never diffed or committed). A full-state tick
+    (``delta=False``) deletes absent keys, replaces the snapshot and
+    runs R8; a delta tick leaves absent keys alone, merges the snapshot
+    and skips R8. Returns the exact ``(created, deleted)`` counts.
+    """
+    is_relation = isinstance(target, tuple)
+    records = records.cache()
+    pinned = [records]
+    try:
+        diff = reconciler.reconcile(
+            integration_key, function_key, records, is_relation=is_relation
+        )
+        # pin the diff: its join runs once, and the counts at the end
+        # read what the sink materialized (a relation's diff IS records)
+        to_create = diff.to_create if is_relation else diff.to_create.cache()
+        to_delete = None if is_relation or delta else diff.to_delete.cache()
+        pinned += [to_create, to_delete]
+        has_create = is_relation or to_create.limit(1).count() > 0
+        has_delete = to_delete is not None and to_delete.limit(1).count() > 0
+
+        # S8: one transaction per sync function (neo4j.go:77-148) — the
+        # node upsert+delete AND its DETACH-cascade edge rewrites share
+        # one staging round and land one pointer flip per table
+        with graph.sync():
+            if is_relation:
+                graph.write_edges(*target, edges=to_create)
+            else:
+                graph.write_nodes(
+                    target,
+                    to_create=to_create if has_create else None,
+                    to_delete=to_delete if has_delete else None,
+                )
+
+        if not is_relation:  # R2: a relation keeps no snapshot
+            if delta:
+                reconciler.commit_merge(integration_key, function_key, records)
+            else:
+                reconciler.commit(integration_key, function_key, records)
+                reconciler.assert_converged(integration_key, function_key, records)
+        return (
+            to_create.count() if has_create else 0,
+            to_delete.count() if has_delete else 0,
+        )
+    finally:
+        for frame in pinned:
+            if frame is not None:
+                frame.unpersist()
 
 
 class PipelineRunner:
@@ -77,80 +147,31 @@ class PipelineRunner:
         self.reconciler = Reconciler(snapshots)
         self.graph = graph
 
-    def run(
-        self,
-        integration: IntegrationSpec,
-        pre_hook: Callable[[DataFrame], DataFrame] | None = None,
-        check_convergence: bool = True,
-    ) -> RunReport:
+    def run(self, integration: IntegrationSpec) -> RunReport:
         report = RunReport()
         doc = integration.source(self.spark)
-        hook = pre_hook or integration.pre_hook
-        if hook is not None:
-            doc = hook(doc)  # C2
+        if integration.pre_hook is not None:
+            doc = integration.pre_hook(doc)  # C2
         # The doc feeds all N transforms — cache it once rather than
         # re-reading/refetching per function.
         doc = doc.cache()
         try:
             for fn in integration.functions:
-                t0 = time.monotonic()
-                records = fn.transform.apply(doc).cache()
-                try:
-                    diff = self.reconciler.reconcile(
-                        integration.key, fn.key, records, is_relation=fn.is_relation
-                    )
-                    n_create = diff.to_create.count()
-                    n_delete = diff.to_delete.count()
-
-                    # S8: one transaction per sync function
-                    # (neo4j.go:77-148) — the node upsert+delete AND its
-                    # DETACH-cascade edge rewrites share one staging
-                    # round and land one pointer flip per table
-                    with self.graph.sync():
-                        if fn.is_relation:
-                            if fn.edge is None:
-                                raise ValueError(
-                                    f"{fn.key}: relation without edge labels"
-                                )
-                            self.graph.write_edges(*fn.edge, edges=diff.to_create)
-                        else:
-                            if fn.label is None:
-                                raise ValueError(f"{fn.key}: node without label")
-                            self.graph.write_nodes(
-                                fn.label,
-                                to_create=diff.to_create if n_create else None,
-                                to_delete=diff.to_delete if n_delete else None,
-                            )
-
-                    self.reconciler.commit(
-                        integration.key, fn.key, records, is_relation=fn.is_relation
-                    )
-                    if check_convergence and not fn.is_relation:
-                        self.reconciler.assert_converged(
-                            integration.key, fn.key, records
-                        )  # R8
-                    report.created[fn.key] = n_create
-                    report.deleted[fn.key] = n_delete
-                    report.durations[fn.key] = time.monotonic() - t0
-                finally:
-                    records.unpersist()
+                created, deleted = sync_function(
+                    self.reconciler, self.graph, integration.key, fn.key,
+                    fn.target, fn.transform.apply(doc), delta=False,
+                )
+                report.created[fn.key] = created
+                report.deleted[fn.key] = deleted
         finally:
             doc.unpersist()
         return report
 
-
-    def run_all(
-        self,
-        integrations: list[IntegrationSpec],
-        check_convergence: bool = True,
-    ) -> dict[str, RunReport]:
+    def run_all(self, integrations: list[IntegrationSpec]) -> dict[str, RunReport]:
         """C3 loop (``main.go:281-296``): run every integration in
         order; fail-fast on error (C5) — completed functions keep their
         committed snapshots, so a retry converges."""
-        return {
-            integ.key: self.run(integ, check_convergence=check_convergence)
-            for integ in integrations
-        }
+        return {integ.key: self.run(integ) for integ in integrations}
 
 
 def packer_registry_integration(

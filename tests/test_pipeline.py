@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+import copy
+from dataclasses import replace
+
 import pytest
 
 from ig_etl_sync_spark.operators.graph import GraphStore
@@ -45,7 +48,6 @@ def test_second_sync_is_noop(spark, runner, source_doc):
     """Invariant 1 (main.go:224-237): unchanged input ⇒ empty diff."""
     runner.run(integration(source_doc))
     report2 = runner.run(integration(source_doc))
-    assert all(v == 0 for v in report2.created.values() if "CREATE_NODE" in str(v) or True) or True
     node_creates = {
         k: v for k, v in report2.created.items() if k.startswith("CREATE_NODE")
     }
@@ -65,7 +67,7 @@ def test_emptied_source_deletes_everything(spark, runner, source_doc):
             "buckets", F.filter("buckets", lambda b: F.lit(False))
         )
 
-    report = runner.run(integration(source_doc), pre_hook=empty_buckets)
+    report = runner.run(replace(integration(source_doc), pre_hook=empty_buckets))
     g = runner.graph
     assert g.nodes("bucket").count() == 0
     assert g.nodes("org").count() == 0
@@ -82,3 +84,17 @@ def test_incremental_update_flows_one_key(spark, runner, source_doc):
     report = runner.run(integration(source_doc))
     assert report.created["CREATE_NODE:bucket"] == 1
     assert report.deleted["CREATE_NODE:bucket"] == 0
+
+
+def test_duplicate_key_with_different_updated_at_converges(spark, runner, source_doc):
+    """A bucket listed twice with different ``updated-at``: the commit
+    collapses the key to one snapshot row, and R8 compares against that
+    same collapsed form, so the sync converges and the graph keeps one
+    row per key."""
+    dup = copy.deepcopy(source_doc["buckets"][0])
+    dup["updated-at"] = "2099-01-01T00:00:00Z"
+    source_doc["buckets"].append(dup)
+    runner.run(integration(source_doc))
+    buckets = runner.graph.nodes("bucket")
+    assert buckets.count() == 3
+    assert buckets.select("external_id").distinct().count() == 3
