@@ -455,24 +455,20 @@ def graph_detach_cascade_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["a_id", "b_id"])
         .cache()
     )
-    # S8 batched sync: the three creates share ONE staging round (all
-    # tables staged concurrently) and land one pointer flip per table —
-    # the reference's one-transaction-per-sync-function semantics
-    with store.sync():
-        store.write_nodes(
-            "supplier",
-            to_create=sup.select(
-                F.col("s_suppkey").cast("string").alias("external_id"),
-                F.col("s_name").alias("name"),
-            ),
-        )
-        store.write_nodes(
-            "part",
-            to_create=edges.select(F.col("b_id").alias("external_id")).distinct(),
-        )
-        store.write_edges(
-            "supplier", "supplies", "part", edges, assume_unique=True
-        )
+    # one sync function per table, in the pipeline's order: the node
+    # writes land before the edge merge validates against them
+    store.write_nodes(
+        "supplier",
+        to_create=sup.select(
+            F.col("s_suppkey").cast("string").alias("external_id"),
+            F.col("s_name").alias("name"),
+        ),
+    )
+    store.write_nodes(
+        "part",
+        to_create=edges.select(F.col("b_id").alias("external_id")).distinct(),
+    )
+    store.write_edges("supplier", "supplies", "part", edges, assume_unique=True)
     doomed = (
         sup.join(
             F.broadcast(nat.where(F.col("n_name") == "GERMANY")),
@@ -481,9 +477,8 @@ def graph_detach_cascade_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("s_suppkey").cast("string").alias("external_id"))
     )
-    # the delete sync: node removal + DETACH cascade, one batch
-    with store.sync():
-        store.write_nodes("supplier", to_delete=doomed)
+    # the delete sync: node removal + DETACH cascade, one transaction
+    store.write_nodes("supplier", to_delete=doomed)
     # the result reads committed files, not the scratch frame
     edges.unpersist(blocking=False)
     return store.edges("supplier", "supplies", "part").select("a_id", "b_id")

@@ -18,9 +18,12 @@ relational tables + MERGE-style DataFrame ops:
 - S7 index DDL (``neo4j.go:54-71``): no Catalyst analog needed; the
   physical equivalent at scale is bucketing/Z-ORDER on ``external_id``
   (noted, not required for parity).
-- S8 transactionality (``neo4j.go:77-81,148``): each table write is an
-  atomic version flip; upsert+delete for one function is folded into ONE
-  write per table, preserving the reference's per-function atomicity.
+- S8 transactionality (``neo4j.go:77-81,148``): one write call is one
+  transaction. ``write_nodes`` folds the upsert and the delete into ONE
+  node-table write and adds one write per edge table its DETACH cascade
+  rewrites; the writes stage concurrently, then land one atomic version
+  flip per table — the reference's per-function atomicity, since a
+  sync function issues exactly one write call.
 
 Scale posture: node and edge tables ARE hash-bucketed —
 ``gbucket = pmod(xxhash64(key), n_buckets)`` partition directories
@@ -43,7 +46,6 @@ from __future__ import annotations
 import json
 import os
 import uuid
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -100,39 +102,7 @@ class GraphStore:
         self.spark = spark
         self.root = root
         self.n_buckets = n_buckets
-        #: active sync batch: {table_key: (table, full_view, dirty, absorb)}
-        self._pending: dict | None = None
         os.makedirs(root, exist_ok=True)
-
-    # -- S8: batched sync (one staging round + one commit per table) --
-    @contextmanager
-    def sync(self):
-        """Batch every table write issued inside the context into ONE
-        shared staging round followed by one pointer flip per touched
-        table — the reference's one-transaction-per-sync-function
-        semantics (``neo4j.go:77-148``: upsert + delete land in a
-        single Neo4j transaction, not one per statement). A write
-        outside the context is a one-call batch of its own.
-
-        Inside the batch, reads (:meth:`nodes`, :meth:`edges`, and the
-        internal merge/cascade reads) observe pending writes; outside
-        readers see nothing until the context exits. The expensive
-        staging writes of all touched tables run CONCURRENTLY (Spark
-        schedules jobs from multiple threads fairly), then the cheap
-        pointer flips land sequentially. A crash before the flips
-        leaves only unpublished ``.stg-*`` staging dirs — invisible to
-        every reader and reclaimed by each table's ``vacuum()``.
-        """
-        if self._pending is not None:
-            raise RuntimeError("a sync batch is already active on this store")
-        self._pending = {}
-        try:
-            yield self
-        except BaseException:
-            self._pending = None  # abandon: nothing staged or visible
-            raise
-        pending, self._pending = self._pending, None
-        self._stage_and_commit(pending)
 
     def _all_buckets(self) -> set[str]:
         return {str(b) for b in range(self.n_buckets)}
@@ -143,75 +113,30 @@ class GraphStore:
         re-evaluation (the diamond rule), as everywhere in the repo."""
         return df.localCheckpoint(eager=False)
 
-    def _read_table(self, key: tuple[str, str], table) -> DataFrame | None:
-        """Latest content of a table, overlay-aware: a pending write in
-        the active batch shadows the committed version."""
-        if self._pending is not None and key in self._pending:
-            return self._pending[key][1]
-        return table.read()
+    @staticmethod
+    def _stage_and_commit(writes: list[tuple]) -> None:
+        """Land one write call's table writes as one transaction (S8):
+        ``writes`` holds ``(table, rows of the dirty buckets, dirty)``
+        per touched table. Every table's (expensive) staging write runs
+        CONCURRENTLY (Spark schedules jobs from multiple threads
+        fairly), then the cheap pointer flips land one per table. A
+        crash before the flips leaves only unpublished ``.stg-*``
+        staging dirs — invisible to every reader and reclaimed by each
+        table's ``vacuum()``."""
 
-    def _write_table(
-        self,
-        key: tuple[str, str],
-        table,
-        merged: DataFrame,
-        dirty: set[str],
-        absorb: bool,
-        prev_view: DataFrame | None,
-    ) -> None:
-        """Defer one table write to the active batch, with an overlay
-        view for intra-batch readers.
+        def _stage(write):
+            table, df, dirty = write
+            return table.stage_incremental(df, GBUCKET, dirty)
 
-        ``merged`` holds exactly the surviving rows of the ``dirty``
-        buckets; ``prev_view`` is the table's full prior content (the
-        overlay view when pending, else the committed read; None for a
-        new table)."""
-        if prev_view is None or absorb:
-            # merged IS the full view; the caller already checkpointed
-            # the expensive frame feeding it, so another checkpoint
-            # layer would just re-materialize the same rows
-            view = merged
-        else:
-            # compose with the NEW dirty set only: prev_view (the
-            # overlay) already carries earlier pending changes, whose
-            # buckets must survive this filter. The composed view is
-            # read by later batch steps AND the final staging —
-            # checkpoint so the merge plan runs once.
-            view = prev_view.where(
-                ~F.col(GBUCKET).isin([int(b) for b in dirty])
-            )
-            view = self._share(
-                view.unionByName(merged, allowMissingColumns=True)
-            )
-        if key in self._pending:
-            table, _view, acc_dirty, acc_absorb = self._pending[key]
-            dirty = acc_dirty | dirty
-            absorb = acc_absorb or absorb
-        self._pending[key] = (table, view, dirty, absorb)
-
-    def _stage_and_commit(self, pending: dict) -> None:
-        if not pending:
-            return
-        specs = []
-        for table, view, dirty, absorb in pending.values():
-            df = view.where(F.col(GBUCKET).isin([int(b) for b in dirty]))
-            specs.append((table, df, dirty, absorb))
-
-        def _stage(spec):
-            table, df, dirty, absorb = spec
-            return table.stage_incremental(
-                df, GBUCKET, dirty, absorb_unpartitioned=absorb
-            )
-
-        if len(specs) == 1:
-            staged = [_stage(specs[0])]
+        if len(writes) == 1:
+            staged = [_stage(writes[0])]
         else:
             from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=min(8, len(specs))) as ex:
-                staged = list(ex.map(_stage, specs))
+            with ThreadPoolExecutor(max_workers=min(8, len(writes))) as ex:
+                staged = list(ex.map(_stage, writes))
         # all staging succeeded — land the (cheap, atomic) pointer flips
-        for (table, *_), stage_dir in zip(specs, staged):
+        for (table, *_), stage_dir in zip(writes, staged):
             table.commit_staged(stage_dir)
 
     # -- bucketing ---------------------------------------------------
@@ -300,17 +225,12 @@ class GraphStore:
         return df
 
     def nodes(self, label: str) -> DataFrame | None:
-        return self._strip(
-            self._read_table(("nodes", label), self._node_table(label))
-        )
+        return self._strip(self._node_table(label).read())
 
     def edges(self, a_label: str, rel: str, b_label: str) -> DataFrame | None:
-        et = EdgeType(a_label, rel, b_label)
-        return self._strip(
-            self._read_table(("edges", et.table_name), self._edge_table(et))
-        )
+        return self._strip(self._edge_table(EdgeType(a_label, rel, b_label)).read())
 
-    # -- S4 + S6 folded: one atomic write per function ---------------
+    # -- S4 + S6 folded: one transaction per write call --------------
     def write_nodes(
         self,
         label: str,
@@ -318,18 +238,19 @@ class GraphStore:
         to_delete: DataFrame | None = None,
     ) -> None:
         """Upsert ``to_create`` (full-property replace) and delete keys in
-        ``to_delete`` (with DETACH cascade), as one table version flip.
+        ``to_delete`` with their DETACH cascade, as one transaction: one
+        version flip of the node table plus one per edge table the
+        cascade rewrites.
 
         Incremental: only buckets containing a created/deleted key are
         read (partition-pruned) and rewritten; every clean bucket of
-        the previous version is hard-linked through unchanged.
+        the previous version is hard-linked through unchanged. An empty
+        diff (no creates, and no deletes or no table) writes nothing.
         """
-        if self._pending is None:  # a lone write is a one-call batch
-            with self.sync():
-                return self.write_nodes(label, to_create, to_delete)
-        key = ("nodes", label)
         table = self._node_table(label)
-        prev = self._read_table(key, table)
+        if to_create is None and (to_delete is None or not table.exists()):
+            return
+        prev = table.read()
 
         if to_create is not None:
             upd = _dedup_last_writer(
@@ -351,47 +272,35 @@ class GraphStore:
             # once per registered edge type in the DETACH cascade
             dels = self._share(dels)
 
-        if prev is None and upd is None:
-            return
-        absorb = prev is not None and GBUCKET not in prev.columns
-        if absorb:
-            # legacy unbucketed layout: migrate via one full rewrite
-            # (prev re-includes every unpartitioned row, so the guard
-            # in write_incremental is safe to waive)
-            prev = prev.withColumn(GBUCKET, self._bucket_of(F.col(KEY_COL)))
-            dirty = self._all_buckets()
-        elif prev is None:
+        if prev is None:
             # new table: nothing to link, so declaring every bucket
             # dirty is exact AND skips the dirty-bucket collect job
-            dirty = self._all_buckets()
-        else:
-            dirty = self._dirty_buckets(upd, dels)
-
-        if prev is None:
             cur = upd
+            dirty = self._all_buckets()
         else:
             # MERGE over dirty buckets only: matched → replace entire
             # row; not-matched → insert. Clean buckets never enter the
             # plan (partition pruning on the isin filter).
-            cur = prev.where(
-                F.col(GBUCKET).isin([int(b) for b in dirty])
-            )
+            dirty = self._dirty_buckets(upd, dels)
+            cur = prev.where(F.col(GBUCKET).isin([int(b) for b in dirty]))
             if upd is not None:
                 kept = cur.join(upd.select(KEY_COL), on=KEY_COL, how="left_anti")
                 cur = kept.unionByName(upd, allowMissingColumns=True)
-        if dels is not None and cur is not None:
-            cur = cur.join(dels, on=KEY_COL, how="left_anti")
-
-        if cur is not None:
-            self._write_table(key, table, cur, dirty, absorb, prev)
-
+        writes = []
         if dels is not None:
-            self._detach_cascade(label, dels)
+            cur = cur.join(dels, on=KEY_COL, how="left_anti")
+            writes = self._detach_cascade(label, dels)
+        if prev is not None:
+            # the USING joins move the key column first: keep the
+            # table's column order in the rewritten buckets
+            added = [c for c in cur.columns if c not in prev.columns]
+            cur = cur.select(*prev.columns, *added)
+        self._stage_and_commit([(table, cur, dirty), *writes])
 
-    def _detach_cascade(self, label: str, deleted_keys: DataFrame) -> None:
-        """DETACH DELETE semantics (``neo4j.go:117``): remove every edge
-        whose endpoint was just deleted, across all registered edge types
-        touching this label.
+    def _detach_cascade(self, label: str, deleted_keys: DataFrame) -> list[tuple]:
+        """DETACH DELETE semantics (``neo4j.go:117``): the write that
+        removes every edge whose endpoint was just deleted, for each
+        registered edge type touching this label that holds one.
 
         Edge tables bucket on ``a_id``. An a-side cascade knows its
         dirty buckets from the deleted keys alone; a b-side cascade
@@ -401,41 +310,32 @@ class GraphStore:
         checkpointed from write_nodes (consumed once per registered
         edge type)."""
         dels = deleted_keys
+        writes = []
         for et in self._load_registry():
             if label not in (et.a_label, et.b_label):
                 continue
-            key = ("edges", et.table_name)
             table = self._edge_table(et)
-            prev = self._read_table(key, table)
+            prev = table.read()
             if prev is None:
                 continue
-            cur = prev
-            absorb = GBUCKET not in cur.columns
-            if absorb:  # legacy layout: migrate via one full rewrite
-                cur = cur.withColumn(GBUCKET, self._bucket_of(F.col("a_id")))
-                prev = cur
-                dirty = self._all_buckets()
-            else:
-                dirty = set()
-                if et.a_label == label:
-                    dirty |= self._dirty_buckets(
-                        dels.select(F.col(KEY_COL))
+            dirty = set()
+            if et.a_label == label:
+                dirty |= self._dirty_buckets(dels.select(F.col(KEY_COL)))
+            if et.b_label == label:
+                hit = (
+                    prev.join(
+                        F.broadcast(dels.select(F.col(KEY_COL).alias("b_id"))),
+                        on="b_id",
+                        how="left_semi",
                     )
-                if et.b_label == label:
-                    hit = (
-                        cur.join(
-                            F.broadcast(dels.select(F.col(KEY_COL).alias("b_id"))),
-                            on="b_id",
-                            how="left_semi",
-                        )
-                        .select(GBUCKET)
-                        .distinct()
-                        .collect()
-                    )
-                    dirty |= {str(r[GBUCKET]) for r in hit}
+                    .select(GBUCKET)
+                    .distinct()
+                    .collect()
+                )
+                dirty |= {str(r[GBUCKET]) for r in hit}
             if not dirty:
                 continue  # no bucket holds an affected edge — no-op
-            cur = cur.where(F.col(GBUCKET).isin([int(b) for b in dirty]))
+            cur = prev.where(F.col(GBUCKET).isin([int(b) for b in dirty]))
             if et.a_label == label:
                 cur = cur.join(
                     dels.select(F.col(KEY_COL).alias("a_id")), on="a_id", how="left_anti"
@@ -444,7 +344,10 @@ class GraphStore:
                 cur = cur.join(
                     dels.select(F.col(KEY_COL).alias("b_id")), on="b_id", how="left_anti"
                 )
-            self._write_table(key, table, cur, dirty, absorb, prev)
+            # the USING anti-joins move their key first: keep the
+            # table's column order in the rewritten buckets
+            writes.append((table, cur.select(*prev.columns), dirty))
+        return writes
 
     # -- S5: edge merge with endpoint validation (J2) ----------------
     def write_edges(
@@ -461,9 +364,6 @@ class GraphStore:
         diff outputs and any frame that just ran its own identity dedup
         qualify; when in doubt leave it False (a violated assertion
         surfaces as duplicate edges in the table)."""
-        if self._pending is None:  # a lone write is a one-call batch
-            with self.sync():
-                return self.write_edges(a_label, rel, b_label, edges, assume_unique)
         et = EdgeType(a_label, rel, b_label)
         self._register_edge(et)
 
@@ -487,29 +387,19 @@ class GraphStore:
             b_nodes.select(F.col(KEY_COL).alias("b_id")), on="b_id", how="left_semi"
         ).withColumn(GBUCKET, self._bucket_of(F.col("a_id")))
 
-        key = ("edges", et.table_name)
         table = self._edge_table(et)
-        prev = self._read_table(key, table)
-        if prev is not None:
+        prev = table.read()
+        if prev is None:
+            # new table: all-dirty is exact (nothing to link) and skips
+            # the dirty-bucket collect job, so validated is staged
+            # exactly once — a checkpoint would only re-materialize it
+            merged = validated
+            dirty = self._all_buckets()
+        else:
             # Diamond rule: validated feeds BOTH the dirty-bucket
             # collect and the MERGE union — without a checkpoint the
             # batch dedup + two endpoint semi-joins run twice per sync.
-            # (A brand-new table declares all buckets dirty and stages
-            # validated exactly once — checkpointing there would only
-            # re-materialize the rows on the critical path.)
             validated = self._share(validated)
-        absorb = False
-        if prev is None:
-            merged = validated
-            # new table: all-dirty is exact (nothing to link) and skips
-            # the dirty-bucket collect job
-            dirty = self._all_buckets()
-        elif GBUCKET not in prev.columns:  # legacy layout: migrate
-            absorb = True
-            prev = prev.withColumn(GBUCKET, self._bucket_of(F.col("a_id")))
-            merged = prev.unionByName(validated).dropDuplicates(["a_id", "b_id"])
-            dirty = self._all_buckets()
-        else:
             # MERGE dedup by edge identity (a_id, b_id): same a_id ⇒
             # same bucket, so deduping inside dirty buckets is complete.
             dirty = {
@@ -523,7 +413,7 @@ class GraphStore:
                 .unionByName(validated)
                 .dropDuplicates(["a_id", "b_id"])
             )
-        self._write_table(key, table, merged, dirty, absorb, prev)
+        self._stage_and_commit([(table, merged, dirty)])
 
     # -- traversal (graph reads the reference never needed; rounds out
     # the graph-shaped store: n-hop = chain of equi-joins) ------------
@@ -584,17 +474,12 @@ class GraphStore:
         cur = table.read()
         if cur is None:
             return
-        if GBUCKET not in cur.columns:
-            cur = cur.withColumn(GBUCKET, self._bucket_of(F.col(KEY_COL)))
         n = buckets or cur.sparkSession.sparkContext.defaultParallelism
         clustered = cur.repartition(n, F.col(GBUCKET)).sortWithinPartitions(
             GBUCKET, KEY_COL
         )
         # full rewrite by definition — every bucket is "dirty"
-        table.write_incremental(
-            clustered, GBUCKET, {str(b) for b in range(self.n_buckets)},
-            absorb_unpartitioned=True,
-        )
+        table.write_incremental(clustered, GBUCKET, self._all_buckets())
 
     # -- invariants (reference self-tests, SURVEY §5) ----------------
     def orphan_edge_count(self) -> int:

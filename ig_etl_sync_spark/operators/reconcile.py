@@ -198,8 +198,6 @@ class Reconciler:
         function_key: str,
         incoming: DataFrame,
         is_relation: bool = False,
-        key_col: str = KEY_COL,
-        prefer_cols: Sequence[str] = DEFAULT_PREFER_COLS,
     ) -> DiffResult:
         if is_relation:
             # R2: relations are never diffed — re-merged idempotently
@@ -207,35 +205,23 @@ class Reconciler:
             empty = incoming.sparkSession.createDataFrame([], f"{KEY_COL} string")
             return DiffResult(to_create=incoming, to_delete=empty)
         snapshot = self.store.read(integration_key, function_key)
-        return reconcile(incoming, snapshot, key_col=key_col, prefer_cols=prefer_cols)
+        return reconcile(incoming, snapshot)
 
     def commit(
-        self,
-        integration_key: str,
-        function_key: str,
-        incoming: DataFrame,
-        is_relation: bool = False,
-        key_col: str = KEY_COL,
-        prefer_cols: Sequence[str] = DEFAULT_PREFER_COLS,
-    ) -> str | None:
-        if is_relation:
-            return None  # recon.go:103-105
-        snap = snapshot_of(incoming, key_col=key_col, prefer_cols=prefer_cols)
-        return self.store.commit(integration_key, function_key, snap)
+        self, integration_key: str, function_key: str, incoming: DataFrame
+    ) -> str:
+        """R5 (``recon.go:102-131``); a relation keeps no snapshot, so
+        its function never commits (``recon.go:103-105``)."""
+        return self.store.commit(integration_key, function_key, snapshot_of(incoming))
 
     def commit_merge(
-        self,
-        integration_key: str,
-        function_key: str,
-        incoming: DataFrame,
-        key_col: str = KEY_COL,
-        prefer_cols: Sequence[str] = DEFAULT_PREFER_COLS,
+        self, integration_key: str, function_key: str, incoming: DataFrame
     ) -> str:
         """Upsert-mode commit: merge incoming hashes INTO the snapshot
         instead of replacing it — for append-only/partial feeds where a
         batch is a delta, not the full source state (streaming upsert
         mode; the reference only ever has full-state ticks)."""
-        snap_new = snapshot_of(incoming, key_col=key_col, prefer_cols=prefer_cols)
+        snap_new = snapshot_of(incoming)
         prev = self.store.read(integration_key, function_key)
         if prev is not None:
             snap_new = prev.join(
@@ -244,19 +230,14 @@ class Reconciler:
         return self.store.commit(integration_key, function_key, snap_new)
 
     def assert_converged(
-        self,
-        integration_key: str,
-        function_key: str,
-        incoming: DataFrame,
-        key_col: str = KEY_COL,
-        prefer_cols: Sequence[str] = DEFAULT_PREFER_COLS,
+        self, integration_key: str, function_key: str, incoming: DataFrame
     ) -> None:
         """R8 (``main.go:224-237``): post-commit re-diff must be empty,
         checked as committed snapshot == ``snapshot_of(incoming)`` (the
         frame :meth:`commit` writes), so a key listed twice with two
         change hashes collapses here as it did there. One full-outer
         join, probed by one ``limit(1)`` action."""
-        want = snapshot_of(incoming, key_col=key_col, prefer_cols=prefer_cols)
+        want = snapshot_of(incoming)
         got = self.store.read(integration_key, function_key)
         if got is None:
             drift = want

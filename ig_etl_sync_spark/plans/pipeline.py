@@ -9,9 +9,10 @@
 - C3 sync loop: one ``run()`` per tick; Structured Streaming's
   ``foreachBatch`` (``streaming/sync.py``) is the scale-up. Both run
   each function through :func:`sync_function`, the one sync step:
-  reconcile (diff pinned) → ``limit(1)`` emptiness probes → sink inside
-  one ``graph.sync()`` → snapshot commit (merge on a delta tick) → R8
-  (full-state ticks only) → exact counts from the pinned diff.
+  reconcile (diff pinned) → ``limit(1)`` emptiness probes → one graph
+  write call, itself one transaction (S8; skipped on an empty node diff)
+  → snapshot commit (merge on a delta tick) → R8 (full-state ticks
+  only) → exact counts from the pinned diff.
 - C5 fail-fast: any error raises, and a retry converges (at-least-once
   + idempotent sinks): before the snapshot commit the old snapshot
   re-derives the same diff for an idempotent sink; after it the diff
@@ -111,17 +112,16 @@ def sync_function(
         has_delete = to_delete is not None and to_delete.limit(1).count() > 0
 
         # S8: one transaction per sync function (neo4j.go:77-148) — the
-        # node upsert+delete AND its DETACH-cascade edge rewrites share
-        # one staging round and land one pointer flip per table
-        with graph.sync():
-            if is_relation:
-                graph.write_edges(*target, edges=to_create)
-            else:
-                graph.write_nodes(
-                    target,
-                    to_create=to_create if has_create else None,
-                    to_delete=to_delete if has_delete else None,
-                )
+        # function's one write call stages the node upsert+delete AND its
+        # DETACH-cascade edge rewrites together, one pointer flip per table
+        if is_relation:
+            graph.write_edges(*target, edges=to_create)
+        else:
+            graph.write_nodes(
+                target,
+                to_create=to_create if has_create else None,
+                to_delete=to_delete if has_delete else None,
+            )
 
         if not is_relation:  # R2: a relation keeps no snapshot
             if delta:

@@ -215,7 +215,7 @@ class StreamingCorpusIngest:
         if self.span_index is None:
             # Overlap the corpus append's STAGING (the expensive Spark
             # write of the epoch's files into an invisible .stg-* dir)
-            # with the index extend (guide §2.6 / the GraphStore.sync
+            # with the index extend (guide §2.6 / the GraphStore write
             # staging precedent); only the cheap pointer-flip COMMIT is
             # ordered after the extend — the crash contract requires the
             # index commit to precede the corpus COMMIT, not its
@@ -251,7 +251,7 @@ class StreamingCorpusIngest:
             # so it no longer serializes behind the extend's commit) —
             # BOTH extends run on worker threads CONCURRENTLY with the
             # probe + cut (Spark schedules jobs from multiple threads
-            # fairly — the GraphStore.sync staging precedent). The
+            # fairly — the GraphStore write staging precedent). The
             # crash-ordering contract only requires both INDEX commits
             # to precede the corpus append: the extends may land in
             # either order (a crash after just one is completed by the

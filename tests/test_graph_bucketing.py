@@ -1,6 +1,6 @@
 """Bucketed incremental MERGE: clean buckets must survive a sync
-byte-for-byte (hard-linked, not rewritten), merges must partition-prune,
-and legacy unbucketed tables must migrate losslessly."""
+byte-for-byte (hard-linked, not rewritten), and merges must
+partition-prune."""
 
 from __future__ import annotations
 
@@ -132,21 +132,6 @@ def test_detach_cascade_b_side_prunes(spark, store):
     assert all(b != "6" for _a, b in remaining)
     clean = [b for b in before if b in after and after[b] == before[b]]
     assert clean, "expected at least one untouched edge bucket to be linked"
-
-
-def test_legacy_unbucketed_table_migrates(spark, tmp_path):
-    store = GraphStore(spark, str(tmp_path / "g"), n_buckets=4)
-    # simulate a legacy (pre-bucketing) table: plain write, no GBUCKET
-    legacy = _mknodes(spark, range(30))
-    store._node_table("item").write(legacy)
-    assert GBUCKET not in store._node_table("item").read().columns
-
-    store.write_nodes("item", to_create=_mknodes(spark, [5], tag="b"))
-    cur = store._node_table("item").read()
-    assert GBUCKET in cur.columns  # migrated to bucketed layout
-    got = {(r.external_id, r.name) for r in store.nodes("item").collect()}
-    want = {(str(k), f"a-{k}") for k in range(30) if k != 5} | {("5", "b-5")}
-    assert got == want
 
 
 def test_empty_after_delete_all_still_readable(spark, store):

@@ -45,14 +45,21 @@ def test_full_sync_builds_graph(spark, runner, source_doc):
 
 
 def test_second_sync_is_noop(spark, runner, source_doc):
-    """Invariant 1 (main.go:224-237): unchanged input ⇒ empty diff."""
-    runner.run(integration(source_doc))
+    """Invariant 1 (main.go:224-237): unchanged input ⇒ empty diff, and
+    an empty node diff skips the sink: no node table publishes a new
+    version."""
+    integ = integration(source_doc)
+    runner.run(integ)
+    labels = [fn.label for fn in integ.functions if fn.label]
+    versions = {lb: runner.graph._node_table(lb).latest_version() for lb in labels}
+    assert set(versions.values()) == {"v000000"}
     report2 = runner.run(integration(source_doc))
     node_creates = {
         k: v for k, v in report2.created.items() if k.startswith("CREATE_NODE")
     }
     assert all(v == 0 for v in node_creates.values())
     assert all(v == 0 for v in report2.deleted.values())
+    assert {lb: runner.graph._node_table(lb).latest_version() for lb in labels} == versions
 
 
 def test_emptied_source_deletes_everything(spark, runner, source_doc):

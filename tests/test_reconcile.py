@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from ig_etl_sync_spark.operators.reconcile import (
@@ -104,14 +106,29 @@ def test_commit_isolation_versions(spark, store):
     assert [r["external_id"] for r in store.read(INT_KEY, FN_KEY).collect()] == ["b"]
 
 
-def test_relation_passthrough(spark, store):
-    """R2: edges are never diffed — full batch returned as creates."""
+def test_relation_passthrough(spark, store, tmp_path):
+    """R2: a relation function's edges are never diffed — the whole
+    batch lands in the graph on every sync — and it keeps no snapshot."""
+    from ig_etl_sync_spark.operators.graph import GraphStore
+    from ig_etl_sync_spark.plans.pipeline import sync_function
+
     rec = Reconciler(store)
-    edges = spark.createDataFrame([("x", "y")], "a_id string, b_id string")
-    diff = rec.reconcile(INT_KEY, "CREATE_RELATION:r", edges, is_relation=True)
-    assert diff.to_create.count() == 1
-    assert diff.to_delete.count() == 0
-    assert rec.commit(INT_KEY, "CREATE_RELATION:r", edges, is_relation=True) is None
+    graph = GraphStore(spark, str(tmp_path / "graph"), n_buckets=4)
+    nodes = spark.createDataFrame([("x",), ("y",)], "external_id string")
+    graph.write_nodes("a", to_create=nodes)
+    graph.write_nodes("b", to_create=nodes)
+    edges = spark.createDataFrame([("x", "y"), ("y", "x")], "a_id string, b_id string")
+    fn_key = "CREATE_RELATION:r"
+    for _ in range(2):  # a re-sync re-merges the same batch
+        created, deleted = sync_function(
+            rec, graph, INT_KEY, fn_key, ("a", "r", "b"), edges, delta=False
+        )
+        assert (created, deleted) == (2, 0)
+    assert sorted((r.a_id, r.b_id) for r in graph.edges("a", "r", "b").collect()) == [
+        ("x", "y"), ("y", "x")
+    ]
+    assert store.read(INT_KEY, fn_key) is None
+    assert not os.path.exists(store._table(INT_KEY, fn_key).path)
 
 
 def test_duplicate_keys_deterministic(spark):

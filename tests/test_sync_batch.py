@@ -1,11 +1,11 @@
-"""Batched GraphStore sync (S8: one staging round + one pointer flip per
-table per sync — the reference's one-transaction-per-function semantics,
-``neo4j.go:77-148``) and the stage/commit split it rides on.
+"""One GraphStore write call is one sink transaction (S8: the
+reference's one-transaction-per-function semantics,
+``neo4j.go:77-148``), and the stage/commit split it rides on.
 
-Covers: batched ≡ unbatched results, intra-batch read visibility,
-same-table write composition inside a batch, commit counts (one per
-table per batch), crash-between-stage-and-commit invisibility + vacuum,
-and fault injection inside the table's stage/rename/flip commit.
+Covers: a node delete and its DETACH cascade move each touched table
+by one version, a crash between their staging and the pointer flips is
+invisible + vacuumable, and fault injection inside the table's
+stage/rename/flip commit.
 """
 
 from __future__ import annotations
@@ -28,41 +28,37 @@ def edges_df(spark, rows):
     return spark.createDataFrame(rows, "a_id string, b_id string")
 
 
-def _collect_edges(g):
-    return sorted(
-        (r.a_id, r.b_id)
-        for r in g.edges("org", "has", "project").collect()
+ORG_PROJECT = EdgeType("org", "has", "project")
+PROJECT_BUCKET = EdgeType("project", "has", "bucket")
+
+
+def _build(g, spark):
+    """Three node labels and two edge types; only ``org has project``
+    touches the org label."""
+    g.write_nodes("org", to_create=nodes_df(spark, [("o1", "O1"), ("o2", "O2")]))
+    g.write_nodes("project", to_create=nodes_df(spark, [("p1", "P1"), ("p2", "P2")]))
+    g.write_nodes("bucket", to_create=nodes_df(spark, [("b1", "B1")]))
+    g.write_edges(
+        "org", "has", "project",
+        edges_df(spark, [("o1", "p1"), ("o1", "p2"), ("o2", "p2")]),
+    )
+    g.write_edges("project", "has", "bucket", edges_df(spark, [("p2", "b1")]))
+
+
+def _delete_o2(g, spark):
+    g.write_nodes(
+        "org", to_delete=spark.createDataFrame([("o2",)], "external_id string")
     )
 
 
-def _drive(g, spark, batched: bool):
-    """The canonical sync sequence: create two node labels + edges in
-    one sync, then delete one node (DETACH cascade) in a second sync."""
-    orgs = nodes_df(spark, [("o1", "O1"), ("o2", "O2")])
-    projs = nodes_df(spark, [("p1", "P1"), ("p2", "P2")])
-    edges = edges_df(
-        spark, [("o1", "p1"), ("o1", "p2"), ("o2", "p2"), ("ox", "p1")]
-    )
-    if batched:
-        with g.sync():
-            g.write_nodes("org", to_create=orgs)
-            g.write_nodes("project", to_create=projs)
-            g.write_edges("org", "has", "project", edges)
-        with g.sync():
-            g.write_nodes(
-                "org", to_delete=spark.createDataFrame(
-                    [("o2",)], "external_id string"
-                )
-            )
-    else:
-        g.write_nodes("org", to_create=orgs)
-        g.write_nodes("project", to_create=projs)
-        g.write_edges("org", "has", "project", edges)
-        g.write_nodes(
-            "org", to_delete=spark.createDataFrame(
-                [("o2",)], "external_id string"
-            )
-        )
+def _versions(g):
+    return {
+        "org": g._node_table("org").latest_version(),
+        "project": g._node_table("project").latest_version(),
+        "bucket": g._node_table("bucket").latest_version(),
+        ORG_PROJECT: g._edge_table(ORG_PROJECT).latest_version(),
+        PROJECT_BUCKET: g._edge_table(PROJECT_BUCKET).latest_version(),
+    }
 
 
 # One parameter: the ``[pointer]`` id names the table's commit protocol,
@@ -72,97 +68,46 @@ def make_graph(spark, tmp_path):
     return lambda name: GraphStore(spark, str(tmp_path / name), n_buckets=4)
 
 
-def test_batched_sync_matches_unbatched(spark, make_graph):
-    gb = make_graph("b")
-    gu = make_graph("u")
-    _drive(gb, spark, batched=True)
-    _drive(gu, spark, batched=False)
-    assert _collect_edges(gb) == _collect_edges(gu) == [
-        ("o1", "p1"), ("o1", "p2")  # ox invalid endpoint, o2 cascaded
-    ]
-    assert sorted(r.external_id for r in gb.nodes("org").collect()) == ["o1"]
-    assert sorted(
-        r.external_id for r in gb.nodes("project").collect()
-    ) == ["p1", "p2"]
-
-
-def test_intra_batch_reads_see_pending_and_outside_readers_do_not(
-    spark, tmp_path
-):
-    g = GraphStore(spark, str(tmp_path / "g"), n_buckets=4)
-    outside = GraphStore(spark, str(tmp_path / "g"), n_buckets=4)
-    with g.sync():
-        g.write_nodes("org", to_create=nodes_df(spark, [("o1", "O1")]))
-        # same-store read observes the pending write...
-        assert [r.external_id for r in g.nodes("org").collect()] == ["o1"]
-        # ...an independent reader of the same path sees nothing
-        assert outside.nodes("org") is None
-        # edge validation against a pending endpoint works (else the
-        # edge would be dropped as endpoint-less)
-        g.write_nodes("project", to_create=nodes_df(spark, [("p1", "P1")]))
-        g.write_edges(
-            "org", "has", "project", edges_df(spark, [("o1", "p1")])
-        )
-    assert _collect_edges(outside) == [("o1", "p1")]
-
-
-def test_same_table_writes_compose_within_one_batch(spark, tmp_path):
-    """Create + full-property re-upsert + delete of ONE label inside a
-    single batch must land as one composed commit."""
-    g = GraphStore(spark, str(tmp_path / "g"), n_buckets=4)
-    # pre-existing state so the batch merges against a committed prev
-    g.write_nodes(
-        "org", to_create=nodes_df(spark, [("keep", "K"), ("gone", "G")])
-    )
-    t = g._node_table("org")
-    assert t.latest_version() == "v000000"
-    with g.sync():
-        g.write_nodes("org", to_create=nodes_df(spark, [("new", "N1")]))
-        g.write_nodes("org", to_create=nodes_df(spark, [("new", "N2")]))
-        g.write_nodes(
-            "org", to_delete=spark.createDataFrame(
-                [("gone",)], "external_id string"
-            )
-        )
-    rows = {r.external_id: r.name for r in g.nodes("org").collect()}
-    assert rows == {"keep": "K", "new": "N2"}
-    # the three writes landed as ONE commit: the version number moved by 1
-    assert t.latest_version() == "v000001"
-
-
 def test_one_commit_per_table_per_batch(spark, tmp_path):
+    """A node delete whose DETACH cascade rewrites an edge table moves
+    the node table and that edge table by exactly one version each;
+    tables the delete does not touch stay put."""
     g = GraphStore(spark, str(tmp_path / "g"), n_buckets=4)
-    _drive(g, spark, batched=True)
-    # batch 1 committed each of the 3 tables once (v000000); batch 2
-    # (delete + cascade) committed org nodes + the edge table once each
-    et = EdgeType("org", "has", "project")
-    assert g._node_table("org").latest_version() == "v000001"
-    assert g._node_table("project").latest_version() == "v000000"
-    assert g._edge_table(et).latest_version() == "v000001"
+    _build(g, spark)
+    before = _versions(g)
+    assert set(before.values()) == {"v000000"}
+    _delete_o2(g, spark)
+    assert _versions(g) == {
+        **before, "org": "v000001", ORG_PROJECT: "v000001"
+    }
+    assert sorted(
+        (r.a_id, r.b_id) for r in g.edges("org", "has", "project").collect()
+    ) == [("o1", "p1"), ("o1", "p2")]
 
 
 def test_crash_between_batched_stage_and_claim(
     spark, tmp_path, make_graph, monkeypatch
 ):
-    """Kill the sync after every table staged but before ANY table
-    claimed its next version (pointer flip): no reader observes
-    anything, and vacuum reclaims the orphaned staging output."""
+    """Kill a node delete after the node table and its cascade's edge
+    table staged but before EITHER claimed its next version (pointer
+    flip): no reader observes anything, and vacuum reclaims the
+    orphaned staging output."""
     g = make_graph("g")
-    g.write_nodes("org", to_create=nodes_df(spark, [("o1", "OLD")]))
+    _build(g, spark)
+    before = _versions(g)
 
     monkeypatch.setattr(
         VersionedParquetTable, "commit_staged",
         lambda self, *a, **k: (_ for _ in ()).throw(OSError("killed")),
     )
     with pytest.raises(OSError):
-        with g.sync():
-            g.write_nodes("org", to_create=nodes_df(spark, [("o1", "NEW")]))
-            g.write_nodes("project", to_create=nodes_df(spark, [("p1", "P")]))
+        _delete_o2(g, spark)
     monkeypatch.undo()
 
-    # invisible: old state intact, new table absent
-    assert [r.name for r in g.nodes("org").collect()] == ["OLD"]
-    assert g.nodes("project") is None
+    # invisible: neither the node table nor the edge table moved
+    assert _versions(g) == before
+    assert sorted(r.external_id for r in g.nodes("org").collect()) == ["o1", "o2"]
+    assert g.edges("org", "has", "project").count() == 3
 
     # the orphaned staging survives a young vacuum, then ages out
     torg = g._node_table("org")
@@ -175,17 +120,13 @@ def test_crash_between_batched_stage_and_claim(
                 os.utime(p, (time.time() - 7200, time.time() - 7200))
         os.utime(root, (time.time() - 7200, time.time() - 7200))
 
-    removed = []
-    for name in ("nodes_org", "nodes_project"):
-        path = os.path.join(str(tmp_path / "g"), name)
-        if os.path.isdir(path):
-            _age(path)
-        removed += VersionedParquetTable(spark, path).vacuum(
-            min_age_seconds=3600
-        )
-    assert removed, "vacuum reclaimed no orphaned staging output"
+    for table in (torg, g._edge_table(ORG_PROJECT)):
+        _age(table.path)
+        removed = table.vacuum(min_age_seconds=3600)
+        assert len(removed) == 1, f"{table.path}: {removed}"
     # still readable after vacuum
-    assert [r.name for r in g.nodes("org").collect()] == ["OLD"]
+    assert sorted(r.external_id for r in g.nodes("org").collect()) == ["o1", "o2"]
+    assert g.edges("org", "has", "project").count() == 3
 
 
 def test_pointer_backend_crash_between_stage_and_flip(spark, tmp_path):
@@ -301,25 +242,3 @@ def test_pointer_stage_commit_roundtrip(spark, tmp_path):
     assert sorted((r.k, r.x) for r in t.read().collect()) == [
         ("a", 10), ("b", 2)  # clean partition b linked through
     ]
-
-
-def test_batch_abandoned_on_error_leaves_no_trace(spark, tmp_path):
-    g = GraphStore(spark, str(tmp_path / "g"), n_buckets=4)
-    with pytest.raises(ValueError, match="boom"):
-        with g.sync():
-            g.write_nodes("org", to_create=nodes_df(spark, [("o1", "O")]))
-            raise ValueError("boom")
-    assert g.nodes("org") is None
-    assert g._pending is None
-    # a fresh batch works after the abort
-    with g.sync():
-        g.write_nodes("org", to_create=nodes_df(spark, [("o1", "O")]))
-    assert [r.external_id for r in g.nodes("org").collect()] == ["o1"]
-
-
-def test_nested_sync_rejected(spark, tmp_path):
-    g = GraphStore(spark, str(tmp_path / "g"))
-    with pytest.raises(RuntimeError, match="already active"):
-        with g.sync():
-            with g.sync():
-                pass
