@@ -6,7 +6,6 @@ record. The hash is only ever compared with itself (``recon.go:81``), so
 any stable hash is semantically identical; we use Spark's native
 ``xxhash64`` (JVM-side, whole-stage-codegen friendly, 64-bit so collision
 odds at 100 TB key counts are ~2^-64 per pair vs CRC32's 2^-32).
-``crc32`` is kept selectable for bit-for-bit parity experiments.
 
 Scale note: the prefer-column chain is the reference's own short-circuit
 — when a source carries an ``updated_at``, the hash input is a short
@@ -53,7 +52,6 @@ def record_fingerprint(columns: Sequence[str]) -> Column:
 def change_hash(
     columns: Sequence[str],
     prefer_cols: Sequence[str] = DEFAULT_PREFER_COLS,
-    algo: str = "xxhash64",
 ) -> Column:
     """Column expression computing the per-record change hash.
 
@@ -66,22 +64,14 @@ def change_hash(
     ]
     chain.append(record_fingerprint(columns))
     basis = F.coalesce(*chain) if len(chain) > 1 else chain[0]
-    if algo == "xxhash64":
-        return F.xxhash64(basis)
-    if algo == "crc32":
-        return F.crc32(basis)
-    if algo == "sha2":
-        return F.sha2(basis, 256)
-    raise ValueError(f"unknown hash algo {algo!r}")
+    return F.xxhash64(basis)
 
 
 def with_change_hash(
     df: DataFrame,
     prefer_cols: Sequence[str] = DEFAULT_PREFER_COLS,
-    algo: str = "xxhash64",
-    out_col: str = "change_hash",
     exclude: Sequence[str] = (),
 ) -> DataFrame:
-    """Attach the change-hash column to ``df`` (excluding e.g. the key)."""
+    """Attach the ``change_hash`` column to ``df`` (excluding e.g. the key)."""
     cols = [c for c in df.columns if c not in set(exclude)]
-    return df.withColumn(out_col, change_hash(cols, prefer_cols=prefer_cols, algo=algo))
+    return df.withColumn("change_hash", change_hash(cols, prefer_cols=prefer_cols))

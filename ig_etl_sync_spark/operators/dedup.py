@@ -1214,7 +1214,11 @@ class MinhashDedupIndex:
       :func:`cross_corpus_near_dups`, minus recomputing the reference
       side every time);
     - :meth:`extend` appends a (deduplicated) batch to the index as a
-      new immutable version, so the next probe sees it.
+      new immutable version, so the next probe sees it;
+    - :meth:`compact` folds the per-batch epochs into epoch 0.
+
+    Appends and compaction use the table's epoch protocol
+    (``append_epoch`` / ``next_epoch`` / ``compact_epochs``).
 
     Scale: the index holds ``bands`` rows per document with the
     distinct-shingle array attached — written once, partitioned by the
@@ -1251,7 +1255,6 @@ class MinhashDedupIndex:
     def _index_rows(
         self,
         docs: DataFrame,
-        epoch: int,
         *,
         sigs: DataFrame | None = None,
         sh: DataFrame | None = None,
@@ -1278,24 +1281,16 @@ class MinhashDedupIndex:
             )
         else:
             sh = sh.join(ids, self.id_col, "left_semi")
-        return banded.join(sh, self.id_col).withColumn(
-            self._EPOCH, F.lit(int(epoch)).cast("int")
-        )
-
-    def _next_epoch(self) -> int:
-        cur = self._table.read()
-        if cur is None:
-            return 0
-        return int(
-            cur.agg(F.max(F.col(self._EPOCH).cast("int")).alias("m"))
-            .first()["m"]
-        ) + 1
+        return banded.join(sh, self.id_col)
 
     def build(self, docs: DataFrame) -> str:
         """(Re)build the index from the reference corpus; returns the
         published version id."""
+        rows = self._index_rows(docs).withColumn(
+            self._EPOCH, F.lit(0).cast("int")
+        )
         return self._table.write_incremental(
-            self._index_rows(docs, 0), self._EPOCH, {"0"}, cluster=False
+            rows, self._EPOCH, {"0"}, cluster=False
         )
 
     def extend(
@@ -1317,11 +1312,11 @@ class MinhashDedupIndex:
         retries), which makes re-extending the SAME batch overwrite the
         SAME partition with the same rows — idempotent per batch
         (Delta's txnAppId/txnVersion pattern) instead of appending a
-        duplicate epoch. Defaults to max-epoch + 1 for batch callers.
+        duplicate epoch. Defaults to the table's next epoch.
 
-        An explicit epoch that already exists with DIFFERENT doc ids is
-        refused (see :func:`~ig_etl_sync_spark.sources.versioned.
-        assert_epoch_replay`): bare epoch numbers collide across
+        An epoch that already holds DIFFERENT doc ids is refused (see
+        :meth:`~ig_etl_sync_spark.sources.versioned.VersionedParquetTable.
+        append_epoch`): bare epoch numbers collide across
         checkpoints/streams, and overwriting would silently drop the
         committed batch.
 
@@ -1329,20 +1324,10 @@ class MinhashDedupIndex:
         shingle frames covering a superset of ``docs`` (pinned by the
         caller) — see :meth:`_index_rows`."""
         if epoch is None:
-            epoch = self._next_epoch()  # strictly > existing: no reuse
-        else:
-            from ig_etl_sync_spark.sources.versioned import (
-                assert_epoch_replay,
-            )
-
-            assert_epoch_replay(
-                self._table, self._EPOCH, int(epoch), docs, self.id_col
-            )
-        return self._table.write_incremental(
-            self._index_rows(docs, int(epoch), sigs=sigs, sh=sh),
-            self._EPOCH,
-            {str(int(epoch))},
-            cluster=False,
+            epoch = self._table.next_epoch(self._EPOCH)
+        return self._table.append_epoch(
+            self._index_rows(docs, sigs=sigs, sh=sh),
+            self._EPOCH, epoch, self.id_col,
         )
 
     def compact(self, *, target_files: int = 8) -> str | None:
@@ -1353,28 +1338,9 @@ class MinhashDedupIndex:
         clustered by the band key, the probe join's at-rest layout).
         Index CONTENTS are unchanged: signatures are not recomputed,
         and a :meth:`probe` sees identical rows. Returns the published
-        version id, or ``None`` when the index is unbuilt.
-
-        Every existing epoch is declared dirty so the rewrite flows
-        through ``write_incremental``'s partitioned layout — a plain
-        ``write()`` would store rows unpartitioned, which the next
-        incremental append would NOT carry forward (it links only
-        ``iepoch=*`` dirs)."""
-        cur = self._table.read()
-        if cur is None:
-            return None
-        epochs = {
-            str(r["e"])
-            for r in cur.select(
-                F.col(self._EPOCH).cast("int").alias("e")
-            ).distinct().collect()
-        }
-        rows = cur.withColumn(
-            self._EPOCH, F.lit(0).cast("int")
-        ).repartition(target_files, "band_id", "band_hash")
-        return self._table.write_incremental(
-            rows, self._EPOCH, epochs | {"0"}, absorb_unpartitioned=True,
-            cluster=False,
+        version id, or ``None`` when the index is unbuilt."""
+        return self._table.compact_epochs(
+            self._EPOCH, ["band_id", "band_hash"], target_files
         )
 
     def probe(

@@ -272,6 +272,8 @@ class GraphStore:
             # once per registered edge type in the DETACH cascade
             dels = self._share(dels)
 
+        # also the a-side cascade's dirty buckets
+        del_buckets = self._dirty_buckets(dels)
         if prev is None:
             # new table: nothing to link, so declaring every bucket
             # dirty is exact AND skips the dirty-bucket collect job
@@ -281,7 +283,7 @@ class GraphStore:
             # MERGE over dirty buckets only: matched → replace entire
             # row; not-matched → insert. Clean buckets never enter the
             # plan (partition pruning on the isin filter).
-            dirty = self._dirty_buckets(upd, dels)
+            dirty = self._dirty_buckets(upd) | del_buckets
             cur = prev.where(F.col(GBUCKET).isin([int(b) for b in dirty]))
             if upd is not None:
                 kept = cur.join(upd.select(KEY_COL), on=KEY_COL, how="left_anti")
@@ -289,7 +291,7 @@ class GraphStore:
         writes = []
         if dels is not None:
             cur = cur.join(dels, on=KEY_COL, how="left_anti")
-            writes = self._detach_cascade(label, dels)
+            writes = self._detach_cascade(label, dels, del_buckets)
         if prev is not None:
             # the USING joins move the key column first: keep the
             # table's column order in the rewritten buckets
@@ -297,13 +299,16 @@ class GraphStore:
             cur = cur.select(*prev.columns, *added)
         self._stage_and_commit([(table, cur, dirty), *writes])
 
-    def _detach_cascade(self, label: str, deleted_keys: DataFrame) -> list[tuple]:
+    def _detach_cascade(
+        self, label: str, deleted_keys: DataFrame, del_buckets: set[str]
+    ) -> list[tuple]:
         """DETACH DELETE semantics (``neo4j.go:117``): the write that
         removes every edge whose endpoint was just deleted, for each
         registered edge type touching this label that holds one.
 
-        Edge tables bucket on ``a_id``. An a-side cascade knows its
-        dirty buckets from the deleted keys alone; a b-side cascade
+        Edge tables bucket on ``a_id``. An a-side cascade's dirty
+        buckets are the deleted keys' buckets, ``del_buckets`` (already
+        collected by write_nodes); a b-side cascade
         first finds the buckets holding affected edges via a
         column-pruned semi-join scan of (b_id, bucket), then rewrites
         only those. ``deleted_keys`` arrives deduplicated and
@@ -318,9 +323,7 @@ class GraphStore:
             prev = table.read()
             if prev is None:
                 continue
-            dirty = set()
-            if et.a_label == label:
-                dirty |= self._dirty_buckets(dels.select(F.col(KEY_COL)))
+            dirty = set(del_buckets) if et.a_label == label else set()
             if et.b_label == label:
                 hit = (
                     prev.join(

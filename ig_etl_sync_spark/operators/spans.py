@@ -765,8 +765,8 @@ class SpanDupIndex:
     index — ``extend`` writes O(batch) into a fresh partition and
     carries prior epochs by hard link; ``compact``
     folds the accumulated partitions into epoch 0 clustered by
-    span_md5 (the probe join's at-rest layout) through
-    ``write_incremental`` with every epoch declared dirty.
+    span_md5 (the probe join's at-rest layout). Both go through the
+    table's epoch protocol (``append_epoch`` / ``compact_epochs``).
     """
 
     def __init__(
@@ -796,7 +796,6 @@ class SpanDupIndex:
     def _pairs(
         self,
         docs: DataFrame,
-        epoch: int,
         *,
         spans: DataFrame | None = None,
     ) -> DataFrame:
@@ -809,25 +808,13 @@ class SpanDupIndex:
             spans = spans.join(
                 docs.select(self.id_col), self.id_col, "left_semi"
             )
-        return (
-            spans.select("span_md5", self.id_col)
-            .distinct()
-            .withColumn(self._EPOCH, F.lit(int(epoch)).cast("int"))
-        )
-
-    def _next_epoch(self) -> int:
-        cur = self._table.read()
-        if cur is None:
-            return 0
-        return int(
-            cur.agg(F.max(F.col(self._EPOCH).cast("int")).alias("m"))
-            .first()["m"]
-        ) + 1
+        return spans.select("span_md5", self.id_col).distinct()
 
     def build(self, docs: DataFrame) -> str:
         """(Re)build from the reference corpus; returns the version."""
+        rows = self._pairs(docs).withColumn(self._EPOCH, F.lit(0).cast("int"))
         return self._table.write_incremental(
-            self._pairs(docs, 0), self._EPOCH, {"0"}, cluster=False
+            rows, self._EPOCH, {"0"}, cluster=False
         )
 
     def extend(
@@ -841,45 +828,21 @@ class SpanDupIndex:
         write, prior epochs carried forward untouched. ``epoch``:
         explicit id for streaming callers (stable across foreachBatch
         retries → idempotent re-write of the same partition); defaults
-        to max + 1. An explicit epoch already holding DIFFERENT doc ids
-        is refused — bare epoch numbers collide across checkpoints/
-        streams, and overwriting would silently drop the committed
-        batch (see ``assert_epoch_replay``)."""
+        to the table's next epoch. An epoch already holding DIFFERENT
+        doc ids is refused — bare epoch numbers collide across
+        checkpoints/streams, and overwriting would silently drop the
+        committed batch (see ``VersionedParquetTable.append_epoch``)."""
         if epoch is None:
-            epoch = self._next_epoch()  # strictly > existing: no reuse
-        else:
-            from ig_etl_sync_spark.sources.versioned import (
-                assert_epoch_replay,
-            )
-
-            assert_epoch_replay(
-                self._table, self._EPOCH, int(epoch), docs, self.id_col
-            )
-        return self._table.write_incremental(
-            self._pairs(docs, int(epoch), spans=spans),
-            self._EPOCH,
-            {str(int(epoch))},
-            cluster=False,
+            epoch = self._table.next_epoch(self._EPOCH)
+        return self._table.append_epoch(
+            self._pairs(docs, spans=spans), self._EPOCH, epoch, self.id_col
         )
 
     def compact(self, *, target_files: int = 8) -> str | None:
         """Fold accumulated epochs into epoch 0, clustered by span_md5;
         contents unchanged (probe sees identical pairs)."""
-        cur = self._table.read()
-        if cur is None:
-            return None
-        epochs = {
-            str(r["e"])
-            for r in cur.select(
-                F.col(self._EPOCH).cast("int").alias("e")
-            ).distinct().collect()
-        }
-        rows = cur.withColumn(
-            self._EPOCH, F.lit(0).cast("int")
-        ).repartition(target_files, "span_md5")
-        return self._table.write_incremental(
-            rows, self._EPOCH, epochs | {"0"}, absorb_unpartitioned=True,
-            cluster=False,
+        return self._table.compact_epochs(
+            self._EPOCH, ["span_md5"], target_files
         )
 
     def probe(

@@ -284,6 +284,73 @@ class VersionedParquetTable:
         )
         return self.commit_staged(staged, keep)
 
+    # -- epoch-partitioned standing state ------------------------------
+    #
+    # The standing tables of the streaming operators (dedup and span
+    # indexes, ingest corpus, LM and mixture gates) hold one
+    # ``epoch_col=N`` partition per appended batch. An append writes
+    # O(batch) into its own epoch and hard-links every prior epoch;
+    # compaction folds every epoch into epoch 0.
+
+    def next_epoch(self, epoch_col: str) -> int:
+        """One past the largest ``epoch_col=N`` partition of the current
+        version, from the directory listing (no Spark job); 0 for a
+        missing table or one without partitions."""
+        v = self.latest_version()
+        if v is None:
+            return 0
+        epochs = _partition_dirs(os.path.join(self.path, v), epoch_col)
+        return max((int(e) for e in epochs), default=-1) + 1
+
+    def stage_epoch(
+        self, rows: DataFrame, epoch_col: str, epoch: int, id_col: str
+    ) -> str:
+        """Stage ``rows`` as epoch partition ``epoch`` (stamped into
+        ``epoch_col``), every other epoch linked. Refused by
+        :func:`assert_epoch_replay` when the epoch already holds a batch
+        with a different ``id_col`` set; an identical replay re-stages
+        the same rows. A single partition value needs no clustering
+        exchange (``cluster=False``)."""
+        epoch = int(epoch)
+        assert_epoch_replay(self, epoch_col, epoch, rows, id_col)
+        return self.stage_incremental(
+            rows.withColumn(epoch_col, F.lit(epoch).cast("int")),
+            epoch_col, {str(epoch)}, cluster=False,
+        )
+
+    def append_epoch(
+        self, rows: DataFrame, epoch_col: str, epoch: int, id_col: str
+    ) -> str:
+        """:meth:`stage_epoch`, then publish; returns the version id."""
+        return self.commit_staged(
+            self.stage_epoch(rows, epoch_col, epoch, id_col)
+        )
+
+    def compact_epochs(
+        self, epoch_col: str, cluster_cols: list[str], target_files: int
+    ) -> str | None:
+        """Fold every epoch into epoch 0, laid out as ``target_files``
+        files hash-clustered by ``cluster_cols``; contents unchanged.
+        Returns the published version id, or None for a missing table.
+
+        Every existing epoch is declared dirty so nothing is linked, and
+        the rewrite absorbs unpartitioned root rows: the one full
+        rewrite of an epoch table. A plain :meth:`write` would store the
+        rows unpartitioned, which the next append would not carry."""
+        v = self.latest_version()
+        if v is None:
+            return None
+        dirty = set(_partition_dirs(os.path.join(self.path, v), epoch_col))
+        rows = (
+            self.read()
+            .withColumn(epoch_col, F.lit(0).cast("int"))
+            .repartition(target_files, *cluster_cols)
+        )
+        return self.write_incremental(
+            rows, epoch_col, dirty | {"0"}, absorb_unpartitioned=True,
+            cluster=False,
+        )
+
     def vacuum(self, min_age_seconds: float = 3600.0) -> list[str]:
         """Remove ``.stg-*`` dirs a crashed writer staged but never
         committed, once older than the retention window (a slow

@@ -23,17 +23,17 @@ corpus contents on top of Spark's at-least-once replay.
 
 HARD REQUIREMENT: one checkpoint location per standing table pair.
 Epochs are keyed off the bare ``batch_id``, which resets with a fresh
-checkpoint and repeats across concurrent streams — the extend/append
-guards (:func:`~ig_etl_sync_spark.sources.versioned.assert_epoch_replay`)
-verify content-identity on epoch reuse, so a violation raises instead
+checkpoint and repeats across concurrent streams — every epoch write
+(:meth:`~ig_etl_sync_spark.sources.versioned.VersionedParquetTable.stage_epoch`)
+verifies content-identity on epoch reuse, so a violation raises instead
 of silently replacing a committed batch, but the supported deployment
 is still one stream + one checkpoint per (index, corpus) pair.
 
 Scale: per batch the probe shuffles only the batch's (id, band) pairs
-against the index (the batch is the small side), and BOTH appends are
-epoch-partitioned ``write_incremental`` calls — each batch writes one
-fresh epoch partition while prior epochs are carried by hard link, so
-per-batch cost is O(batch) data regardless of corpus size.
+against the index (the batch is the small side), and every append
+writes one fresh epoch partition while prior epochs are carried by
+hard link, so per-batch cost is O(batch) data regardless of corpus
+size.
 """
 
 from __future__ import annotations
@@ -48,7 +48,6 @@ from ig_etl_sync_spark.operators.dedup import (
     near_dup_pairs_minhash,
 )
 from ig_etl_sync_spark.operators.textops import normalized_text, word_shingles
-from ig_etl_sync_spark.sources.versioned import assert_epoch_replay
 
 #: corpus-table epoch partition column (one fresh partition per batch).
 _EPOCH = "cepoch"
@@ -190,143 +189,79 @@ class StreamingCorpusIngest:
         pinned.append(shared)
         if b.isEmpty():
             return
-        # 5. commit: index first, then the corpus append. BOTH writes
-        # key their epoch partition off batch_id (stable across
-        # Spark's at-least-once replay; +1 reserves epoch 0 for
-        # build/compact), so a retry OVERWRITES the same partitions
-        # with the same rows — idempotent per batch (Delta's
-        # txnAppId/txnVersion pattern). A crash between the two writes
-        # is completed by the retry: step 3's self-match filter keeps
-        # the already-indexed survivors alive, step 4 sees them absent
-        # from the corpus, the index overwrite is a no-op in content,
-        # and the corpus append finally lands — effectively-once, not
-        # at-most-once. Both writes are epoch-partitioned incrementals:
-        # O(batch) data moves; prior epochs are carried by link,
-        # never rewritten.
-        # Explicit epochs implement only the txnVersion half of Delta's
-        # txnAppId/txnVersion pattern, so bare batch_id numbers COLLIDE
-        # across checkpoints/streams: extend() and the corpus guard
-        # below verify content-identity (replay passes, a colliding
-        # different batch raises instead of silently replacing the
-        # committed partition). One checkpoint location per standing
-        # table pair remains the supported deployment.
+        # 5. commit: index first, then the corpus append. ALL writes
+        # key their epoch partition off batch_id (stable across Spark's
+        # at-least-once replay; +1 reserves epoch 0 for build/compact),
+        # so a retry OVERWRITES the same partitions with the same rows
+        # — idempotent per batch (Delta's txnAppId/txnVersion pattern).
+        # A crash between the index and corpus commits is completed by
+        # the retry: step 3's self-match filter keeps the
+        # already-indexed survivors alive, step 4 sees them absent from
+        # the corpus, the index overwrite is a no-op in content, and
+        # the corpus append finally lands — effectively-once, not
+        # at-most-once. Bare batch_id numbers COLLIDE across
+        # checkpoints/streams: every epoch write verifies
+        # content-identity (a replay passes, a colliding different
+        # batch raises instead of silently replacing the committed
+        # partition). One checkpoint location per standing table pair
+        # remains the supported deployment.
         epoch = int(batch_id) + 1
-        assert_epoch_replay(self.corpus, _EPOCH, epoch, b, id_col)
-        if self.span_index is None:
-            # Overlap the corpus append's STAGING (the expensive Spark
-            # write of the epoch's files into an invisible .stg-* dir)
-            # with the index extend (guide §2.6 / the GraphStore write
-            # staging precedent); only the cheap pointer-flip COMMIT is
-            # ordered after the extend — the crash contract requires the
-            # index commit to precede the corpus COMMIT, not its
-            # staging. A crash mid-overlap leaves an orphan .stg-* dir
-            # reclaimed by vacuum; the replay re-stages from scratch.
-            from concurrent.futures import ThreadPoolExecutor
+        spans_b = None
+        if self.span_index is not None:
+            # one doc_spans pass feeds the span extend AND the probe.
+            # Pinned AFTER the span_md5 shuffle, as cache():
+            # InMemoryRelation preserves the hash partitioning (a
+            # localCheckpoint drops it — measured), so the extend's
+            # (span_md5, id) distinct and the probe's span-keyed join
+            # are BOTH exchange-free on the shared frame.
+            from ig_etl_sync_spark.operators.spans import _by_span, doc_spans
 
-            with ThreadPoolExecutor(max_workers=1) as ex:
-                staged_fut = ex.submit(
-                    self.corpus.stage_incremental,
-                    b.withColumn(_EPOCH, F.lit(epoch).cast("int")),
-                    _EPOCH,
-                    {str(epoch)},
-                    cluster=False,
-                )
-                self.index.extend(b, epoch=epoch, sigs=sigs, sh=sh)
-                staged = staged_fut.result()
-            self.corpus.commit_staged(staged)
+            sid, stext = self.span_index.id_col, self.span_index.text_col
+            spans_b = _by_span(
+                doc_spans(b, sid, stext, self.span_index.k)
+            ).cache()
+            pinned.append(spans_b)
+            stored = self._span_cut(b, spans_b)
         else:
-            # 6. ExactSubstr cut: excise spans already in the standing
-            # span index (or duplicated in-batch) from the STORED text,
-            # then extend the span index with the PRE-CUT spans (the
-            # duplicated text must stay indexed or the third copy would
-            # not match). Extend-before-cut also makes a crash between
-            # the two span steps replay-identical: distinct (span, doc)
-            # pairs make the doc's own prior extend invisible to its
-            # re-probe.
-            # The MINHASH extend is independent of the entire span path
-            # (different table, different artifact) and the SPAN extend
-            # is independent of the span probe (round 8: the probe
-            # derives the batch's pairs from the shared cached spans
-            # frame instead of reading the just-committed extend back,
-            # so it no longer serializes behind the extend's commit) —
-            # BOTH extends run on worker threads CONCURRENTLY with the
-            # probe + cut (Spark schedules jobs from multiple threads
-            # fairly — the GraphStore write staging precedent). The
-            # crash-ordering contract only requires both INDEX commits
-            # to precede the corpus append: the extends may land in
-            # either order (a crash after just one is completed by the
-            # replay the same way as before), and both `result()` calls
-            # join before the corpus write. Shared pins (b, sigs, sh)
-            # were materialized by the isEmpty action above; spans_b is
-            # a cache() whose concurrent first materialization the
-            # CacheManager dedupes across threads.
-            from concurrent.futures import ThreadPoolExecutor
+            stored = b
+        # The corpus stage runs its epoch guard BEFORE any index
+        # extend, so a colliding batch is refused with the indexes
+        # untouched. Only the cheap pointer flip waits for the index
+        # commits (the crash-ordering contract); a crash in between
+        # leaves an orphan .stg-* dir for vacuum, and the replay
+        # re-stages.
+        staged = self.corpus.stage_epoch(stored, _EPOCH, epoch, id_col)
+        # independent tables: Spark schedules jobs from both threads
+        # fairly (the GraphStore staging precedent). The extends index
+        # the PRE-CUT text: the duplicated spans must stay indexed or
+        # the third copy would not match.
+        from concurrent.futures import ThreadPoolExecutor
 
-            ex = ThreadPoolExecutor(max_workers=3)
-            try:
-                fut = ex.submit(
-                    self.index.extend, b, epoch=epoch, sigs=sigs, sh=sh
+        with ThreadPoolExecutor(max_workers=2) as ex:
+            futs = [ex.submit(self.index.extend, b, epoch=epoch, sigs=sigs, sh=sh)]
+            if spans_b is not None:
+                futs.append(
+                    ex.submit(self.span_index.extend, b, epoch=epoch, spans=spans_b)
                 )
-                b, span_fut = self._span_cut(b, epoch, pinned, ex)
-                # The corpus append's STAGING depends only on the cut
-                # text (the probe over the shared spans_b), never on
-                # either extend — stage it on the third thread while
-                # both extends run (guide §2.6; round 8). Only the
-                # pointer-flip COMMIT must wait for both index commits
-                # (the crash-ordering contract): a crash mid-overlap
-                # leaves an orphan .stg-* dir for vacuum and the replay
-                # re-stages.
-                staged_fut = ex.submit(
-                    self.corpus.stage_incremental,
-                    b.withColumn(_EPOCH, F.lit(epoch).cast("int")),
-                    _EPOCH,
-                    {str(epoch)},
-                    cluster=False,
-                )
-                span_fut.result()  # span extend committed before corpus
-                fut.result()  # minhash extend committed before corpus
-                staged = staged_fut.result()
-            finally:
-                ex.shutdown(wait=True)
-            self.corpus.commit_staged(staged)
+            for fut in futs:
+                fut.result()
+        self.corpus.commit_staged(staged)
 
-    def _span_cut(self, b: DataFrame, epoch: int, pinned, ex):
-        """Span-index extend (submitted to ``ex``, runs concurrently)
-        + touched-only probe + text excision for one batch (step 6) —
-        returns ``(b with cut texts swapped in, extend future)``."""
+    def _span_cut(self, b: DataFrame, spans_b: DataFrame) -> DataFrame:
+        """ExactSubstr cut (step 6): ``b`` with every doc's spans that
+        the standing span index already holds (or the batch repeats)
+        excised from its stored text. ``spans_b``: the batch's pinned
+        :func:`~ig_etl_sync_spark.operators.spans.doc_spans`."""
         sid, stext = self.span_index.id_col, self.span_index.text_col
-        # one doc_spans pass feeds the extend AND the probe (the
-        # same hoist as sigs/sh above; b is final by here, so no
-        # semi-join slack between the two consumers). Pinned AFTER
-        # the span_md5 shuffle, as cache(): InMemoryRelation
-        # preserves the hash partitioning (a localCheckpoint drops
-        # it — measured), so the extend's (span_md5, id) distinct
-        # and the probe's span-keyed join are BOTH exchange-free on
-        # the shared frame; the columns are narrow ints + one md5
-        # (the wide-array cache tax doesn't apply).
-        from ig_etl_sync_spark.operators.spans import _by_span, doc_spans
-
-        spans_b = _by_span(
-            doc_spans(b, sid, stext, self.span_index.k)
-        ).cache()
-        pinned.append(spans_b)
-        span_fut = ex.submit(
-            self.span_index.extend, b, epoch=epoch, spans=spans_b
-        )
         # only docs with an actual cut swap in the rebuilt text —
         # clean_text is a NORMALIZED-token rejoin, and untouched
         # docs must keep their original bytes. touched_only pushes
         # that filter into the probe plan: no _full rebuild or
         # whole-batch left-join spine for rows this consumer drops.
-        # The probe derives the batch's pairs from the shared cached
-        # spans_b (NOT index_covers_batch read-back — round 8): the
-        # probe counts DISTINCT (span, doc) pairs over batch ∪ index,
-        # so whichever index version its read observes (pre- or
-        # post-extend, the extend is racing on another thread) the
-        # pair SET is identical — batch pairs union'd from spans_b
-        # collapse with any read back from the index. Read-back was
-        # faster than re-derivation SERIALLY (round 7); overlapping
-        # the ~2 s extend behind the probe beats both (measured).
+        # The probe derives the batch's pairs from spans_b and counts
+        # DISTINCT (span, doc) pairs over batch ∪ index, so it sees the
+        # same pair set whether or not the index already holds this
+        # batch (a replay after a crash between extend and append).
         cut = (
             self.span_index.probe(
                 b,
@@ -337,7 +272,7 @@ class StreamingCorpusIngest:
             .where(F.col("covered_tokens") > 0)
             .select(F.col(sid), F.col("clean_text"))
         )
-        b = (
+        return (
             b.join(cut, sid, "left")
             .withColumn(
                 stext,
@@ -345,28 +280,10 @@ class StreamingCorpusIngest:
             )
             .drop("clean_text")
         )
-        return b, span_fut
 
     def compact(self, *, target_files: int = 8) -> None:
         """Fold the per-batch epoch partitions of BOTH standing tables
         (index and corpus) into single-epoch versions — run between
-        batches to bound small-file accumulation. Contents unchanged;
-        see :meth:`MinhashDedupIndex.compact` for why this must flow
-        through ``write_incremental``, not a plain rewrite."""
+        batches to bound small-file accumulation. Contents unchanged."""
         self.index.compact(target_files=target_files)
-        cur = self.corpus.read()
-        if cur is None:
-            return
-        epochs = {
-            str(r["e"])
-            for r in cur.select(
-                F.col(_EPOCH).cast("int").alias("e")
-            ).distinct().collect()
-        }
-        rows = cur.withColumn(_EPOCH, F.lit(0).cast("int")).repartition(
-            target_files, F.col(self.index.id_col)
-        )
-        self.corpus.write_incremental(
-            rows, _EPOCH, epochs | {"0"}, absorb_unpartitioned=True,
-            cluster=False,
-        )
+        self.corpus.compact_epochs(_EPOCH, [self.index.id_col], target_files)

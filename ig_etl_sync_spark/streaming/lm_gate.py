@@ -20,8 +20,8 @@ extends and the scores append re-extends the SAME epoch partitions
 with the SAME counts, so the model state — and therefore every score —
 is identical on replay. Scoring against counts-so-far-minus-this-batch
 would make a replayed batch see a different model and silently store
-different scores. All three writes are epoch-keyed
-``write_incremental`` calls guarded by ``assert_epoch_replay``.
+different scores. All three writes are epoch-keyed, replay-guarded
+``VersionedParquetTable.append_epoch`` calls.
 
 Exactness: the same cross-multiplied floor-log2 integer discipline as
 X99 — bits = bitlen((lam_den·c1·N) div (lam_num·c2·N +
@@ -43,7 +43,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ig_etl_sync_spark.operators.textops import normalized_text, tokens
-from ig_etl_sync_spark.sources.versioned import assert_epoch_replay
 
 _EPOCH = "lepoch"
 
@@ -117,7 +116,6 @@ class StreamingLMQualityGate:
             t.select(F.explode("_t").alias("w"))
             .groupBy("w")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .withColumn(_EPOCH, F.lit(epoch).cast("int"))
         )
         ln = F.greatest(F.size(F.col("_t")) - F.lit(1), F.lit(0))
         ex = (
@@ -139,19 +137,13 @@ class StreamingLMQualityGate:
         )
         bi_rows = ex.groupBy("w1", "w2").agg(
             F.count(F.lit(1)).cast("long").alias("n")
-        ).withColumn(_EPOCH, F.lit(epoch).cast("int"))
+        )
 
         # 1-2. extend the standing model, epoch-keyed and replay-guarded
         # (word/bigram-keyed id columns: a replay presents the same key
         # sets, a colliding different batch raises)
-        assert_epoch_replay(self.uni, _EPOCH, epoch, uni_rows, "w")
-        self.uni.write_incremental(
-            uni_rows, _EPOCH, {str(epoch)}, cluster=False
-        )
-        assert_epoch_replay(self.bi, _EPOCH, epoch, bi_rows, "w1")
-        self.bi.write_incremental(
-            bi_rows, _EPOCH, {str(epoch)}, cluster=False
-        )
+        self.uni.append_epoch(uni_rows, _EPOCH, epoch, "w")
+        self.bi.append_epoch(bi_rows, _EPOCH, epoch, "w1")
 
         # 3. score the batch against counts-so-far (self-inclusive —
         # see the module docstring's replay argument)
@@ -186,9 +178,5 @@ class StreamingLMQualityGate:
                 .cast("long")
                 .alias("surprisal_ppm"),
             )
-            .withColumn(_EPOCH, F.lit(epoch).cast("int"))
         )
-        assert_epoch_replay(self.scores, _EPOCH, epoch, scored, id_col)
-        self.scores.write_incremental(
-            scored, _EPOCH, {str(epoch)}, cluster=False
-        )
+        self.scores.append_epoch(scored, _EPOCH, epoch, id_col)

@@ -22,8 +22,8 @@ Docs of groups OUTSIDE the recipe are dropped (rate 0 by X52's
 convention). Decisions are REPLAY-DETERMINISTIC: the state read
 excludes the current epoch's partition, so a foreachBatch retry after
 a crash between the two writes recomputes the SAME admissions from
-the SAME prior-epoch state (both writes are epoch-keyed
-``write_incremental`` guarded by ``assert_epoch_replay``; the state
+the SAME prior-epoch state (both writes are epoch-keyed, replay-guarded
+``VersionedParquetTable.append_epoch`` calls; the state
 filter is what makes self-state-pollution on replay impossible —
 the counts-so-far analog of the span index's extend-before-probe
 argument, inverted: here the decision must EXCLUDE this batch).
@@ -45,7 +45,6 @@ from pyspark.sql import functions as F
 
 from ig_etl_sync_spark.functions.hashing import md5_int32
 from ig_etl_sync_spark.operators.textops import token_count
-from ig_etl_sync_spark.sources.versioned import assert_epoch_replay
 
 _EPOCH = "mepoch"
 
@@ -191,19 +190,10 @@ class StreamingMixtureGate:
                 F.col("_nt").alias("n_tokens"),
                 F.col(text_col),
             )
-            .withColumn(_EPOCH, F.lit(epoch).cast("int"))
             .localCheckpoint(eager=False)  # corpus write + counts agg
         )
-        count_rows = (
-            admitted.groupBy(g)
-            .agg(F.sum("n_tokens").cast("long").alias("n"))
-            .withColumn(_EPOCH, F.lit(epoch).cast("int"))
+        count_rows = admitted.groupBy(g).agg(
+            F.sum("n_tokens").cast("long").alias("n")
         )
-        assert_epoch_replay(self.counts, _EPOCH, epoch, count_rows, g)
-        self.counts.write_incremental(
-            count_rows, _EPOCH, {str(epoch)}, cluster=False
-        )
-        assert_epoch_replay(self.corpus, _EPOCH, epoch, admitted, id_col)
-        self.corpus.write_incremental(
-            admitted, _EPOCH, {str(epoch)}, cluster=False
-        )
+        self.counts.append_epoch(count_rows, _EPOCH, epoch, g)
+        self.corpus.append_epoch(admitted, _EPOCH, epoch, id_col)

@@ -431,6 +431,35 @@ def test_extend_explicit_epoch_guard_minhash_and_span(spark, tmp_path):
         sidx.extend(other, epoch=3)
 
 
+def test_extend_after_empty_build_minhash_and_span(spark, tmp_path):
+    """An index built from an EMPTY corpus has no epoch partition; the
+    default extend must append at a fresh epoch (it used to take the
+    max of zero rows and fail on ``int(None)``)."""
+    import os
+
+    from ig_etl_sync_spark.operators.dedup import MinhashDedupIndex
+    from ig_etl_sync_spark.operators.spans import SpanDupIndex
+
+    empty = spark.createDataFrame([], "doc_id string, text string")
+    docs = spark.createDataFrame(
+        [("a", "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
+        "doc_id string, text string",
+    )
+    for index, epoch_col in (
+        (MinhashDedupIndex(spark, str(tmp_path / "m")), "iepoch"),
+        (SpanDupIndex(spark, str(tmp_path / "s")), "sepoch"),
+    ):
+        index.build(empty)
+        assert index._table.read().count() == 0
+        index.extend(docs)
+        t = index._table
+        vdir = os.path.join(t.path, t.latest_version())
+        assert [d for d in os.listdir(vdir) if d.startswith(epoch_col)] == [
+            f"{epoch_col}=0"
+        ]
+        assert {r.doc_id for r in t.read().collect()} == {"a"}
+
+
 def test_streaming_span_cut_contract_survives_mid_batch_crash(spark, tmp_path):
     """The contract query's two-batch span-cut flow, with a simulated
     crash between batch 2's span-index extend and the corpus append:

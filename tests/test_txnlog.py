@@ -260,3 +260,64 @@ def test_cluster_false_file_count_stays_bounded(spark, table):
     assert n_files <= cores, (n_files, cores)
     # contents unchanged by the pin
     assert table.read().count() == 10
+
+
+# ------------------------------------------- epoch-append protocol
+
+
+def _epoch_rows(spark, ids):
+    return spark.createDataFrame([(i, f"t{i}") for i in ids], "id int, t string")
+
+
+def _contents(t):
+    return sorted((r.id, r.t, r.ep) for r in t.read().collect())
+
+
+def test_next_epoch_from_listing(spark, tmp_path, table):
+    """next_epoch: 0 for a missing table and for a table without
+    partitions (an empty write), else one past the largest epoch dir."""
+    assert table.next_epoch("ep") == 0
+    empty = VersionedParquetTable(spark, str(tmp_path / "empty"))
+    empty.write_incremental(
+        spark.createDataFrame([], "id int, t string, ep int"), "ep", {"0"}
+    )
+    assert empty.exists() and empty.next_epoch("ep") == 0
+    table.append_epoch(_epoch_rows(spark, [1]), "ep", 0, "id")
+    table.append_epoch(_epoch_rows(spark, [2]), "ep", 7, "id")
+    assert table.next_epoch("ep") == 8
+
+
+def test_append_epoch_replay_is_noop_and_different_batch_raises(
+    spark, table
+):
+    table.append_epoch(_epoch_rows(spark, [1, 2]), "ep", 3, "id")
+    before = _contents(table)
+    assert before == [(1, "t1", 3), (2, "t2", 3)]
+    # an identical replay re-writes the same epoch with the same rows
+    table.append_epoch(_epoch_rows(spark, [2, 1]), "ep", 3, "id")
+    assert _contents(table) == before
+    head = table.latest_version()
+    with pytest.raises(ValueError, match="DIFFERENT batch"):
+        table.append_epoch(_epoch_rows(spark, [1, 9]), "ep", 3, "id")
+    # the refusal staged nothing and published nothing
+    assert table.latest_version() == head and _contents(table) == before
+
+
+def test_compact_epochs_keeps_contents_and_appends_resume(spark, table):
+    assert table.compact_epochs("ep", ["id"], 2) is None  # missing table
+    for epoch, ids in ((0, [1, 2]), (1, [3]), (2, [4, 5])):
+        table.append_epoch(_epoch_rows(spark, ids), "ep", epoch, "id")
+    ids_t = sorted((r.id, r.t) for r in table.read().collect())
+    table.compact_epochs("ep", ["id"], 2)
+    vdir = os.path.join(table.path, table.latest_version())
+    assert sorted(d for d in os.listdir(vdir) if d.startswith("ep=")) == [
+        "ep=0"
+    ]
+    assert sorted((r.id, r.t) for r in table.read().collect()) == ids_t
+    assert {r.ep for r in table.read().collect()} == {0}
+    nxt = table.next_epoch("ep")
+    assert nxt == 1
+    table.append_epoch(_epoch_rows(spark, [6]), "ep", nxt, "id")
+    assert sorted((r.id, r.ep) for r in table.read().collect()) == [
+        (1, 0), (2, 0), (3, 0), (4, 0), (5, 0), (6, 1)
+    ]

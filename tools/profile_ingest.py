@@ -65,7 +65,7 @@ def run_once(report: bool) -> None:
     idx = MinhashDedupIndex(spark, f"{root}/idx")
     corpus = VersionedParquetTable(spark, f"{root}/corpus")
     span_idx = SpanDupIndex(spark, f"{root}/spans", k=8, min_docs=2)
-    for name in ("write_incremental", "read"):
+    for name in ("stage_epoch", "commit_staged", "read"):
         orig = getattr(corpus, name)
 
         def make(orig=orig, name=name):
