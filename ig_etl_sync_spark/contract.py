@@ -445,8 +445,8 @@ def graph_detach_cascade_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = GraphStore(spark, root, n_buckets=8)
     # ONE lineitem scan + identity dedup feeds the part keys AND the
     # edge batch (cached: two consumers, and cache() skips the
-    # plan+codegen cost localCheckpoint pays at call time); write_edges
-    # is told the frame is already unique so it skips its own dedup
+    # plan+codegen cost localCheckpoint pays at call time; the dedup
+    # keeps the cached frame at one row per pair)
     edges = (
         li.select(
             F.col("l_suppkey").cast("string").alias("a_id"),
@@ -468,7 +468,7 @@ def graph_detach_cascade_txnlog(spark: SparkSession, sf_dir: str) -> DataFrame:
         "part",
         to_create=edges.select(F.col("b_id").alias("external_id")).distinct(),
     )
-    store.write_edges("supplier", "supplies", "part", edges, assume_unique=True)
+    store.write_edges("supplier", "supplies", "part", edges)
     doomed = (
         sup.join(
             F.broadcast(nat.where(F.col("n_name") == "GERMANY")),

@@ -1217,8 +1217,9 @@ class MinhashDedupIndex:
       new immutable version, so the next probe sees it;
     - :meth:`compact` folds the per-batch epochs into epoch 0.
 
-    Appends and compaction use the table's epoch protocol
-    (``append_epoch`` / ``next_epoch`` / ``compact_epochs``).
+    Builds, appends and compaction use the table's epoch protocol
+    (``replace_epochs`` / ``append_epoch`` / ``next_epoch`` /
+    ``compact_epochs``).
 
     Scale: the index holds ``bands`` rows per document with the
     distinct-shingle array attached — written once, partitioned by the
@@ -1284,14 +1285,9 @@ class MinhashDedupIndex:
         return banded.join(sh, self.id_col)
 
     def build(self, docs: DataFrame) -> str:
-        """(Re)build the index from the reference corpus; returns the
-        published version id."""
-        rows = self._index_rows(docs).withColumn(
-            self._EPOCH, F.lit(0).cast("int")
-        )
-        return self._table.write_incremental(
-            rows, self._EPOCH, {"0"}, cluster=False
-        )
+        """(Re)build the index from the reference corpus alone, replacing
+        every epoch; returns the published version id."""
+        return self._table.replace_epochs(self._index_rows(docs), self._EPOCH)
 
     def extend(
         self,

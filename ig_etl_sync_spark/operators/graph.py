@@ -7,10 +7,11 @@ relational tables + MERGE-style DataFrame ops:
   full-property replacement keyed on ``external_id``. Implemented as
   ``prev ANTI-JOIN updates  UNION  updates`` then atomic table swap —
   exactly Delta's ``MERGE WHEN MATCHED UPDATE SET * WHEN NOT MATCHED
-  INSERT *`` without requiring Delta.
+  INSERT *`` without requiring Delta. The updates hold one row per key
+  (``reconcile.hashed_incoming`` picks a duplicate key's winner).
 - S5 edge merge (``neo4j.go:89-91``): the Cypher double-``MATCH`` means
   an edge lands only if BOTH endpoints exist → two ``left_semi`` joins
-  (J2), then identity dedup on ``(a_id, b_id)``.
+  (J2), then one identity dedup on ``(a_id, b_id)`` in the merge.
 - S6 keyed delete with DETACH cascade (``neo4j.go:116-126``): node
   removal by anti-join PLUS explicit cleanup of every edge table touching
   that label — the one Neo4j behavior Spark does not give for free, so
@@ -48,7 +49,7 @@ import os
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
@@ -67,24 +68,6 @@ class EdgeType:
     @property
     def table_name(self) -> str:
         return f"edges_{self.a_label}_{self.rel}_{self.b_label}"
-
-
-def _dedup_last_writer(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Deterministic last-writer-wins for duplicate keys.
-
-    The reference's ``UNWIND`` order silently decided which duplicate won
-    (``neo4j.go:87,95``, SURVEY §2.5); we define the winner as the max
-    row by a stable full-row ordering, so re-runs are reproducible.
-    """
-    others = [c for c in df.columns if c not in keys]
-    if not others:
-        return df.dropDuplicates(keys)
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc_nulls_last() for c in others])
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 class GraphStore:
@@ -240,7 +223,9 @@ class GraphStore:
         """Upsert ``to_create`` (full-property replace) and delete keys in
         ``to_delete`` with their DETACH cascade, as one transaction: one
         version flip of the node table plus one per edge table the
-        cascade rewrites.
+        cascade rewrites. ``to_create`` holds one row per key, as a
+        reconcile diff does (``reconcile.hashed_incoming``); ``to_delete``
+        may repeat one.
 
         Incremental: only buckets containing a created/deleted key are
         read (partition-pruned) and rewritten; every clean bucket of
@@ -252,18 +237,14 @@ class GraphStore:
             return
         prev = table.read()
 
-        if to_create is not None:
-            upd = _dedup_last_writer(
-                to_create.withColumn(KEY_COL, F.col(KEY_COL).cast("string")), [KEY_COL]
-            ).withColumn(GBUCKET, self._bucket_of(F.col(KEY_COL)))
-            # Diamond rule: upd feeds the dirty-bucket collect, the
-            # matched-row anti-join AND the union — checkpoint or the
-            # last-writer dedup window runs three times.
-            upd = self._share(upd)
-        else:
-            upd = None
+        upd = (
+            to_create.withColumn(KEY_COL, F.col(KEY_COL).cast("string"))
+            .withColumn(GBUCKET, self._bucket_of(F.col(KEY_COL)))
+            if to_create is not None
+            else None
+        )
         dels = (
-            to_delete.select(F.col(KEY_COL).cast("string").alias(KEY_COL)).distinct()
+            to_delete.select(F.col(KEY_COL).cast("string").alias(KEY_COL))
             if to_delete is not None
             else None
         )
@@ -311,9 +292,9 @@ class GraphStore:
         collected by write_nodes); a b-side cascade
         first finds the buckets holding affected edges via a
         column-pruned semi-join scan of (b_id, bucket), then rewrites
-        only those. ``deleted_keys`` arrives deduplicated and
-        checkpointed from write_nodes (consumed once per registered
-        edge type)."""
+        only those. ``deleted_keys`` arrives checkpointed from
+        write_nodes (consumed once per registered edge type); a repeated
+        key is harmless, since it only feeds semi- and anti-joins."""
         dels = deleted_keys
         writes = []
         for et in self._load_registry():
@@ -359,14 +340,10 @@ class GraphStore:
         rel: str,
         b_label: str,
         edges: DataFrame,
-        assume_unique: bool = False,
     ) -> None:
-        """``assume_unique=True`` asserts the caller's frame is already
-        identity-deduplicated on ``(a_id, b_id)`` and skips the internal
-        ``dropDuplicates`` — a full shuffle of the edge batch. Reconcile
-        diff outputs and any frame that just ran its own identity dedup
-        qualify; when in doubt leave it False (a violated assertion
-        surfaces as duplicate edges in the table)."""
+        """Merge ``edges`` ``(a_id, b_id)`` whose endpoints both exist;
+        repeats collapse in the one identity dedup after the endpoint
+        semi-joins (over the dirty buckets, or a new table's batch)."""
         et = EdgeType(a_label, rel, b_label)
         self._register_edge(et)
 
@@ -376,8 +353,6 @@ class GraphStore:
             F.col("a_id").cast("string").alias("a_id"),
             F.col("b_id").cast("string").alias("b_id"),
         )
-        if not assume_unique:
-            incoming = incoming.dropDuplicates(["a_id", "b_id"])
 
         # MATCH (a) MATCH (b): drop edges whose endpoints don't exist.
         # Node tables are usually the big side; the incoming edge batch is
@@ -396,12 +371,12 @@ class GraphStore:
             # new table: all-dirty is exact (nothing to link) and skips
             # the dirty-bucket collect job, so validated is staged
             # exactly once — a checkpoint would only re-materialize it
-            merged = validated
+            merged = validated.dropDuplicates(["a_id", "b_id"])
             dirty = self._all_buckets()
         else:
             # Diamond rule: validated feeds BOTH the dirty-bucket
             # collect and the MERGE union — without a checkpoint the
-            # batch dedup + two endpoint semi-joins run twice per sync.
+            # two endpoint semi-joins run twice per sync.
             validated = self._share(validated)
             # MERGE dedup by edge identity (a_id, b_id): same a_id ⇒
             # same bucket, so deduping inside dirty buckets is complete.

@@ -50,6 +50,7 @@ __all__ = ["kmeans_assign", "quantize_embeddings"]
 #: (truncating and floor integer division then agree cross-engine).
 _SCALE = 1_000_000
 _OFFSET = 2.0
+_QMAX = int(2 * _OFFSET * _SCALE)  # q of a +_OFFSET component
 
 
 def quantize_embeddings(
@@ -59,9 +60,9 @@ def quantize_embeddings(
 
     Correctness of the cross-engine contract depends on every quantized
     value being strictly positive (truncating ``div`` and floor ``//``
-    agree only then), which requires every component > ``-_OFFSET``
-    (−2.0). Out-of-range components raise at scan time rather than
-    silently diverging centroid means."""
+    agree only then), which requires every component >= ``-_OFFSET``
+    (−2.0); the symmetric bound <= ``_OFFSET`` keeps the assignment's
+    int64 math exact. Out-of-range components raise at scan time."""
     q = F.transform(
         F.col(vec_col),
         lambda x: F.floor(
@@ -72,13 +73,15 @@ def quantize_embeddings(
     # disagree only for NEGATIVE q, so q >= 0 is the exact contract —
     # and Catalyst CSEs the transform instead of running a second array
     # pass; empty/NULL arrays have nothing out of range.
-    in_range = F.coalesce(F.array_min(q) >= F.lit(0), F.lit(True))
+    in_range = F.coalesce(
+        (F.array_min(q) >= F.lit(0)) & (F.array_max(q) <= F.lit(_QMAX)), F.lit(True)
+    )
     checked = F.when(in_range, q).otherwise(
         F.raise_error(
             F.lit(
-                f"quantize_embeddings: component <= -{_OFFSET} breaks the "
-                "strictly-positive quantization contract (raise _OFFSET "
-                "or rescale inputs)"
+                f"quantize_embeddings: a component outside [-{_OFFSET}, "
+                f"{_OFFSET}] breaks the strictly-positive quantization "
+                "contract (raise _OFFSET or rescale inputs)"
             )
         )
     )
@@ -95,8 +98,8 @@ def _np_assign_udf(cents: list[list[int]]):
     PER ROW at k=16 — ~20 s of the 37 s executor time of
     semantic_dedup_screen at sf0.1). Bit-identity is unconditional
     here, unlike the float folds the repo keeps in HOF form: every
-    quantity is an exact int64 (quantized values ≤ 4.5e6, squared-diff
-    sums ≤ 64·(4.5e6)² ≈ 1.3e15 « 2^63), integer addition is
+    quantity is an exact int64 (q ≤ _QMAX = 4e6 is guarded, so squared-
+    diff sums stay ≤ dims·1.6e13 « 2^63 below 5e5 dims), integer addition is
     associative so summation order cannot matter, and the strict `<`
     running min with centroids scanned in cid order keeps the smallest
     cid on ties (pinned against a pure-Python reference scan, ties
@@ -165,14 +168,24 @@ def kmeans_assign(
         .select("qv")
         .collect()
     )
-    cents: list[list[int]] = [[int(x) for x in r["qv"]] for r in seed_rows]
-    if not cents:
+    if not seed_rows:
         # empty corpus: empty result, schema preserved
         return corpus.select(
             F.col("_id").alias(id_col),
             F.lit(None).cast("long").alias("cluster"),
             F.lit(None).cast("long").alias("dist2"),
         )
+    # The UDF stacks vectors into one matrix: the seeds are checked here,
+    # every other vector in-plan before the UDF sees it.
+    dims = len(seed_rows[0]["qv"] or ())
+    bad = f"kmeans_assign: NULL, empty or ragged {vec_col} (want {dims} components)"
+    if not dims or any(len(r["qv"] or ()) != dims for r in seed_rows):
+        raise ValueError(bad)
+    cents: list[list[int]] = [[int(x) for x in r["qv"]] for r in seed_rows]
+    corpus = corpus.withColumn(
+        "qv",
+        F.when(F.size("qv") == dims, F.col("qv")).otherwise(F.raise_error(F.lit(bad))),
+    )
 
     def assign(cs: list[list[int]]) -> DataFrame:
         """One vectorized nearest-centroid pass (see _np_assign_udf):

@@ -30,7 +30,8 @@ incoming side only.
 Digest soundness: XOR of per-row hashes is order- and
 partition-independent (abelian), so the digest is stable under any
 shuffle placement. XOR alone would miss a value appearing an even
-number of times; keys are unique per side (snapshot form), and the
+number of times; keys are unique per side (the snapshot form, and
+``reconcile.hashed_incoming``'s one row per key), and the
 row count catches pure additions/removals that happen to XOR to the
 same value. Collisions (a changed bucket digesting equal) are ~2^-64
 per bucket — the same risk class the reference accepts for its change
@@ -148,10 +149,10 @@ def merkle_diff(
         empty = hashed.sparkSession.createDataFrame([], "bucket bigint")
         return MerkleDiff(diff=d, changed=empty, n_buckets=n_buckets)
 
-    # Snapshot form of the incoming side: same dedup rule as
-    # reconcile.snapshot_of (max hash wins) so digests are well-defined
-    # even when a batch carries duplicate keys.
-    inc_snap = hashed.groupBy(KEY_COL).agg(F.max(HASH_COL).alias(HASH_COL))
+    # Snapshot form of the incoming side: hashed_incoming already holds
+    # one row per key, so digests are well-defined even when a batch
+    # lists a key twice.
+    inc_snap = hashed.select(KEY_COL, HASH_COL)
     cur_d = bucket_digests(inc_snap, n_buckets, row_digest=row_digest)
     prev_d = (
         prev_digests

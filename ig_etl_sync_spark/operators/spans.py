@@ -765,8 +765,9 @@ class SpanDupIndex:
     index — ``extend`` writes O(batch) into a fresh partition and
     carries prior epochs by hard link; ``compact``
     folds the accumulated partitions into epoch 0 clustered by
-    span_md5 (the probe join's at-rest layout). Both go through the
-    table's epoch protocol (``append_epoch`` / ``compact_epochs``).
+    span_md5 (the probe join's at-rest layout); ``build`` replaces every
+    epoch. All three go through the table's epoch protocol
+    (``replace_epochs`` / ``append_epoch`` / ``compact_epochs``).
     """
 
     def __init__(
@@ -811,11 +812,9 @@ class SpanDupIndex:
         return spans.select("span_md5", self.id_col).distinct()
 
     def build(self, docs: DataFrame) -> str:
-        """(Re)build from the reference corpus; returns the version."""
-        rows = self._pairs(docs).withColumn(self._EPOCH, F.lit(0).cast("int"))
-        return self._table.write_incremental(
-            rows, self._EPOCH, {"0"}, cluster=False
-        )
+        """(Re)build from the reference corpus alone, replacing every
+        epoch; returns the version."""
+        return self._table.replace_epochs(self._pairs(docs), self._EPOCH)
 
     def extend(
         self,

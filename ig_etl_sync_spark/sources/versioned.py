@@ -326,29 +326,30 @@ class VersionedParquetTable:
             self.stage_epoch(rows, epoch_col, epoch, id_col)
         )
 
+    def replace_epochs(self, rows: DataFrame, epoch_col: str) -> str:
+        """Publish ``rows`` as the whole table, all in epoch 0; returns
+        the version id. Every existing epoch is declared dirty so
+        nothing is linked, and the rewrite absorbs unpartitioned root
+        rows: the one full rewrite of an epoch table (a rebuild and
+        :meth:`compact_epochs`). A plain :meth:`write` would store the
+        rows unpartitioned, which the next append would not carry."""
+        v = self.latest_version()
+        dirty = set(_partition_dirs(os.path.join(self.path, v), epoch_col)) if v else set()
+        return self.write_incremental(
+            rows.withColumn(epoch_col, F.lit(0).cast("int")), epoch_col,
+            dirty | {"0"}, absorb_unpartitioned=True, cluster=False,
+        )
+
     def compact_epochs(
         self, epoch_col: str, cluster_cols: list[str], target_files: int
     ) -> str | None:
-        """Fold every epoch into epoch 0, laid out as ``target_files``
-        files hash-clustered by ``cluster_cols``; contents unchanged.
-        Returns the published version id, or None for a missing table.
-
-        Every existing epoch is declared dirty so nothing is linked, and
-        the rewrite absorbs unpartitioned root rows: the one full
-        rewrite of an epoch table. A plain :meth:`write` would store the
-        rows unpartitioned, which the next append would not carry."""
-        v = self.latest_version()
-        if v is None:
+        """Fold every epoch into epoch 0 (:meth:`replace_epochs`) as
+        ``target_files`` files hash-clustered by ``cluster_cols``;
+        contents unchanged. None for a missing table."""
+        if self.latest_version() is None:
             return None
-        dirty = set(_partition_dirs(os.path.join(self.path, v), epoch_col))
-        rows = (
-            self.read()
-            .withColumn(epoch_col, F.lit(0).cast("int"))
-            .repartition(target_files, *cluster_cols)
-        )
-        return self.write_incremental(
-            rows, epoch_col, dirty | {"0"}, absorb_unpartitioned=True,
-            cluster=False,
+        return self.replace_epochs(
+            self.read().repartition(target_files, *cluster_cols), epoch_col
         )
 
     def vacuum(self, min_age_seconds: float = 3600.0) -> list[str]:

@@ -109,9 +109,20 @@ def test_upsert_and_delete_same_write_is_atomic(spark, graph):
     assert got == ["b", "c"]
 
 
-def test_duplicate_incoming_keys_last_writer_deterministic(spark, graph):
-    dup = nodes_df(spark, [("a", "x"), ("a", "z"), ("a", "y")])
-    graph.write_nodes("bucket", to_create=dup)
-    got = graph.nodes("bucket").collect()
-    assert len(got) == 1
-    assert got[0]["name"] == "z"  # max by stable ordering, reproducible
+def test_duplicate_incoming_keys_last_writer_deterministic(spark, graph, tmp_path):
+    """A key listed three times: reconcile keeps one row (max change
+    hash), so the sink stores one row, and the winner does not depend on
+    the order the duplicates arrive in."""
+    from ig_etl_sync_spark.operators.reconcile import reconcile, snapshot_of
+
+    rows = [("a", "x"), ("a", "z"), ("a", "y")]
+    reversed_store = GraphStore(spark, str(tmp_path / "g2"))
+    winners = []
+    for g, order in ((graph, rows), (reversed_store, rows[::-1])):
+        dup = nodes_df(spark, order)
+        g.write_nodes("bucket", to_create=reconcile(dup, None).to_create)
+        got = g.nodes("bucket").collect()
+        assert len(got) == 1
+        assert got[0]["change_hash"] == snapshot_of(dup).first()["change_hash"]
+        winners.append(got[0]["name"])
+    assert winners[0] == winners[1]

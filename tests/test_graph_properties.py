@@ -13,7 +13,11 @@ VAL = st.sampled_from(["x", "y", "z"])
 
 OPS = st.lists(
     st.one_of(
-        st.tuples(st.just("upsert"), st.lists(st.tuples(KEY, VAL), min_size=1, max_size=4)),
+        # write_nodes takes one row per key (a reconcile diff's shape)
+        st.tuples(
+            st.just("upsert"),
+            st.lists(st.tuples(KEY, VAL), min_size=1, max_size=4, unique_by=lambda r: r[0]),
+        ),
         st.tuples(st.just("delete"), st.lists(KEY, min_size=1, max_size=3)),
         st.tuples(st.just("edge"), st.lists(st.tuples(KEY, KEY), min_size=1, max_size=4)),
     ),
@@ -28,18 +32,14 @@ def test_graph_matches_model(spark, tmp_path_factory, ops):
     root = tmp_path_factory.mktemp("g")
     g = GraphStore(spark, str(root))
 
-    model_nodes: dict[str, str] = {}  # key -> name (last-writer by max)
+    model_nodes: dict[str, str] = {}  # key -> name
     model_edges: set[tuple[str, str]] = set()
 
     for op, payload in ops:
         if op == "upsert":
             df = spark.createDataFrame(payload, "external_id string, name string")
             g.write_nodes("n", to_create=df)
-            # deterministic last-writer: max name per key (graph._dedup)
-            staged: dict[str, str] = {}
-            for k, v in payload:
-                staged[k] = max(staged.get(k, ""), v)
-            model_nodes.update(staged)
+            model_nodes.update(payload)
         elif op == "delete":
             df = spark.createDataFrame([(k,) for k in payload], "external_id string")
             g.write_nodes("n", to_delete=df)

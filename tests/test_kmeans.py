@@ -107,6 +107,31 @@ def test_quantize_rejects_out_of_range_components(spark):
     assert rows[1][0] >= 0 and rows[2] == []
 
 
+def test_quantize_rejects_components_above_offset(spark):
+    """The symmetric upper bound: q <= 4e6 keeps the assignment's int64
+    squared distances exact; 2.0 itself is still legal."""
+    bad = spark.createDataFrame([(1, [0.5, 3.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="strictly-positive quantization"):
+        quantize_embeddings(bad).collect()
+    ok = spark.createDataFrame([(1, [2.0, -2.0])], "vec_id long, embedding array<double>")
+    assert quantize_embeddings(ok).first().qv == [4_000_000, 0]
+
+
+@pytest.mark.parametrize(
+    "bad_vec", [None, [], [0.1, 0.2, 0.3]], ids=["null", "empty", "ragged"]
+)
+def test_kmeans_rejects_null_empty_and_ragged_vectors(spark, bad_vec):
+    """A NULL, empty or wrong-length vector raises a clear error instead
+    of failing inside the assignment's matrix stack. By md5 order id 99
+    is the second seed: k=2 draws it as a seed, k=1 leaves it to the
+    in-plan check."""
+    rows = [(i, [0.1 * i, 0.0, 0.1, 0.2]) for i in range(6)] + [(99, bad_vec)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    for k in (1, 2):
+        with pytest.raises(Exception, match="NULL, empty or ragged"):
+            kmeans_assign(df, k=k, iters=1).collect()
+
+
 def test_cohort_retention_rejects_unsupported_period(spark):
     from ig_etl_sync_spark.operators.sessions import cohort_retention
 

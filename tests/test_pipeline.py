@@ -94,10 +94,11 @@ def test_incremental_update_flows_one_key(spark, runner, source_doc):
 
 
 def test_duplicate_key_with_different_updated_at_converges(spark, runner, source_doc):
-    """A bucket listed twice with different ``updated-at``: the commit
-    collapses the key to one snapshot row, and R8 compares against that
-    same collapsed form, so the sync converges and the graph keeps one
-    row per key."""
+    """A bucket listed twice with different ``updated-at``: reconcile
+    keeps one row per key (max change hash), so the sync converges, the
+    graph keeps one row per key, and the stored row is the one whose
+    hash the snapshot holds. An identical re-sync is then a no-op: no
+    create, and the bucket table does not move."""
     dup = copy.deepcopy(source_doc["buckets"][0])
     dup["updated-at"] = "2099-01-01T00:00:00Z"
     source_doc["buckets"].append(dup)
@@ -105,3 +106,14 @@ def test_duplicate_key_with_different_updated_at_converges(spark, runner, source
     buckets = runner.graph.nodes("bucket")
     assert buckets.count() == 3
     assert buckets.select("external_id").distinct().count() == 3
+    table = runner.graph._node_table("bucket")
+    version = table.latest_version()
+
+    report = runner.run(integration(source_doc))
+    assert report.created["CREATE_NODE:bucket"] == 0
+    assert table.latest_version() == version
+    snap = runner.reconciler.store.read(
+        integration(source_doc).key, "CREATE_NODE:bucket"
+    )
+    stored = runner.graph.nodes("bucket").select("external_id", "change_hash")
+    assert sorted(map(tuple, stored.collect())) == sorted(map(tuple, snap.collect()))

@@ -141,6 +141,23 @@ def test_duplicate_keys_deterministic(spark):
     assert snap1.count() == 1
 
 
+def test_snapshot_of_equals_collapsed_incoming(spark):
+    """``snapshot_of`` keeps its own max-hash aggregate, which must equal
+    the ``(key, hash)`` of the one row per key that ``hashed_incoming``
+    keeps — the frame the diff and the sink see."""
+    from ig_etl_sync_spark.operators.reconcile import hashed_incoming
+
+    df = mk_df(spark, [
+        ("a", "A", "t1"), ("a", "B", "t2"), ("a", "C", "t2"),
+        ("b", "X", ""), ("b", "Y", ""), ("c", None, None),
+    ])
+    collapsed = hashed_incoming(df)
+    assert collapsed.count() == 3
+    assert sorted(snapshot_of(df).collect()) == sorted(
+        collapsed.select("external_id", "change_hash").collect()
+    )
+
+
 def test_diff_table_versions_all_three_changes(spark, tmp_path):
     """Time-travel CDC between two commits: create/update/delete all
     classified; identical keys absent."""

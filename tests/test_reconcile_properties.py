@@ -3,7 +3,7 @@ brute-force Python reference on arbitrary scenarios (hypothesis)."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from ig_etl_sync_spark.operators.reconcile import reconcile, snapshot_of
@@ -62,10 +62,11 @@ def test_diff_matches_brute_force(spark, prev, new):
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(rows=record_lists())
+@example(rows=[("a", "x", "t1"), ("a", "y", "t2"), ("b", "x", "")])
 def test_reconcile_idempotent_fixpoint(spark, rows):
     """∀ input: reconcile(x, snapshot_of(x)) = ∅ — the reference's
-    convergence invariant (main.go:224-237) as a law."""
-    rows = dedup_keys(rows)
+    convergence invariant (main.go:224-237) as a law, duplicate keys
+    with different change hashes included."""
     schema = "external_id string, name string, updated_at string"
     df = spark.createDataFrame(rows, schema) if rows else spark.createDataFrame([], schema)
     diff = reconcile(df, snapshot_of(df))

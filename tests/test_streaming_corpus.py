@@ -513,3 +513,24 @@ def test_streaming_span_cut_contract_survives_mid_batch_crash(spark, tmp_path):
     clean = run(str(tmp_path / "clean"), False)
     crashed = run(str(tmp_path / "crash"), True)
     assert crashed == clean and len(clean) > 0
+
+
+def test_rebuild_replaces_extended_epochs_minhash_and_span(spark, tmp_path):
+    """``build`` (re)builds from the reference corpus alone: docs an
+    earlier ``extend`` appended as their own epoch must not survive it."""
+    from ig_etl_sync_spark.operators.dedup import MinhashDedupIndex
+    from ig_etl_sync_spark.operators.spans import SpanDupIndex
+
+    def docs(doc_id, text):
+        return spark.createDataFrame([(doc_id, text)], "doc_id string, text string")
+
+    for index in (
+        MinhashDedupIndex(spark, str(tmp_path / "m")),
+        SpanDupIndex(spark, str(tmp_path / "s")),
+    ):
+        index.build(docs("a", "alpha beta gamma delta epsilon zeta eta theta iota"))
+        index.extend(docs("b", "one two three four five six seven eight nine ten"))
+        index.build(docs("c", "red orange yellow green blue indigo violet white black"))
+        assert {r.doc_id for r in index._table.read().collect()} == {"c"}
+        index.extend(docs("d", "north south east west up down left right in out"))
+        assert {r.doc_id for r in index._table.read().collect()} == {"c", "d"}
