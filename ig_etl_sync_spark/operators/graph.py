@@ -11,7 +11,11 @@ relational tables + MERGE-style DataFrame ops:
   (``reconcile.hashed_incoming`` picks a duplicate key's winner).
 - S5 edge merge (``neo4j.go:89-91``): the Cypher double-``MATCH`` means
   an edge lands only if BOTH endpoints exist → two ``left_semi`` joins
-  (J2), then one identity dedup on ``(a_id, b_id)`` in the merge.
+  (J2), then one identity dedup on ``(a_id, b_id)`` in the merge. An
+  edge already stored is anti-joined away first: it has both endpoints
+  (the S6 cascade drops it with either one), so MERGE would not change
+  it. Only the buckets of new edges are rewritten, and a re-sent edge
+  set (R2) publishes no version.
 - S6 keyed delete with DETACH cascade (``neo4j.go:116-126``): node
   removal by anti-join PLUS explicit cleanup of every edge table touching
   that label — the one Neo4j behavior Spark does not give for free, so
@@ -341,32 +345,40 @@ class GraphStore:
         b_label: str,
         edges: DataFrame,
     ) -> None:
-        """Merge ``edges`` ``(a_id, b_id)`` whose endpoints both exist;
-        repeats collapse in the one identity dedup after the endpoint
-        semi-joins (over the dirty buckets, or a new table's batch)."""
+        """Merge the new edges of ``edges`` ``(a_id, b_id)`` whose
+        endpoints both exist. An edge already in the table is skipped
+        before the endpoint semi-joins, so only the buckets of new,
+        validated edges are rewritten, and a batch with none publishes
+        no version; repeats collapse in the one identity dedup."""
         et = EdgeType(a_label, rel, b_label)
         self._register_edge(et)
 
         a_nodes = self.nodes(a_label)
         b_nodes = self.nodes(b_label)
+        # MATCH (a) MATCH (b): drop edges whose endpoints don't exist.
+        if a_nodes is None or b_nodes is None:
+            return  # no endpoints exist at all → every edge is dropped
         incoming = edges.select(
             F.col("a_id").cast("string").alias("a_id"),
             F.col("b_id").cast("string").alias("b_id"),
         )
-
-        # MATCH (a) MATCH (b): drop edges whose endpoints don't exist.
+        table = self._edge_table(et)
+        prev = table.read()
+        if prev is not None:
+            # An edge already stored has both endpoints: the DETACH
+            # cascade removes it in the same transaction that deletes
+            # either one, so MERGE would leave it unchanged.
+            incoming = incoming.join(
+                prev.select("a_id", "b_id"), on=["a_id", "b_id"], how="left_anti"
+            )
         # Node tables are usually the big side; the incoming edge batch is
         # the small one → semi-join with edge side broadcast-eligible.
-        if a_nodes is None or b_nodes is None:
-            return  # no endpoints exist at all → every edge is dropped
         validated = incoming.join(
             a_nodes.select(F.col(KEY_COL).alias("a_id")), on="a_id", how="left_semi"
         ).join(
             b_nodes.select(F.col(KEY_COL).alias("b_id")), on="b_id", how="left_semi"
         ).withColumn(GBUCKET, self._bucket_of(F.col("a_id")))
 
-        table = self._edge_table(et)
-        prev = table.read()
         if prev is None:
             # new table: all-dirty is exact (nothing to link) and skips
             # the dirty-bucket collect job, so validated is staged
@@ -376,7 +388,7 @@ class GraphStore:
         else:
             # Diamond rule: validated feeds BOTH the dirty-bucket
             # collect and the MERGE union — without a checkpoint the
-            # two endpoint semi-joins run twice per sync.
+            # anti-join and the two semi-joins run twice per sync.
             validated = self._share(validated)
             # MERGE dedup by edge identity (a_id, b_id): same a_id ⇒
             # same bucket, so deduping inside dirty buckets is complete.
@@ -385,7 +397,7 @@ class GraphStore:
                 for r in validated.select(GBUCKET).distinct().collect()
             }
             if not dirty:
-                return  # nothing validated — nothing to merge
+                return  # no new validated edge — nothing to merge
             merged = (
                 prev.where(F.col(GBUCKET).isin([int(b) for b in dirty]))
                 .unionByName(validated)

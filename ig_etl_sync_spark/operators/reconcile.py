@@ -8,11 +8,13 @@ Re-expresses ``internal/recon/recon.go`` as declarative DataFrame ops:
   at 100 TB both sides are key-partitioned tables so the shuffle is the
   join's only data movement and partial aggregation is irrelevant (no agg).
   A key listed twice keeps one row, chosen once in :func:`hashed_incoming`
-  (SURVEY §2.5).
+  (SURVEY §2.5). :func:`diff_join` also returns the join's changed rows
+  (creates ∪ deletes), so a caller can pin and count both sides once.
 - R2 relation pass-through (``recon.go:42-44``): edges are never diffed.
 - R3 change-hash chain (``recon.go:133-156``): ``functions.hashing``.
 - R5 commit (``recon.go:102-131``): the new snapshot IS the incoming
-  ``(external_id, change_hash)`` set — written as a new immutable version.
+  ``(external_id, change_hash)`` set — written as a new immutable version;
+  the sync step skips it on an empty diff, where it would change nothing.
 - R6 copy-on-read isolation (``recon.go:66-69``): snapshot versions are
   immutable files + a pointer; a running reconcile reads a pinned version
   while commit publishes the next (Delta time-travel semantics without
@@ -50,18 +52,18 @@ KEY_COL = "external_id"
 
 @dataclass(frozen=True)
 class DiffResult:
-    """R1 output: the create/upsert set and the delete set."""
+    """R1 output: the create/upsert set, the delete set, and ``changed``,
+    the diff join's rows behind both (creates ∪ deletes). A caller that
+    pins ``changed`` runs the join once for both sets."""
 
     to_create: DataFrame
     to_delete: DataFrame
+    changed: DataFrame
 
     def is_empty(self) -> bool:
-        """True iff the diff is a fixpoint. Two cheap limit-1 scans,
-        not full counts."""
-        return (
-            self.to_create.limit(1).count() == 0
-            and self.to_delete.limit(1).count() == 0
-        )
+        """True iff the diff is a fixpoint: one limit-1 scan, not a
+        full count."""
+        return self.changed.limit(1).count() == 0
 
 
 def snapshot_of(
@@ -143,17 +145,17 @@ def diff_join(hashed: DataFrame, snapshot: DataFrame | None) -> DiffResult:
     )
     joined = hashed.join(prev, hashed[KEY_COL] == prev._prev_id, "full_outer")
 
-    to_create = (
-        joined.where(
-            F.col(KEY_COL).isNotNull()
-            & (F.col("_prev_hash").isNull() | (F.col("_prev_hash") != F.col(HASH_COL)))
-        )
-        .drop("_prev_id", "_prev_hash")
+    # a create has an incoming key; a delete has none
+    changed = joined.where(
+        F.col(KEY_COL).isNull()
+        | F.col("_prev_hash").isNull()
+        | (F.col("_prev_hash") != F.col(HASH_COL))
     )
-    to_delete = joined.where(F.col(KEY_COL).isNull()).select(
+    to_create = changed.where(F.col(KEY_COL).isNotNull()).drop("_prev_id", "_prev_hash")
+    to_delete = changed.where(F.col(KEY_COL).isNull()).select(
         F.col("_prev_id").alias(KEY_COL)
     )
-    return DiffResult(to_create=to_create, to_delete=to_delete)
+    return DiffResult(to_create=to_create, to_delete=to_delete, changed=changed)
 
 
 class SnapshotStore:
@@ -216,7 +218,7 @@ class Reconciler:
             # R2: relations are never diffed — re-merged idempotently
             # every run (recon.go:42-44); deletes ride the node cascade.
             empty = incoming.sparkSession.createDataFrame([], f"{KEY_COL} string")
-            return DiffResult(to_create=incoming, to_delete=empty)
+            return DiffResult(to_create=incoming, to_delete=empty, changed=incoming)
         snapshot = self.store.read(integration_key, function_key)
         return reconcile(incoming, snapshot)
 

@@ -9,10 +9,11 @@
 - C3 sync loop: one ``run()`` per tick; Structured Streaming's
   ``foreachBatch`` (``streaming/sync.py``) is the scale-up. Both run
   each function through :func:`sync_function`, the one sync step:
-  reconcile (diff pinned) → ``limit(1)`` emptiness probes → one graph
-  write call, itself one transaction (S8; skipped on an empty node diff)
-  → snapshot commit (merge on a delta tick) → R8 (full-state ticks
-  only) → exact counts from the pinned diff.
+  reconcile (diff pinned, both counts from one aggregate; a delta tick
+  pins and counts its creates only) → one graph write call, itself one
+  transaction (S8; skipped on an empty node diff) → snapshot commit
+  (merge on a delta tick; skipped on an empty diff) → R8 (every
+  full-state tick).
 - C5 fail-fast: any error raises, and a retry converges (at-least-once
   + idempotent sinks): before the snapshot commit the old snapshot
   re-derives the same diff for an idempotent sink; after it the diff
@@ -25,9 +26,10 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ig_etl_sync_spark.operators.graph import GraphStore
-from ig_etl_sync_spark.operators.reconcile import Reconciler, SnapshotStore
+from ig_etl_sync_spark.operators.reconcile import KEY_COL, Reconciler, SnapshotStore
 from ig_etl_sync_spark.operators.transforms import (
     ALL_PACKER_TRANSFORMS,
     NODE,
@@ -94,7 +96,9 @@ def sync_function(
     b_label)`` (R2: never diffed or committed). A full-state tick
     (``delta=False``) deletes absent keys, replaces the snapshot and
     runs R8; a delta tick leaves absent keys alone, merges the snapshot
-    and skips R8. Returns the exact ``(created, deleted)`` counts.
+    and skips R8. An empty diff (no creates, and no deletes on a
+    full-state tick) commits nothing: the snapshot already holds the
+    batch. Returns the ``(created, deleted)`` counts.
     """
     is_relation = isinstance(target, tuple)
     records = records.cache()
@@ -103,40 +107,43 @@ def sync_function(
         diff = reconciler.reconcile(
             integration_key, function_key, records, is_relation=is_relation
         )
-        # pin the diff: its join runs once, and the counts at the end
-        # read what the sink materialized (a relation's diff IS records)
-        to_create = diff.to_create if is_relation else diff.to_create.cache()
-        to_delete = None if is_relation or delta else diff.to_delete.cache()
-        pinned += [to_create, to_delete]
-        has_create = is_relation or to_create.limit(1).count() > 0
-        has_delete = to_delete is not None and to_delete.limit(1).count() > 0
-
         # S8: one transaction per sync function (neo4j.go:77-148) — the
         # function's one write call stages the node upsert+delete AND its
         # DETACH-cascade edge rewrites together, one pointer flip per table
-        if is_relation:
-            graph.write_edges(*target, edges=to_create)
-        else:
-            graph.write_nodes(
-                target,
-                to_create=to_create if has_create else None,
-                to_delete=to_delete if has_delete else None,
-            )
+        if is_relation:  # R2: a relation keeps no snapshot
+            graph.write_edges(*target, edges=diff.to_create)
+            return records.count(), 0
 
-        if not is_relation:  # R2: a relation keeps no snapshot
+        if delta:
+            # the delete side of a delta's diff is all the state the
+            # batch did not send: pin and count the creates only
+            to_create = diff.to_create.cache()
+            pinned.append(to_create)
+            created, deleted = to_create.count(), 0
+        else:
+            # pin the diff join's rows: one aggregate counts both sides,
+            # and the sink reads the creates and deletes from the cache
+            changed = diff.changed.cache()
+            pinned.append(changed)
+            total, created = changed.agg(F.count("*"), F.count(KEY_COL)).first()
+            deleted = total - created
+            to_create = diff.to_create
+        graph.write_nodes(
+            target,
+            to_create=to_create if created else None,
+            to_delete=diff.to_delete if deleted else None,
+        )
+        if created or deleted:
             if delta:
                 reconciler.commit_merge(integration_key, function_key, records)
             else:
                 reconciler.commit(integration_key, function_key, records)
-                reconciler.assert_converged(integration_key, function_key, records)
-        return (
-            to_create.count() if has_create else 0,
-            to_delete.count() if has_delete else 0,
-        )
+        if not delta:
+            reconciler.assert_converged(integration_key, function_key, records)
+        return created, deleted
     finally:
         for frame in pinned:
-            if frame is not None:
-                frame.unpersist()
+            frame.unpersist()
 
 
 class PipelineRunner:

@@ -6,6 +6,15 @@ renames it to the next version number and only then flips the pointer,
 so readers never observe partial writes and a reader holding version N
 stays isolated from a concurrent commit of N+1 (R6).
 
+A version carries its read schema: ``_schema.json`` in the version
+directory, written before the publish rename (Spark's reader skips
+``_``-files). It holds exactly what parquet schema inference would
+return (the data columns, then the partition column when partition
+dirs exist, all nullable), so :meth:`VersionedParquetTable.read` and
+``read_version`` launch no inference job. A version without the file
+(written before versions carried it, or partitioned on a non-int
+column) is inferred as before.
+
 Supported deployment: ONE writer per table on a filesystem where
 rename is atomic (POSIX, HDFS, ABFS). Two concurrent writers would
 both claim the same next version number, and the later pointer flip
@@ -27,8 +36,48 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    IntegerType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 _VERSION_DIR = re.compile(r"v\d+")
+SCHEMA_FILE = "_schema.json"
+_INTEGRAL = re.compile(r"[+-]?\d+")
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable: the form a
+    parquet read returns whatever the writer's nullability was."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _partition_type(values: list[str]) -> DataType | None:
+    """IntegerType when every partition directory value is an int, the
+    type Spark's partition discovery infers for them (every engine table
+    partitions on an int: ``gbucket`` or an epoch); None otherwise,
+    which leaves the column to inference."""
+    if all(_INTEGRAL.fullmatch(v) and -(2**31) <= int(v) < 2**31 for v in values):
+        return IntegerType()
+    return None
+
+
+def _write_schema(version_dir: str, schema: StructType) -> None:
+    with open(os.path.join(version_dir, SCHEMA_FILE), "w") as f:
+        f.write(_nullable(schema).json())
 
 
 def _partition_dirs(version_dir: str, partition_col: str) -> dict[str, str]:
@@ -91,6 +140,7 @@ def _stage_incremental(
     version. Falls back to a plain unpartitioned write when the result
     would contain no partition dir at all (empty table: partitionBy
     writes no schema-bearing file, which an unpartitioned write does).
+    Last, records the version's read schema (:data:`SCHEMA_FILE`).
 
     If the previous version holds UNPARTITIONED rows (a plain
     ``write()``), linking only partition dirs would silently drop them
@@ -157,6 +207,14 @@ def _stage_incremental(
     if not written and not linked:
         # empty table: rewrite plainly so the version dir carries schema
         df.write.mode("overwrite").parquet(out_dir)
+        _write_schema(out_dir, df.schema)
+        return
+    part_type = _partition_type(list(_partition_dirs(out_dir, partition_col)))
+    if part_type is not None:
+        data = [f for f in df.schema.fields if f.name != partition_col]
+        _write_schema(
+            out_dir, StructType([*data, StructField(partition_col, part_type)])
+        )
 
 
 class VersionedParquetTable:
@@ -177,11 +235,21 @@ class VersionedParquetTable:
     def exists(self) -> bool:
         return self.latest_version() is not None
 
+    def _read_dir(self, version: str) -> DataFrame:
+        """Read one version with the schema it carries."""
+        vdir = os.path.join(self.path, version)
+        reader = self.spark.read
+        schema_file = os.path.join(vdir, SCHEMA_FILE)
+        if os.path.exists(schema_file):
+            with open(schema_file) as f:
+                reader = reader.schema(StructType.fromJson(json.load(f)))
+        return reader.parquet(vdir)
+
     def read(self) -> DataFrame | None:
         v = self.latest_version()
         if v is None:
             return None
-        return self.spark.read.parquet(os.path.join(self.path, v))
+        return self._read_dir(v)
 
     def has_partition(self, partition_col: str, value: str) -> bool:
         """Driver-side (no Spark job) partition-existence probe on the
@@ -213,7 +281,9 @@ class VersionedParquetTable:
     def write(self, df: DataFrame, keep: int = 3) -> str:
         """Publish ``df`` as the next version (full replace)."""
         staged = self._new_stage()
-        df.write.mode("overwrite").parquet(os.path.join(self.path, staged))
+        out_dir = os.path.join(self.path, staged)
+        df.write.mode("overwrite").parquet(out_dir)
+        _write_schema(out_dir, df.schema)
         return self.commit_staged(staged, keep)
 
     def stage_incremental(
@@ -394,7 +464,7 @@ class VersionedParquetTable:
                 f"version {version!r} not retained under {self.path} "
                 f"(have: {self.versions()})"
             )
-        return self.spark.read.parquet(os.path.join(self.path, version))
+        return self._read_dir(version)
 
     def _gc(self, keep: int) -> None:
         for v in self.versions()[:-keep]:

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from ig_etl_sync_spark.operators.graph import EdgeType, GraphStore
 
@@ -126,3 +127,53 @@ def test_duplicate_incoming_keys_last_writer_deterministic(spark, graph, tmp_pat
         assert got[0]["change_hash"] == snapshot_of(dup).first()["change_hash"]
         winners.append(got[0]["name"])
     assert winners[0] == winners[1]
+
+
+def test_edge_merge_writes_only_new_edges(spark, tmp_path):
+    """An edge already stored is skipped before validation: a re-sent
+    set publishes no version, one new edge rewrites only its bucket, and
+    an edge whose endpoint was deleted is still dropped."""
+    import os
+
+    g = GraphStore(spark, str(tmp_path / "g"), n_buckets=4)
+    keys = [str(i) for i in range(8)]
+    g.write_nodes("org", to_create=nodes_df(spark, [(f"o{k}", k) for k in keys]))
+    g.write_nodes("project", to_create=nodes_df(spark, [(f"p{k}", k) for k in keys]))
+    sent = [(f"o{k}", f"p{k}") for k in keys]
+    table = g._edge_table(EdgeType("org", "has", "project"))
+
+    def inodes(version):
+        vdir = os.path.join(table.path, version)
+        return {
+            d: {os.stat(os.path.join(vdir, d, f)).st_ino for f in os.listdir(os.path.join(vdir, d))}
+            for d in os.listdir(vdir) if d.startswith("gbucket=")
+        }
+
+    def stored():
+        return sorted((r["a_id"], r["b_id"]) for r in g.edges("org", "has", "project").collect())
+
+    g.write_edges("org", "has", "project", edges_df(spark, sent))
+    v0 = table.latest_version()
+    g.write_edges("org", "has", "project", edges_df(spark, sent))
+    assert table.latest_version() == v0
+
+    g.write_edges("org", "has", "project", edges_df(spark, [*sent, ("o1", "p2")]))
+    v1 = table.latest_version()
+    assert v1 != v0 and stored() == sorted([*sent, ("o1", "p2")])
+    bucket = g.spark.createDataFrame([("o1",)], "k string").select(
+        g._bucket_of(F.col("k"))
+    ).first()[0]
+    before, after = inodes(v0), inodes(v1)
+    assert set(before) == set(after)
+    for d in after:
+        if d == f"gbucket={bucket}":
+            assert after[d].isdisjoint(before[d])
+        else:
+            assert after[d] == before[d], d
+
+    g.write_nodes("org", to_delete=spark.createDataFrame([("o3",)], "external_id string"))
+    v2 = table.latest_version()
+    g.write_edges("org", "has", "project", edges_df(spark, sent))
+    assert table.latest_version() == v2
+    assert ("o3", "p3") not in stored() and len(stored()) == 8
+    assert g.orphan_edge_count() == 0

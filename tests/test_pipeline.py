@@ -8,7 +8,7 @@ from dataclasses import replace
 
 import pytest
 
-from ig_etl_sync_spark.operators.graph import GraphStore
+from ig_etl_sync_spark.operators.graph import EdgeType, GraphStore
 from ig_etl_sync_spark.operators.reconcile import SnapshotStore
 from ig_etl_sync_spark.plans.pipeline import PipelineRunner, packer_registry_integration
 from ig_etl_sync_spark.sources.json_source import read_json_document
@@ -46,20 +46,31 @@ def test_full_sync_builds_graph(spark, runner, source_doc):
 
 def test_second_sync_is_noop(spark, runner, source_doc):
     """Invariant 1 (main.go:224-237): unchanged input ⇒ empty diff, and
-    an empty node diff skips the sink: no node table publishes a new
-    version."""
+    the identical re-sync publishes no table version: an empty node diff
+    skips the sink and the snapshot commit, and re-sent edges (R2) are
+    all already stored."""
     integ = integration(source_doc)
     runner.run(integ)
-    labels = [fn.label for fn in integ.functions if fn.label]
-    versions = {lb: runner.graph._node_table(lb).latest_version() for lb in labels}
-    assert set(versions.values()) == {"v000000"}
+
+    def versions():
+        g, store = runner.graph, runner.reconciler.store
+        out = {fn.key: g._node_table(fn.label).latest_version()
+               for fn in integ.functions if fn.label}
+        out.update({fn.key: g._edge_table(EdgeType(*fn.edge)).latest_version()
+                    for fn in integ.functions if fn.edge})
+        out.update({f"snapshot {fn.key}": store._table(integ.key, fn.key).latest_version()
+                    for fn in integ.functions if fn.label})
+        return out
+
+    before = versions()
+    assert len(before) == 14 and set(before.values()) == {"v000000"}
     report2 = runner.run(integration(source_doc))
     node_creates = {
         k: v for k, v in report2.created.items() if k.startswith("CREATE_NODE")
     }
     assert all(v == 0 for v in node_creates.values())
     assert all(v == 0 for v in report2.deleted.values())
-    assert {lb: runner.graph._node_table(lb).latest_version() for lb in labels} == versions
+    assert versions() == before
 
 
 def test_emptied_source_deletes_everything(spark, runner, source_doc):

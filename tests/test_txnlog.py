@@ -321,3 +321,77 @@ def test_compact_epochs_keeps_contents_and_appends_resume(spark, table):
     assert sorted((r.id, r.ep) for r in table.read().collect()) == [
         (1, 0), (2, 0), (3, 0), (4, 0), (5, 0), (6, 1)
     ]
+
+
+# ------------------------------------------------ the stored read schema
+
+
+def test_versions_carry_the_inferred_schema(spark, tmp_path):
+    """Every version stores the schema parquet inference would return,
+    and ``read()`` uses it: equal schemas, and no Spark job."""
+    from pyspark.sql import functions as F
+
+    from ig_etl_sync_spark.operators.graph import EdgeType, GraphStore
+    from ig_etl_sync_spark.sources.versioned import SCHEMA_FILE
+
+    g = GraphStore(spark, str(tmp_path / "graph"), n_buckets=4)
+    nodes = spark.createDataFrame(
+        [(f"k{i}", i, [float(i)]) for i in range(8)],
+        "external_id string, n int not null, v array<double>",
+    )
+    g.write_nodes("a", to_create=nodes)
+    g.write_nodes("a", to_create=nodes.where("n = 1").withColumn("n", F.lit(10)))
+    g.write_nodes("b", to_create=nodes.select("external_id"))
+    g.write_edges("a", "r", "b", spark.createDataFrame(
+        [(f"k{i}", f"k{(i + 1) % 8}") for i in range(8)], "a_id string, b_id string"
+    ))
+    g.write_nodes("b", to_delete=spark.createDataFrame([("k3",)], "external_id string"))
+    # every node of a deleted: an empty bucketed version
+    g.write_nodes("c", to_create=nodes.select("external_id"))
+    g.write_nodes("c", to_delete=nodes.select("external_id"))
+
+    snapshot = VersionedParquetTable(spark, str(tmp_path / "snapshot"))
+    snapshot.write(spark.createDataFrame([("k", 1)], "external_id string, change_hash bigint"))
+    epochs = VersionedParquetTable(spark, str(tmp_path / "epochs"))
+    docs = spark.createDataFrame([("d1", "x"), ("d2", "y")], "doc_id string, text string")
+    epochs.append_epoch(docs, "epoch", 0, "doc_id")
+    epochs.append_epoch(docs.where("doc_id = 'd2'"), "epoch", 1, "doc_id")
+    epochs.replace_epochs(docs, "epoch")
+    epochs.append_epoch(docs.where("doc_id = 'd1'"), "epoch", 1, "doc_id")
+    empty = VersionedParquetTable(spark, str(tmp_path / "empty"))
+    empty.write_incremental(spark.createDataFrame([], "k string, x int"), "k", {"z"})
+
+    tables = [
+        g._node_table("a"), g._node_table("c"),
+        g._edge_table(EdgeType("a", "r", "b")), snapshot, epochs, empty,
+    ]
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    for t in tables:
+        assert len(t.versions()) >= 2 or t in (snapshot, empty), t.path
+        for v in t.versions():
+            vdir = os.path.join(t.path, v)
+            assert os.path.exists(os.path.join(vdir, SCHEMA_FILE)), vdir
+            inferred = spark.read.parquet(vdir).schema
+            assert t.read_version(v).schema == inferred, vdir
+        jobs = dag.numTotalJobs()
+        latest = t.read()
+        assert dag.numTotalJobs() == jobs, t.path
+        assert latest.schema == spark.read.parquet(
+            os.path.join(t.path, t.latest_version())
+        ).schema, t.path
+    assert g._edge_table(EdgeType("a", "r", "b")).read().count() == 7
+    assert g.nodes("c").count() == 0
+    assert sorted(tuple(r) for r in epochs.read().collect()) == [
+        ("d1", "x", 0), ("d1", "x", 1), ("d2", "y", 0)
+    ]
+
+
+def test_version_without_schema_file_is_inferred(spark, table):
+    """A version written before versions carried their schema reads as
+    before, by inference."""
+    from ig_etl_sync_spark.sources.versioned import SCHEMA_FILE
+
+    v = table.write(df(spark, 1, 2))
+    os.remove(os.path.join(table.path, v, SCHEMA_FILE))
+    assert table.read().schema == df(spark).schema
+    assert sorted(r["x"] for r in table.read_version(v).collect()) == [1, 2]
