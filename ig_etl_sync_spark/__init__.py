@@ -7,7 +7,7 @@ layer (explode / project / rename / literal columns), snapshot-diff CDC
 reconciliation, an idempotent graph-shaped sink (node upsert, edge merge,
 cascading delete), and convergence self-verification — plus the
 large-scale training-data-pipeline extensions (deduplication, similarity
-search, text analysis, multimodal columns, streaming sync).
+search, text analysis, streaming sync).
 
 Everything is built on the public PySpark DataFrame/SQL API and designed
 for a multi-executor cluster: declarative plans (Catalyst optimizes),

@@ -1,15 +1,11 @@
 from ig_etl_sync_spark.functions.hashing import change_hash, record_fingerprint, with_change_hash
-from ig_etl_sync_spark.functions.json_utils import extract_json_field, parse_json_column
-from ig_etl_sync_spark.functions.vectors import cosine_similarity, dot_product, l2_norm, l2_normalize
+from ig_etl_sync_spark.functions.vectors import cosine_similarity, dot_product, l2_norm
 
 __all__ = [
     "change_hash",
     "record_fingerprint",
     "with_change_hash",
-    "extract_json_field",
-    "parse_json_column",
     "cosine_similarity",
     "dot_product",
     "l2_norm",
-    "l2_normalize",
 ]

@@ -29,11 +29,5 @@ def l2_norm(a: str | Column) -> Column:
     return F.sqrt(sq)
 
 
-def l2_normalize(a: str | Column) -> Column:
-    col = _c(a)
-    norm = l2_norm(col)
-    return F.transform(col, lambda v: v.cast("double") / norm)
-
-
 def cosine_similarity(a: str | Column, b: str | Column) -> Column:
     return dot_product(a, b) / (l2_norm(a) * l2_norm(b))

@@ -165,22 +165,3 @@ def bloom_probe_frame(
     return staged.withColumn(out_col, probe).drop(
         "_bh1", "_bh2", *pos_cols.keys()
     )
-
-
-def bloom_semi_filter(
-    facts: DataFrame,
-    fact_key: str,
-    dim_keys: DataFrame,
-    dim_key: str,
-    n_bits: int = 1 << 16,
-    n_hashes: int = 3,
-) -> DataFrame:
-    """Pre-filter ``facts`` to rows whose key MIGHT be in ``dim_keys``:
-    a superset of the exact semi join (follow with the exact join).
-    The build aggregates the dim side; the probe never shuffles the
-    fact side."""
-    bloom = bloom_build(dim_keys.select(dim_key), dim_key, n_bits, n_hashes)
-    words = collect_words(bloom, n_bits)
-    return bloom_probe_frame(
-        facts, fact_key, words, n_bits, n_hashes, out_col="_bloom_pass"
-    ).where(F.col("_bloom_pass")).drop("_bloom_pass")

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ig_etl_sync_spark.functions.hashing import md5_int32 as _md5_int
 from ig_etl_sync_spark.functions.vectors import cosine_similarity
-from ig_etl_sync_spark.operators.textops import normalized_text, tokens, word_shingles
+from ig_etl_sync_spark.operators.textops import tokens, word_shingles
 
 
 # -- exact dedup ------------------------------------------------------
@@ -57,14 +57,6 @@ def exact_dedup(
     return (
         df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
     )
-
-
-def content_hash_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact-content near-exact dedup: one row per normalized-text md5
-    (case/whitespace/punct-insensitive exact dedup)."""
-    return exact_dedup(
-        df.withColumn("_fp", F.md5(normalized_text(F.col(text_col)))), keys=["_fp"]
-    ).drop("_fp")
 
 
 # -- MinHash + LSH ----------------------------------------------------

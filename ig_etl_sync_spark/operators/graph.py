@@ -20,9 +20,9 @@ relational tables + MERGE-style DataFrame ops:
   removal by anti-join PLUS explicit cleanup of every edge table touching
   that label — the one Neo4j behavior Spark does not give for free, so
   the store keeps an edge-endpoint registry and cascades.
-- S7 index DDL (``neo4j.go:54-71``): no Catalyst analog needed; the
-  physical equivalent at scale is bucketing/Z-ORDER on ``external_id``
-  (noted, not required for parity).
+- S7 index DDL (``neo4j.go:54-71``): the bucketed write layout below is
+  the index analog — every node and edge table is hash-partitioned on
+  its key, so a MERGE or point lookup reads only the key's bucket.
 - S8 transactionality (``neo4j.go:77-81,148``): one write call is one
   transaction. ``write_nodes`` folds the upsert and the delete into ONE
   node-table write and adds one write per edge table its DETACH cascade
@@ -404,72 +404,6 @@ class GraphStore:
                 .dropDuplicates(["a_id", "b_id"])
             )
         self._stage_and_commit([(table, merged, dirty)])
-
-    # -- traversal (graph reads the reference never needed; rounds out
-    # the graph-shaped store: n-hop = chain of equi-joins) ------------
-    def traverse(self, *hops: tuple[str, str, str]) -> DataFrame | None:
-        """Multi-hop traversal: ``traverse(("org","has","project"),
-        ("project","has","bucket"))`` returns one row per path with
-        columns ``<label>_id`` per visited node. Each hop is an
-        equi-join edge_table(b_id) = next_edge(a_id); Catalyst orders /
-        broadcasts as sizes dictate.
-        """
-        result = None
-        end_col = None  # column holding the current path endpoint
-        used: set[str] = set()
-
-        def fresh(label: str) -> str:
-            # repeated labels (self-edges, revisited labels) get indexed
-            # names — duplicate column names would be ambiguous.
-            name = f"{label}_id"
-            n = 1
-            while name in used:
-                name = f"{label}_id_{n}"
-                n += 1
-            used.add(name)
-            return name
-
-        for i, (a, rel, b) in enumerate(hops):
-            edges = self.edges(a, rel, b)
-            if edges is None:
-                return None
-            if result is None:
-                a_col = fresh(a)
-                end_expected = a
-            else:
-                # The hop must start where the path currently ends.
-                if end_col is None or not end_col.startswith(f"{a}_id"):
-                    raise ValueError(
-                        f"hop {i} starts at label {a!r} but the path so far "
-                        f"ends at columns {result.columns}"
-                    )
-                a_col = end_col
-            b_col = fresh(b)
-            step = edges.select(
-                F.col("a_id").alias(a_col), F.col("b_id").alias(b_col)
-            )
-            result = step if result is None else result.join(step, on=a_col)
-            end_col = b_col
-        return result
-
-    # -- S7 index analog ---------------------------------------------
-    def optimize(self, label: str, buckets: int | None = None) -> None:
-        """Physical analog of the reference's ``CREATE INDEX`` on
-        ``external_id`` (``neo4j.go:54-71``): rewrite the node table
-        hash-clustered + sorted by key, so subsequent MERGE anti-joins
-        and point lookups co-locate (Delta Z-ORDER / bucketing analog).
-        Optional — correctness never depends on it.
-        """
-        table = self._node_table(label)
-        cur = table.read()
-        if cur is None:
-            return
-        n = buckets or cur.sparkSession.sparkContext.defaultParallelism
-        clustered = cur.repartition(n, F.col(GBUCKET)).sortWithinPartitions(
-            GBUCKET, KEY_COL
-        )
-        # full rewrite by definition — every bucket is "dirty"
-        table.write_incremental(clustered, GBUCKET, self._all_buckets())
 
     # -- invariants (reference self-tests, SURVEY §5) ----------------
     def orphan_edge_count(self) -> int:

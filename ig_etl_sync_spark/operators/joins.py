@@ -52,17 +52,6 @@ def salted_join(
     return out.drop("_salt")
 
 
-def broadcast_threshold_join(
-    left: DataFrame, right: DataFrame, key: str, how: str = "inner",
-    force_broadcast_right: bool = False,
-) -> DataFrame:
-    """Equi-join that pins a broadcast when the caller KNOWS the right
-    side is small (dimension tables) — saves AQE the first-shuffle
-    round-trip it needs before demoting to broadcast."""
-    r = F.broadcast(right) if force_broadcast_right else right
-    return left.join(r, key, how)
-
-
 def fuzzy_match_join(
     left: DataFrame,
     right: DataFrame,

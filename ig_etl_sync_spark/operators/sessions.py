@@ -1,10 +1,8 @@
-"""Sessionization: gap-based event sessions (batch + streaming).
+"""Sessionization: gap-based event sessions.
 
-Batch form uses the portable lag/cumsum formulation (expressible in any
-SQL engine, so it is DuckDB-oracle-checkable); streaming form uses
-Spark's native ``session_window`` (merging windows with watermark-bound
-state). Both implement the same semantics: a session breaks when the
-gap to the previous event of the same key exceeds ``gap``.
+The portable lag/cumsum formulation (expressible in any SQL engine, so
+it is DuckDB-oracle-checkable): a session breaks when the gap to the
+previous event of the same key exceeds ``gap``.
 
 Scale: one shuffle on the session key (the window partition); the
 cumulative sum is computed within partitions during the window sort.
@@ -81,31 +79,6 @@ def session_intervals(
     return tagged.groupBy(key_col, "session_id").agg(
         F.min(F.unix_micros(F.col(ts_col))).alias("start_us"),
         F.max(F.unix_micros(F.col(ts_col))).alias("end_us"),
-    )
-
-
-def streaming_session_stats(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Streaming-native variant: Spark ``session_window`` (merging
-    session state, watermark-evicted). Same session semantics as the
-    batch lag/cumsum form."""
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark_delay)
-    return (
-        df.groupBy(F.session_window(ts_col, gap).alias("w"), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col(key_col),
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
     )
 
 

@@ -84,22 +84,6 @@ def span_frequencies(spans: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def duplicated_spans(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    min_docs: int = 2,
-) -> DataFrame:
-    """Every (doc, pos, span_md5) whose span occurs in ≥ min_docs
-    distinct documents — the removal candidates."""
-    spans = _by_span(doc_spans(docs, id_col, text_col, k))
-    freq = span_frequencies(spans, id_col).where(F.col("n_docs") >= min_docs)
-    return spans.join(freq, "span_md5").select(
-        id_col, "pos", "span_md5", "n_docs", "n_occ"
-    )
-
-
 def span_dup_stats(
     docs: DataFrame,
     id_col: str = "doc_id",

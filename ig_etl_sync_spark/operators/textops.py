@@ -58,10 +58,6 @@ def bpe_ish_token_count(text: str | Column) -> Column:
 
 # -- quality scoring --------------------------------------------------
 
-def char_count(text: str | Column) -> Column:
-    return F.length(_c(text))
-
-
 def alpha_ratio(text: str | Column) -> Column:
     """Fraction of characters that are ASCII letters."""
     t = _c(text)
@@ -77,14 +73,6 @@ def punct_ratio(text: str | Column) -> Column:
     )
 
 
-def mean_token_length(text: str | Column) -> Column:
-    n = token_count(text)
-    total = F.aggregate(
-        tokens(text), F.lit(0), lambda acc, t: acc + F.length(t)
-    )
-    return F.when(n == 0, F.lit(0.0)).otherwise(total.cast("double") / n)
-
-
 def stopword_ratio(text: str | Column, lang: str = "en") -> Column:
     """Fraction of tokens that are (lowercased) stopwords — a cheap
     fluency signal: natural prose has ~0.3-0.5, keyword spam ~0."""
@@ -93,21 +81,6 @@ def stopword_ratio(text: str | Column, lang: str = "en") -> Column:
     hits = F.size(F.filter(toks, lambda t: t.isin(*words)))
     n = F.size(toks)
     return F.when(n == 0, F.lit(0.0)).otherwise(hits.cast("double") / n)
-
-
-def quality_score(text: str | Column) -> Column:
-    """Composite [0,1] quality heuristic: length band + alpha ratio +
-    stopword presence − punctuation excess. Deliberately simple and
-    fully expression-based; swap weights freely."""
-    t = _c(text)
-    len_score = F.least(F.length(t).cast("double") / F.lit(500.0), F.lit(1.0))
-    return F.round(
-        F.lit(0.4) * len_score
-        + F.lit(0.3) * alpha_ratio(t)
-        + F.lit(0.2) * stopword_ratio(t)
-        + F.lit(0.1) * (F.lit(1.0) - F.least(punct_ratio(t) * 5, F.lit(1.0))),
-        4,
-    )
 
 
 # -- language identification -----------------------------------------
@@ -214,15 +187,6 @@ def doubling_shingles(
     return grams
 
 
-def rolling_min_fingerprint(text: str | Column, k: int = 5) -> Column:
-    """Winnowing-style document fingerprint: min md5 over word k-shingles
-    — stable under small edits away from the minimum shingle (the
-    rolling-hash fingerprint family, computed set-wise: Spark's columnar
-    form of a rolling window over token streams)."""
-    hashes = F.transform(word_shingles(text, k), F.md5)
-    return F.array_min(hashes)
-
-
 def repetition_stats(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -279,22 +243,6 @@ def repetition_stats(
                 "top_bigram_ratio"
             ),
         )
-    )
-
-
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """documents → documents + the full feature set, one fused projection."""
-    t = F.col(text_col)
-    return df.select(
-        "*",
-        token_count(t).alias("n_tokens"),
-        bpe_ish_token_count(t).alias("n_bpe_tokens"),
-        alpha_ratio(t).alias("alpha_ratio"),
-        punct_ratio(t).alias("punct_ratio"),
-        stopword_ratio(t).alias("stopword_ratio"),
-        quality_score(t).alias("quality"),
-        lang_id(t).alias("lang_pred"),
-        fingerprint_md5(t).alias("fingerprint"),
     )
 
 

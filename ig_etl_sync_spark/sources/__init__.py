@@ -1,4 +1,4 @@
-from ig_etl_sync_spark.sources.catalog import TABLES, load_table, load_tables, register_views
+from ig_etl_sync_spark.sources.catalog import TABLES, load_table
 from ig_etl_sync_spark.sources.json_source import (
     read_json_document,
     read_json_files,
@@ -8,8 +8,6 @@ from ig_etl_sync_spark.sources.json_source import (
 __all__ = [
     "TABLES",
     "load_table",
-    "load_tables",
-    "register_views",
     "read_json_document",
     "read_json_files",
     "read_json_string",

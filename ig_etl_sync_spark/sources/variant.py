@@ -17,7 +17,7 @@ newer writers), so repeated extraction never re-parses text.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -35,8 +35,3 @@ def variant_get(variant_col: str | Column, path: str, dtype: str = "string") -> 
     if not path.startswith("$"):
         path = "$." + path
     return F.try_variant_get(c, path, dtype)
-
-
-def read_json_variant(df: DataFrame, json_col: str, out_col: str = "doc") -> DataFrame:
-    """Attach a variant-parsed view of a JSON string column."""
-    return df.withColumn(out_col, to_variant(json_col))

@@ -46,6 +46,9 @@ from pyspark.sql.types import (
 )
 
 _VERSION_DIR = re.compile(r"v\d+")
+#: Published versions a commit retains (the newest ones); older version
+#: dirs are removed by the commit's gc, so time travel reaches this far.
+KEEP_VERSIONS = 3
 SCHEMA_FILE = "_schema.json"
 _INTEGRAL = re.compile(r"[+-]?\d+")
 
@@ -278,13 +281,13 @@ class VersionedParquetTable:
         os.makedirs(self.path, exist_ok=True)
         return f".stg-{uuid.uuid4().hex[:12]}"
 
-    def write(self, df: DataFrame, keep: int = 3) -> str:
+    def write(self, df: DataFrame) -> str:
         """Publish ``df`` as the next version (full replace)."""
         staged = self._new_stage()
         out_dir = os.path.join(self.path, staged)
         df.write.mode("overwrite").parquet(out_dir)
         _write_schema(out_dir, df.schema)
-        return self.commit_staged(staged, keep)
+        return self.commit_staged(staged)
 
     def stage_incremental(
         self,
@@ -312,7 +315,7 @@ class VersionedParquetTable:
         )
         return staged
 
-    def commit_staged(self, staged: str, keep: int = 3) -> str:
+    def commit_staged(self, staged: str) -> str:
         """Publish a staged dir: rename it to the next version number,
         then flip the ``_LATEST`` pointer (both atomic).
 
@@ -330,7 +333,7 @@ class VersionedParquetTable:
         with open(tmp, "w") as f:
             json.dump({"version": nxt, "ts": time.time()}, f)
         os.replace(tmp, self._pointer)
-        self._gc(keep)
+        self._gc()
         return nxt
 
     def write_incremental(
@@ -338,7 +341,6 @@ class VersionedParquetTable:
         df: DataFrame,
         partition_col: str,
         dirty_values: set[str],
-        keep: int = 3,
         absorb_unpartitioned: bool = False,
         cluster: bool = True,
     ) -> str:
@@ -352,7 +354,7 @@ class VersionedParquetTable:
             df, partition_col, dirty_values,
             absorb_unpartitioned=absorb_unpartitioned, cluster=cluster,
         )
-        return self.commit_staged(staged, keep)
+        return self.commit_staged(staged)
 
     # -- epoch-partitioned standing state ------------------------------
     #
@@ -444,7 +446,7 @@ class VersionedParquetTable:
 
     def versions(self) -> list[str]:
         """Published version ids still retained, oldest first (gc keeps
-        the newest ``keep``). A version dir newer than ``_LATEST`` is a
+        the newest :data:`KEEP_VERSIONS`). A version dir newer than ``_LATEST`` is a
         crashed commit's unpublished leftover and is not listed."""
         head = self.latest_version()
         if head is None:
@@ -466,8 +468,8 @@ class VersionedParquetTable:
             )
         return self._read_dir(version)
 
-    def _gc(self, keep: int) -> None:
-        for v in self.versions()[:-keep]:
+    def _gc(self) -> None:
+        for v in self.versions()[:-KEEP_VERSIONS]:
             shutil.rmtree(os.path.join(self.path, v), ignore_errors=True)
 
 

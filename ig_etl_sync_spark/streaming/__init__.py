@@ -1,4 +1,3 @@
 from ig_etl_sync_spark.streaming.sync import streaming_sync
-from ig_etl_sync_spark.streaming.windows import watermarked_window_counts
 
-__all__ = ["streaming_sync", "watermarked_window_counts"]
+__all__ = ["streaming_sync"]

@@ -1,6 +1,6 @@
-"""Streaming corpus ingestion with STANDING near-dup state: the
-`foreachBatch` pipeline that finally streams the piece
-``streaming/corpus.py`` documents as batch-only.
+"""Streaming corpus ingestion with STANDING near-dup state: a
+`foreachBatch` pipeline that removes exact and near duplicates across
+micro-batches, not only within one.
 
 Near-dup removal is corpus-global (a new doc can pair with ANY historic
 doc), so it cannot live in per-key streaming state — but it CAN live in

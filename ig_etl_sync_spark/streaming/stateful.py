@@ -72,40 +72,6 @@ def streaming_first_seen(
     )
 
 
-def streaming_running_counts(
-    events: DataFrame,
-    key_col: str,
-) -> DataFrame:
-    """Running per-key event counter maintained across batches — the
-    minimal custom-state example (built-in streaming agg could do this;
-    kept as the template for richer per-key state machines)."""
-    import pandas as pd
-
-    key_field = events.schema[key_col]  # follow the actual key type
-    out_schema = StructType.fromJson(
-        {"type": "struct", "fields": [
-            key_field.jsonValue(),
-            {"name": "total", "type": "long", "nullable": False, "metadata": {}},
-        ]}
-    )
-    state_schema = StructType.fromJson(
-        {"type": "struct", "fields": [
-            {"name": "total", "type": "long", "nullable": False, "metadata": {}}
-        ]}
-    )
-
-    def count(key, pdfs: Iterator["pd.DataFrame"], state: GroupState):
-        prev = state.get[0] if state.exists else 0
-        batch = sum(len(pdf) for pdf in pdfs)
-        total = prev + batch
-        state.update((total,))
-        yield pd.DataFrame({key_col: [key[0]], "total": [total]})
-
-    return events.groupBy(key_col).applyInPandasWithState(
-        count, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
 def streaming_transitions(
     events: DataFrame,
     key_col: str = "user_id",
@@ -256,95 +222,4 @@ def streaming_ewma(
 
     return events.groupBy(key_col).applyInPandasWithState(
         ewma, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def streaming_quantile_sketch(
-    events: DataFrame,
-    key_col: str = "event_type",
-    value_col: str = "value",
-    id_col: str = "event_id",
-    *,
-    k: int = 256,
-    quantiles: tuple[int, ...] = (25, 50, 90, 99),
-) -> DataFrame:
-    """Streaming twin of ``sketches.quantile_sketch``: per-key bottom-k
-    quantile state across micro-batches.
-
-    The md5 draw is computed IN SPARK (``md5_int32`` over the same
-    ``concat_ws(':', value, id)`` string the batch op hashes) BEFORE
-    the stateful op — Python's float formatting differs from Spark's
-    cast-to-string, so hashing driver-side would silently break
-    streaming≡batch parity. The pandas state op only MERGES: union the
-    incoming (hash, value) pairs with the stored sample and keep the k
-    smallest by (hash, value) — the same bottom-k-of-union identity
-    that makes the batch sketch shard-mergeable makes the stream fold
-    order-insensitive, so after any batch the state equals the batch
-    sketch over everything ingested so far (tested exactly).
-
-    Emits one ``(key, sample_n, q25, …)`` row per key per batch in
-    update mode. State is ≤ k (long, double) pairs per key —
-    ``k * 16`` bytes regardless of stream length.
-    """
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    from ig_etl_sync_spark.functions.hashing import md5_int32
-
-    hashed = events.where(F.col(value_col).isNotNull()).select(
-        F.col(key_col),
-        md5_int32(
-            F.concat_ws(
-                ":",
-                F.col(value_col).cast("string"),
-                F.col(id_col).cast("string"),
-            )
-        ).alias("_h"),
-        F.col(value_col).cast("double").alias("_v"),
-    )
-    key_field = events.schema[key_col]
-    out_schema = StructType.fromJson(
-        {"type": "struct", "fields": [
-            key_field.jsonValue(),
-            {"name": "sample_n", "type": "integer", "nullable": False,
-             "metadata": {}},
-            *[
-                {"name": f"q{q}", "type": "double", "nullable": False,
-                 "metadata": {}}
-                for q in quantiles
-            ],
-        ]}
-    )
-    state_schema = StructType.fromJson(
-        {"type": "struct", "fields": [
-            {"name": "hs", "type": {"type": "array", "elementType": "long",
-                                    "containsNull": False},
-             "nullable": False, "metadata": {}},
-            {"name": "vs", "type": {"type": "array", "elementType": "double",
-                                    "containsNull": False},
-             "nullable": False, "metadata": {}},
-        ]}
-    )
-
-    def sketch(key, pdfs: Iterator["pd.DataFrame"], state: GroupState):
-        parts = [pdf for pdf in pdfs if len(pdf)]
-        if not parts:
-            return
-        rows = pd.concat(parts, ignore_index=True)
-        hs, vs = state.get if state.exists else ([], [])
-        pairs = sorted(
-            list(zip((int(h) for h in hs), (float(v) for v in vs)))
-            + list(zip((int(h) for h in rows["_h"]), (float(v) for v in rows["_v"])))
-        )[:k]
-        state.update(([h for h, _ in pairs], [v for _, v in pairs]))
-        sv = sorted(v for _, v in pairs)
-        n = len(sv)
-        out = {key_col: [key[0]], "sample_n": [n]}
-        for q in quantiles:
-            out[f"q{q}"] = [sv[(q * n + 99) // 100 - 1]]
-        yield pd.DataFrame(out)
-
-    return hashed.groupBy(key_col).applyInPandasWithState(
-        sketch, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from ig_etl_sync_spark.operators.bloom import (
     bloom_build,
     bloom_probe_frame,
-    bloom_semi_filter,
     collect_words,
 )
 
@@ -29,15 +28,22 @@ def facts(spark):
     )
 
 
+def survivors(facts, dim):
+    """Facts whose key passes the dim-side bloom: build, collect the
+    words, probe — the path the contract's bloom queries run."""
+    words = collect_words(bloom_build(dim, "key", N_BITS), N_BITS)
+    return bloom_probe_frame(facts, "key", words, N_BITS).where(F.col("_pass"))
+
+
 def test_no_false_negatives(spark, dim, facts):
-    out = bloom_semi_filter(facts, "key", dim, "key", n_bits=N_BITS)
+    out = survivors(facts, dim)
     got = {r.key for r in out.collect()}
     members = {f"k{i}" for i in range(0, 1000, 2)}
     assert members <= got  # every true member passes
 
 
 def test_false_positive_rate_bounded(spark, dim, facts):
-    out = bloom_semi_filter(facts, "key", dim, "key", n_bits=N_BITS)
+    out = survivors(facts, dim)
     got = {r.key for r in out.collect()}
     non_members = {f"k{i}" for i in range(1, 1000, 2)}
     fp = len(got & non_members) / len(non_members)
@@ -46,7 +52,7 @@ def test_false_positive_rate_bounded(spark, dim, facts):
 
 
 def test_exact_semi_join_after_prefilter(spark, dim, facts):
-    pre = bloom_semi_filter(facts, "key", dim, "key", n_bits=N_BITS)
+    pre = survivors(facts, dim)
     exact = pre.join(dim, "key", "left_semi")
     assert exact.count() == 500
 

@@ -1,50 +1,15 @@
-"""Env bootstrap (C4) + graph optimize (S7 analog) + run_all (C3)."""
+"""RocksDB state store default + run_all (C3)."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
-
-from ig_etl_sync_spark.config import load_env_file
 from ig_etl_sync_spark.operators.graph import GraphStore
 from ig_etl_sync_spark.operators.reconcile import SnapshotStore
 from ig_etl_sync_spark.plans.pipeline import PipelineRunner, packer_registry_integration
 from ig_etl_sync_spark.operators.transforms import PACKER_SOURCE_SCHEMA
 from ig_etl_sync_spark.sources.json_source import read_json_document
 from tests.conftest import SOURCE_DOC
-
-
-def test_load_env_file(tmp_path, monkeypatch):
-    p = tmp_path / ".env"
-    p.write_text(
-        "# comment\nexport A_KEY=hello\nB_KEY='quoted value'\nC_KEY=\"dq\"\n\nBAD_LINE\n"
-    )
-    monkeypatch.delenv("A_KEY", raising=False)
-    monkeypatch.setenv("B_KEY", "existing")
-    loaded = load_env_file(str(p))
-    assert os.environ["A_KEY"] == "hello"
-    assert os.environ["B_KEY"] == "existing"  # no override by default
-    assert os.environ["C_KEY"] == "dq"
-    assert loaded["B_KEY"] == "quoted value"
-    assert "BAD_LINE" not in loaded
-
-
-def test_load_env_missing_file():
-    assert load_env_file("/nonexistent/.env") == {}
-
-
-def test_graph_optimize_preserves_content(spark, tmp_path):
-    g = GraphStore(spark, str(tmp_path / "graph"))
-    df = spark.createDataFrame(
-        [(str(i), f"n{i}") for i in range(100)], "external_id string, name string"
-    )
-    g.write_nodes("item", to_create=df)
-    before = sorted(map(tuple, g.nodes("item").collect()))
-    g.optimize("item", buckets=4)
-    after = sorted(map(tuple, g.nodes("item").collect()))
-    assert before == after
-    assert g.nodes("item").rdd.getNumPartitions() == 4
 
 
 def test_rocksdb_state_store_is_default_and_loads(spark, tmp_path):

@@ -36,14 +36,6 @@ def test_exact_dedup_deterministic(spark):
     assert by_k == {1: "y", 2: "z"}  # min by tiebreak, stable
 
 
-def test_content_hash_dedup(spark):
-    df = spark.createDataFrame(
-        [(1, "Hello,   World!"), (2, "hello world"), (3, "other")],
-        "doc_id int, text string",
-    )
-    assert D.content_hash_dedup(df).count() == 2
-
-
 def test_minhash_identical_docs_identical_sigs(spark, near_dup_docs):
     sigs = {r["doc_id"]: tuple(r["signature"]) for r in D.minhash_signatures(near_dup_docs).collect()}
     assert sigs[1] == sigs[3]

@@ -101,38 +101,6 @@ def test_as_of_join_single_key_shuffle(spark):
     assert len(re.findall(r"Exchange hashpartitioning\(_k", p)) == 1
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    """Two tables bucketed by the join key into the same count must
-    join with ZERO exchanges — the write-once shuffle amortizes over
-    every later join (the 100 TB co-location pattern)."""
-    from pyspark.sql import functions as F
-
-    from ig_etl_sync_spark.operators.bucketing import bucketed_join, write_bucketed
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        F.col("o_orderkey").alias("k"), "o_totalprice"
-    )
-    items = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        F.col("l_orderkey").alias("k"), "l_quantity"
-    )
-    write_bucketed(orders, "t_orders_b", "k", n_buckets=8)
-    write_bucketed(items, "t_items_b", "k", n_buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketed_join(spark, "t_orders_b", "t_items_b", "k")
-        p = plan_of(joined)
-        assert "SortMergeJoin" in p
-        assert "Exchange" not in p  # bucket metadata satisfied the join
-        # and the result is the plain join's result
-        plain = orders.join(items, "k")
-        assert joined.count() == plain.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_items_b")
-
-
 def test_events_scan_prunes_and_pushes(spark, sf_dir):
     from ig_etl_sync_spark.sources.catalog import load_table
     from pyspark.sql import functions as F

@@ -7,7 +7,6 @@ import os
 
 import pytest
 
-from ig_etl_sync_spark.operators import multimodal as M
 from ig_etl_sync_spark.operators.dedup import lsh_candidate_pairs, minhash_signatures
 from ig_etl_sync_spark.operators.joins import salted_join
 from ig_etl_sync_spark.operators.similarity import lsh_topk, pandas_topk
@@ -49,40 +48,6 @@ def test_pandas_topk_string_ids(spark):
     rows = pandas_topk(emb, q, k=3, id_col="doc_uuid").collect()
     assert len(rows) == 3
     assert all(isinstance(r["neighbor_id"], str) for r in rows)
-
-
-def test_resize_adds_width_height_when_absent(spark):
-    media = M.synthetic_media(spark, 4)
-    frames = M.sample_video_frames(media)  # (media_id, frame_index, frame)
-    resized = M.resize_images(frames, 32, 32, payload_col="frame")
-    row = resized.limit(1).collect()[0]
-    assert row["width"] == 32 and row["height"] == 32
-    assert bytes(row["frame"]).startswith(b"resized:32x32:")
-
-
-def test_streaming_running_counts_string_key(spark, tmp_path):
-    from ig_etl_sync_spark.streaming.stateful import streaming_running_counts
-
-    src, out = str(tmp_path / "src"), str(tmp_path / "out")
-    os.makedirs(src)
-    with open(f"{src}/t0.json", "w") as f:
-        for r in [{"name": "alice"}, {"name": "alice"}, {"name": "bob"}]:
-            f.write(json.dumps(r) + "\n")
-    stream = spark.readStream.schema("name string").json(src)
-    q = (
-        streaming_running_counts(stream, "name")
-        .writeStream.foreachBatch(lambda df, bid: df.write.mode("append").json(out))
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["name"]: r["total"]
-        for r in spark.read.schema("name string, total long").json(out).collect()
-    }
-    assert got == {"alice": 2, "bob": 1}
 
 
 def test_full_state_empty_spurious_batch_is_noop(spark, tmp_path):

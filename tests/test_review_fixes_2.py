@@ -6,7 +6,6 @@ import datetime as dt
 
 import pytest
 
-from ig_etl_sync_spark.operators.graph import GraphStore
 from ig_etl_sync_spark.operators.similarity import lsh_topk
 from ig_etl_sync_spark.operators.temporal import as_of_join, range_join
 
@@ -48,24 +47,6 @@ def test_asof_equal_ts_right_rows_deterministic(spark):
     for _ in range(3):
         row = as_of_join(left, right, on="k").collect()[0]
         assert row["px_r"] == 9.0
-
-
-def test_traverse_self_label_edges(spark, tmp_path):
-    """Self-label paths (person-knows-person-knows-person) get indexed
-    column names instead of ambiguous duplicates."""
-    g = GraphStore(spark, str(tmp_path / "g"))
-    nodes = spark.createDataFrame(
-        [(x, x.upper()) for x in "abc"], "external_id string, name string"
-    )
-    g.write_nodes("person", to_create=nodes)
-    g.write_edges(
-        "person", "knows", "person",
-        spark.createDataFrame([("a", "b"), ("b", "c")], "a_id string, b_id string"),
-    )
-    paths = g.traverse(("person", "knows", "person"), ("person", "knows", "person"))
-    assert sorted(paths.columns) == ["person_id", "person_id_1", "person_id_2"]
-    got = [(r["person_id"], r["person_id_1"], r["person_id_2"]) for r in paths.collect()]
-    assert got == [("a", "b", "c")]
 
 
 def test_lsh_topk_checks_query_dim(spark):

@@ -1,14 +1,12 @@
-"""Sessionization + OAuth source helper."""
+"""Sessionization."""
 
 from __future__ import annotations
 
 import datetime as dt
-import json
 
 import pytest
 
 from ig_etl_sync_spark.operators.sessions import session_stats, with_session_id
-from ig_etl_sync_spark.sources.oauth import fetch_client_credentials_token
 
 
 @pytest.fixture(scope="module")
@@ -56,40 +54,3 @@ def test_exact_gap_is_same_session(spark):
     )
     tagged = with_session_id(df, gap_seconds=1800)
     assert {r["session_id"] for r in tagged.collect()} == {1}  # > gap breaks, == gap doesn't
-
-
-def test_oauth_token_fetch_with_fake_transport():
-    calls = {}
-
-    def transport(url, body, headers):
-        calls["url"] = url
-        calls["body"] = body.decode()
-        return json.dumps({"access_token": "tok-123", "token_type": "Bearer"})
-
-    tok = fetch_client_credentials_token(
-        "https://auth.example.com/oauth2/token",
-        client_id="cid",
-        client_secret="sec",
-        audience="https://api.example.com",
-        transport=transport,
-    )
-    assert tok == "tok-123"
-    assert "grant_type=client_credentials" in calls["body"]
-    assert "audience=" in calls["body"]
-
-
-def test_oauth_missing_credentials_raises(monkeypatch):
-    monkeypatch.delenv("OAUTH_CLIENT_ID", raising=False)
-    monkeypatch.delenv("OAUTH_CLIENT_SECRET", raising=False)
-    with pytest.raises(ValueError, match="credentials"):
-        fetch_client_credentials_token("https://auth.example.com/token")
-
-
-def test_oauth_no_token_in_response_raises():
-    with pytest.raises(ValueError, match="access_token"):
-        fetch_client_credentials_token(
-            "https://auth.example.com/token",
-            client_id="cid",
-            client_secret="sec",
-            transport=lambda u, b, h: json.dumps({"error": "nope"}),
-        )

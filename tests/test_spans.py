@@ -8,7 +8,6 @@ import pytest
 
 from ig_etl_sync_spark.operators.spans import (
     doc_spans,
-    duplicated_spans,
     span_dup_stats,
     span_frequencies,
 )
@@ -43,8 +42,15 @@ def test_short_doc_single_span(spark):
     assert len(got) == 1 and got[0].pos == 0
 
 
+def duplicated(docs, min_docs):
+    """(doc, span) rows whose span occurs in >= min_docs documents."""
+    spans = doc_spans(docs, k=8)
+    freq = span_frequencies(spans).where(f"n_docs >= {min_docs}")
+    return spans.join(freq, "span_md5")
+
+
 def test_cross_doc_duplicates_found(docs):
-    dup = duplicated_spans(docs, k=8, min_docs=2)
+    dup = duplicated(docs, min_docs=2)
     by_doc = {r.doc_id for r in dup.collect()}
     # the boilerplate span appears in d1, d2 and d4 -> all flagged; d3 not
     assert by_doc == {"d1", "d2", "d4"}
@@ -69,7 +75,7 @@ def test_dup_stats_ratio(docs):
 
 
 def test_min_docs_threshold(docs):
-    dup3 = duplicated_spans(docs, k=8, min_docs=4)
+    dup3 = duplicated(docs, min_docs=4)
     assert dup3.count() == 0  # span is only in 3 docs
 
 

@@ -1,4 +1,4 @@
-"""applyInPandasWithState operators: cross-batch dedup + running counts."""
+"""applyInPandasWithState operators: cross-batch dedup, transitions, EWMA."""
 
 from __future__ import annotations
 
@@ -7,10 +7,7 @@ import os
 
 import pytest
 
-from ig_etl_sync_spark.streaming.stateful import (
-    streaming_first_seen,
-    streaming_running_counts,
-)
+from ig_etl_sync_spark.streaming.stateful import streaming_first_seen
 
 SCHEMA = "k long, payload string"
 
@@ -55,22 +52,6 @@ def test_streaming_first_seen_across_batches(spark, tmp_path):
     run_once(spark, src, ckpt, lambda s: streaming_first_seen(s, "k"), out, "append")
     ks = sorted(r["k"] for r in read_out(spark, out, SCHEMA))
     assert ks == [1, 2, 3]  # k=1 exactly once despite re-delivery
-
-
-def test_streaming_running_counts(spark, tmp_path):
-    src, ckpt, out = str(tmp_path / "src2"), str(tmp_path / "ckpt2"), str(tmp_path / "out2")
-    out_schema = "k long, total long"
-    tick(src, 0, [{"k": 7, "payload": "a"}, {"k": 7, "payload": "b"}, {"k": 8, "payload": "c"}])
-    run_once(spark, src, ckpt, lambda s: streaming_running_counts(s, "k"), out, "update")
-    got = {r["k"]: r["total"] for r in read_out(spark, out, out_schema)}
-    assert got == {7: 2, 8: 1}
-
-    tick(src, 1, [{"k": 7, "payload": "d"}])
-    run_once(spark, src, ckpt, lambda s: streaming_running_counts(s, "k"), out, "update")
-    latest = {}
-    for r in read_out(spark, out, out_schema):
-        latest[r["k"]] = max(latest.get(r["k"], 0), r["total"])
-    assert latest[7] == 3  # state carried across batches
 
 
 EV_SCHEMA = "user_id long, ts timestamp, event_id long, event_type string"
@@ -190,57 +171,3 @@ def test_streaming_ewma_rejects_bad_alpha(spark):
 
 
 QSK_SCHEMA = "event_type string, event_id long, value double"
-
-
-def test_streaming_quantile_sketch_equals_batch(spark, tmp_path):
-    """After every micro-batch, the emitted quantiles must EXACTLY
-    equal the batch quantile_sketch over everything ingested so far —
-    the bottom-k-of-union merge identity, exercised across a state
-    boundary with k small enough that eviction happens."""
-    from ig_etl_sync_spark.operators.sketches import quantile_sketch
-    from ig_etl_sync_spark.streaming.stateful import streaming_quantile_sketch
-
-    src, ckpt, out = (
-        str(tmp_path / "src"), str(tmp_path / "ckpt"), str(tmp_path / "out")
-    )
-    b0 = [
-        {"event_type": t, "event_id": i, "value": float((i * 37) % 101)}
-        for i, t in enumerate(["a", "b"] * 20)
-    ]
-    b1 = [
-        {"event_type": t, "event_id": 100 + i, "value": float((i * 61) % 89)}
-        for i, t in enumerate(["a", "b"] * 25)
-    ]
-    k = 16  # << rows per key, so the bottom-k cut actually evicts
-    op = lambda s: streaming_quantile_sketch(s, k=k)  # noqa: E731
-    out_schema = (
-        "event_type string, sample_n int, q25 double, q50 double,"
-        " q90 double, q99 double"
-    )
-
-    for i, batch in enumerate([b0, b1]):
-        tick(src, i, batch)
-        # fresh out dir per run: the append sink would otherwise mix
-        # this batch's emission with earlier ones in arbitrary order
-        out_i = f"{out}{i}"
-        run_once(spark, src, ckpt, op, out_i, "update", schema=QSK_SCHEMA)
-        latest = {
-            r["event_type"]: (
-                r["sample_n"], r["q25"], r["q50"], r["q90"], r["q99"]
-            )
-            for r in spark.read.schema(out_schema).json(out_i).collect()
-        }
-        seen = [r for b in [b0, b1][: i + 1] for r in b]
-        batch_df = spark.createDataFrame(
-            [(r["event_type"], r["event_id"], r["value"]) for r in seen],
-            QSK_SCHEMA,
-        )
-        want = {
-            r["event_type"]: (
-                r["sample_n"], r["q25"], r["q50"], r["q90"], r["q99"]
-            )
-            for r in quantile_sketch(
-                batch_df, "value", "event_id", k=k, group_cols=("event_type",)
-            ).collect()
-        }
-        assert latest == want  # exact ==, zero-float-arithmetic contract

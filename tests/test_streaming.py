@@ -1,4 +1,4 @@
-"""Streaming sync + watermarked windows (SURVEY §2.9 X7)."""
+"""Streaming sync (SURVEY §2.9 X7)."""
 
 from __future__ import annotations
 
@@ -6,12 +6,10 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from ig_etl_sync_spark.operators.graph import GraphStore
 from ig_etl_sync_spark.operators.reconcile import Reconciler, SnapshotStore
 from ig_etl_sync_spark.streaming.sync import streaming_sync
-from ig_etl_sync_spark.streaming.windows import watermarked_window_counts
 
 SCHEMA = "external_id string, name string, updated_at string"
 
@@ -73,96 +71,3 @@ def test_streaming_sync_incremental(spark, stores):
     run_tick(spark, stores, src, ckpt)
     again = {r["external_id"]: r["name"] for r in graph.nodes("item").collect()}
     assert again == got
-
-
-def test_watermarked_windows_streaming_matches_batch(spark, tmp_path):
-    """The streaming windowed agg must produce the batch answer on the
-    same (bounded) input — run with availableNow and compare."""
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    from ig_etl_sync_spark.sources.catalog import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    batch = {
-        (r["window_start"], r["event_type"]): (r["n"], r["sum_value"])
-        for r in watermarked_window_counts(ev).collect()
-    }
-
-    src = str(tmp_path / "ev")
-    ev.select("event_id", "ts", "event_type", "value").write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, event_type string, value double"
-    ).parquet(src)
-    out = watermarked_window_counts(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("win_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # append mode emits only watermark-closed windows; every emitted row
-    # must match the batch result exactly.
-    emitted = spark.sql("SELECT * FROM win_test").collect()
-    assert len(emitted) > 0
-    for r in emitted:
-        assert batch[(r["window_start"], r["event_type"])] == (r["n"], r["sum_value"])
-
-
-def test_session_window_streaming_matches_batch(spark, tmp_path):
-    """Native session_window: availableNow streaming run over bounded
-    events must emit exactly the batch result of the same function,
-    and its per-key session count must agree with the portable
-    lag/cumsum sessionizer at the same gap."""
-    from ig_etl_sync_spark.operators.sessions import (
-        session_stats,
-        streaming_session_stats,
-    )
-    from ig_etl_sync_spark.sources.catalog import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    batch = {
-        (r["user_id"], r["session_start"]): r["n_events"]
-        for r in streaming_session_stats(ev).collect()
-    }
-    # same session structure as the lag/cumsum form
-    lagged = session_stats(ev, gap_seconds=1800)
-    n_sessions = lagged.count()
-    assert len(batch) == n_sessions
-    per_key_b = {}
-    for (u, _s), n in batch.items():
-        per_key_b[u] = per_key_b.get(u, 0) + n
-    per_key_l = {
-        r["user_id"]: r["total"]
-        for r in lagged.groupBy("user_id")
-        .agg(F.sum("n_events").alias("total"))
-        .collect()
-    }
-    assert per_key_b == per_key_l
-
-    src = str(tmp_path / "sev")
-    ev.select("user_id", "ts").write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
-    out = streaming_session_stats(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sess_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "sckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["user_id"], r["session_start"]): r["n_events"]
-        for r in spark.sql("SELECT * FROM sess_test").collect()
-    }
-    # append mode emits only watermark-CLOSED sessions; on bounded
-    # input the final watermark is max_event_time - delay, so sessions
-    # still open at end-of-stream are withheld. Every emitted session
-    # must match batch exactly, and only a tail sliver may be missing.
-    assert len(got) > 0
-    for k, n in got.items():
-        assert batch[k] == n
-    assert len(batch) - len(got) <= 5

@@ -1,115 +1,10 @@
-"""Streaming corpus prep (streaming/corpus.py): cross-batch
-fingerprint dedup + per-batch quality gate."""
+"""Streaming corpus ingest (streaming/ingest.py): per-micro-batch
+dedup against standing indexes, span cut, and crash replay."""
 
 from __future__ import annotations
 
 import json
 import os
-
-from ig_etl_sync_spark.streaming.corpus import streaming_corpus_prep
-
-GOOD_EN = (
-    "the quick brown fox jumps over the lazy dog and it was a bright "
-    "morning for the walk in that green field with the old friends "
-    "because it is good to be outside and the air was clear for everyone"
-)
-GOOD_DE = (
-    "der hund und die katze und der vogel sind nicht in das haus mit "
-    "der tür und der garten ist auch nicht klein aber die sonne ist "
-    "warm und der tag ist lang für alle tiere in dem land"
-)
-
-SCHEMA = "doc_id long, text string"
-
-
-def write_batch(src_dir: str, name: str, rows: list[tuple[int, str]]) -> None:
-    with open(os.path.join(src_dir, name), "w") as f:
-        for doc_id, text in rows:
-            f.write(json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-
-
-COLLECTED: list = []
-
-
-def run_tick(spark, src_dir: str, checkpoint: str) -> None:
-    stream = spark.readStream.schema(SCHEMA).json(src_dir)
-    out = streaming_corpus_prep(stream)
-
-    def sink(batch_df, batch_id):  # memory sink can't recover checkpoints
-        COLLECTED.extend(batch_df.collect())
-
-    q = (
-        out.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-
-def test_cross_batch_dedup_and_gate(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    COLLECTED.clear()
-
-    write_batch(str(src), "b1.json", [
-        (1, GOOD_EN),
-        (2, "short junk"),           # fails token floor
-        (3, "汉字 " * 40),            # lang vote 'und'
-    ])
-    run_tick(spark, str(src), ckpt)
-    assert {r["doc_id"] for r in COLLECTED} == {1}
-
-    write_batch(str(src), "b2.json", [
-        (10, GOOD_EN.upper()),       # same normalized content as doc 1 → dropped by state
-        (11, GOOD_DE),               # new content → kept
-    ])
-    run_tick(spark, str(src), ckpt)
-    out = {r["doc_id"]: r for r in COLLECTED}
-    assert set(out) == {1, 11}
-    assert out[11]["lang_pred"] == "de"
-    assert out[1]["n_tokens"] >= 20
-
-
-def test_dedup_within_watermark_drops_redelivery(spark, tmp_path):
-    import json
-    import os
-
-    from ig_etl_sync_spark.streaming.corpus import (
-        streaming_dedup_within_watermark,
-    )
-
-    src, ckpt, out = (
-        str(tmp_path / "src"), str(tmp_path / "ck"), str(tmp_path / "out")
-    )
-    os.makedirs(src, exist_ok=True)
-    rows = [
-        {"k": 1, "ts": "2024-01-01 00:00:00", "v": "first"},
-        {"k": 1, "ts": "2024-01-01 00:02:00", "v": "retry-dup"},
-        {"k": 2, "ts": "2024-01-01 00:01:00", "v": "other"},
-    ]
-    with open(os.path.join(src, "b0.json"), "w") as f:
-        f.writelines(json.dumps(r) + "\n" for r in rows)
-
-    stream = spark.readStream.schema("k long, ts timestamp, v string").json(src)
-    dd = streaming_dedup_within_watermark(stream, ["k"], "ts", "10 minutes")
-
-    def sink(batch_df, _bid):
-        batch_df.write.mode("append").json(out)
-
-    q = (dd.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.read.schema("k long, ts timestamp, v string").json(out)
-    assert got.count() == 2
-    assert got.where("k = 1").count() == 1
-
-    # batch frame falls back to plain dropDuplicates
-    bdf = spark.createDataFrame([(1, "a"), (1, "b"), (2, "c")], "k long, v string")
-    assert streaming_dedup_within_watermark(bdf, ["k"], "v").count() == 2
 
 
 # ------------------------------------------- streaming ingest + index

@@ -70,18 +70,6 @@ def test_word_shingles(spark):
     assert got2 == ["a b"]
 
 
-def test_quality_score_orders_sensibly(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "The quick brown fox jumps over the lazy dog and it is a fine day in the field. " * 5),
-            (2, "!!! ### $$$ %%%"),
-        ],
-        "doc_id int, text string",
-    )
-    got = {r["doc_id"]: r["v"] for r in df.select("doc_id", T.quality_score("text").alias("v")).collect()}
-    assert got[1] > got[2]
-
-
 def test_redact_pii_and_counts_agree(spark):
     from ig_etl_sync_spark.operators.textops import pii_counts, redact_pii
     from pyspark.sql import functions as F

@@ -9,7 +9,7 @@ import os
 
 import pytest
 
-from ig_etl_sync_spark.sources.versioned import VersionedParquetTable
+from ig_etl_sync_spark.sources.versioned import KEEP_VERSIONS, VersionedParquetTable
 
 
 @pytest.fixture()
@@ -79,11 +79,14 @@ def test_vacuum_respects_age_and_liveness(spark, table):
 
 
 def test_gc_bounds_history(spark, table):
-    versions = [table.write(df(spark, i), keep=2) for i in range(4)]
-    assert table.versions() == versions[-2:]  # only the newest `keep`
+    versions = [table.write(df(spark, i)) for i in range(KEEP_VERSIONS + 1)]
+    kept = versions[1:]  # the newest KEEP_VERSIONS; the first is gc'd
+    assert table.versions() == kept
     live_dirs = {d for d in os.listdir(table.path) if d.startswith("v")}
-    assert live_dirs == set(versions[-2:])
-    assert [r["x"] for r in table.read().collect()] == [3]
+    assert live_dirs == set(kept)
+    assert [r["x"] for r in table.read().collect()] == [KEEP_VERSIONS]
+    with pytest.raises(ValueError, match="not retained"):
+        table.read_version(versions[0])
 
 
 # Named for the two tables it once compared; it now covers the pointer
@@ -91,15 +94,15 @@ def test_gc_bounds_history(spark, table):
 def test_time_travel_both_backends(spark, table):
     """versions() lists retained history in commit order and
     read_version() reads any retained snapshot."""
-    v = [table.write(df(spark, i)) for i in range(3)]
+    v = [table.write(df(spark, i)) for i in range(KEEP_VERSIONS)]
     assert table.versions() == v
     for i, ver in enumerate(v):
         assert [r["x"] for r in table.read_version(ver).collect()] == [i]
     with pytest.raises(ValueError, match="not retained"):
         table.read_version("v-nonexistent")
     # gc'd versions disappear from history and raise on read
-    v3 = table.write(df(spark, 3), keep=2)
-    assert table.versions() == [v[-1], v3]
+    newest = table.write(df(spark, KEEP_VERSIONS))
+    assert table.versions() == v[1:] + [newest]
     with pytest.raises(ValueError, match="not retained"):
         table.read_version(v[0])
 

@@ -1,18 +1,15 @@
-"""VariantType ingestion + graph traversal."""
+"""VariantType ingestion."""
 
 from __future__ import annotations
 
-import pytest
-
-from ig_etl_sync_spark.operators.graph import GraphStore
-from ig_etl_sync_spark.sources.variant import read_json_variant, variant_get
+from ig_etl_sync_spark.sources.variant import to_variant, variant_get
 
 
 def test_variant_roundtrip(spark):
     df = spark.createDataFrame(
         [('{"a": {"b": [10, 20]}, "name": "x"}',), ('{"name": "y"}',)], "js string"
     )
-    v = read_json_variant(df, "js")
+    v = df.withColumn("doc", to_variant("js"))
     got = v.select(
         variant_get("doc", "$.a.b[1]", "int").alias("b1"),
         variant_get("doc", "name").alias("name"),
@@ -20,44 +17,3 @@ def test_variant_roundtrip(spark):
     ).collect()
     assert (got[0]["b1"], got[0]["name"], got[0]["miss"]) == (20, "x", None)
     assert (got[1]["b1"], got[1]["name"]) == (None, "y")  # tolerant of missing
-
-
-@pytest.fixture()
-def small_graph(spark, tmp_path):
-    g = GraphStore(spark, str(tmp_path / "g"))
-    nodes = lambda rows: spark.createDataFrame(rows, "external_id string, name string")  # noqa: E731
-    edges = lambda rows: spark.createDataFrame(rows, "a_id string, b_id string")  # noqa: E731
-    g.write_nodes("org", to_create=nodes([("o1", "O1")]))
-    g.write_nodes("project", to_create=nodes([("p1", "P1"), ("p2", "P2")]))
-    g.write_nodes("bucket", to_create=nodes([("b1", "B1"), ("b2", "B2"), ("b3", "B3")]))
-    g.write_nodes("version", to_create=nodes([("v1", "V1")]))
-    g.write_edges("org", "has", "project", edges([("o1", "p1"), ("o1", "p2")]))
-    g.write_edges("project", "has", "bucket", edges([("p1", "b1"), ("p1", "b2"), ("p2", "b3")]))
-    g.write_edges("bucket", "creates", "version", edges([("b1", "v1")]))
-    return g
-
-
-def test_traverse_two_hops(spark, small_graph):
-    paths = small_graph.traverse(("org", "has", "project"), ("project", "has", "bucket"))
-    got = sorted((r["org_id"], r["project_id"], r["bucket_id"]) for r in paths.collect())
-    assert got == [("o1", "p1", "b1"), ("o1", "p1", "b2"), ("o1", "p2", "b3")]
-
-
-def test_traverse_disconnected_hop_errors(spark, small_graph):
-    """Second hop's start label isn't in the path so far → loud error
-    (the edge table exists; the PATH is what's wrong)."""
-    with pytest.raises(ValueError, match="ends at columns"):
-        small_graph.traverse(("org", "has", "project"), ("bucket", "creates", "version"))
-
-
-def test_traverse_three_hops(spark, small_graph):
-    paths = small_graph.traverse(
-        ("org", "has", "project"), ("project", "has", "bucket"),
-        ("bucket", "creates", "version"),
-    )
-    got = sorted(map(tuple, paths.select("org_id", "project_id", "bucket_id", "version_id").collect()))
-    assert got == [("o1", "p1", "b1", "v1")]
-
-
-def test_traverse_missing_edge_table(spark, small_graph):
-    assert small_graph.traverse(("nope", "x", "nada")) is None
